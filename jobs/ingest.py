@@ -8,7 +8,7 @@ run_workflow.py, reborn as one idempotent job):
 
     spark-submit --py-files dist/engine.zip jobs/ingest.py replay \
         --events /data/events --table /data/code_files \
-        [--mode batch|stream] [--salted] [--checkpoint /data/ckpt]
+        [--mode batch|stream] [--salt plain|salted|auto] [--checkpoint /data/ckpt]
 
     spark-submit --py-files dist/engine.zip jobs/ingest.py verify \
         --events /data/events --table /data/code_files
@@ -49,8 +49,14 @@ from pyspark.sql import SparkSession  # noqa: E402
 
 
 def _spark(master: str | None, shuffle_partitions: int | None = None) -> SparkSession:
+    """The job's session. An in-process caller's active session is reused
+    as it is: ``build_session`` would ``getOrCreate`` it and rewrite its
+    SQL conf (shuffle width, AQE, split size) under the caller."""
     from pyorchdb_spark.session import build_session
 
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     return build_session(
         app_name="pyorchdb_spark_ingest",
         master=master,
@@ -167,30 +173,35 @@ def cmd_replay(args) -> dict:
 
         prepare_events(events, jvm_only=args.jvm_hash).write.format("noop").mode("overwrite").save()
     sb0 = _shuffle_totals(spark)
-    strategy: dict | None = None
     t0 = time.time()
     if args.mode == "stream":
+        # "auto" probes the whole input once; a tail can't sample its own
+        # future, so demand an explicit choice rather than coerce one
+        if args.salt == "auto":
+            raise SystemExit(
+                "--salt auto is batch-only (the chooser probes the whole "
+                "input); pass --salt plain or --salt salted for --mode stream"
+            )
         if args.thin == "auto":
             # the thin crossover is a PER-MICRO-BATCH dup ratio; a one-shot
             # whole-log probe overestimates it (r5 byte table: log ratio ~3
-            # vs per-batch ~1.4), so auto would be a silent lie here —
-            # demand an explicit choice rather than coerce one
+            # vs per-batch ~1.4), so auto would be a silent lie here
             raise SystemExit(
                 "--thin auto is batch-only (the chooser probes the whole "
                 "input, but thin's crossover is the per-micro-batch dup "
                 "ratio); pass --thin thin or --thin off for --mode stream"
             )
+        strategy = {"salted": args.salt == "salted", "n_salts": 16, "thin": args.thin == "thin"}
         ckpt = args.checkpoint or os.path.join(args.table, "_checkpoint")
         run_tail_to_completion(
-            spark, args.events, lake, ledger, ckpt, salted=args.salted,
+            spark, args.events, lake, ledger, ckpt,
+            salted=strategy["salted"], n_salts=strategy["n_salts"],
             num_files=args.num_files, mor=args.mor,
             max_files_per_trigger=args.max_files_per_trigger,
-            thin_shuffle=args.thin == "thin",
+            thin_shuffle=strategy["thin"],
         )
     else:
-        salted: bool | str = args.salted
-        if getattr(args, "salt", None):
-            salted = {"plain": False, "salted": True, "auto": "auto"}[args.salt]
+        salted: bool | str = {"plain": False, "salted": True, "auto": "auto"}[args.salt]
         thin: bool | str = {"off": False, "thin": True, "auto": "auto"}[args.thin]
         strategy = {}
         replay(lake, ledger, events, salted=salted, num_files=args.num_files,
@@ -217,7 +228,7 @@ def cmd_replay(args) -> dict:
         "master": spark.sparkContext.master,
         # resolved salt/thin decisions ("auto" runs are otherwise
         # unobservable — the r5e thin matrix was ambiguous about whether
-        # thin even engaged); None in stream mode (decided per-batch)
+        # thin even engaged)
         "strategy": strategy,
     }
 
@@ -525,16 +536,15 @@ def main(argv=None) -> None:
     r.add_argument("--events", required=True)
     r.add_argument("--table", required=True)
     r.add_argument("--mode", choices=["batch", "stream"], default="batch")
-    r.add_argument("--salted", action="store_true")
     r.add_argument("--thin", choices=["off", "thin", "auto"], default="off",
                    help="prune each batch to LWW winner-tuple rows before the "
                         "fat bucket exchange (shuffle bytes track keys, not "
                         "events); auto decides from the same sampled probe as "
                         "--salt auto")
-    r.add_argument("--salt", choices=["plain", "salted", "auto"], default=None,
-                   help="skew strategy: 'auto' measures key frequency on a "
-                        "deterministic sample and picks plain/salted + n_salts "
-                        "(overrides --salted)")
+    r.add_argument("--salt", choices=["plain", "salted", "auto"], default="plain",
+                   help="skew strategy: 'auto' (batch mode) measures key "
+                        "frequency on a deterministic sample and picks "
+                        "plain/salted + n_salts")
     r.add_argument("--checkpoint", default=None)
     r.add_argument("--num-files", type=int, default=None)
     r.add_argument("--max-files-per-trigger", type=int, default=None,

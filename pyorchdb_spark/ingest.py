@@ -5,28 +5,34 @@ build→curate→load→upload flow (PyOrchDB/main.py:106-265), collapsed into
 a single declarative Catalyst plan per batch:
 
     raw events
-      → marker gate (skip committed batch_ids — broadcast anti-join)
+      → marker gate (skip committed batch_ids — one marker-file check)
       → normalize_path / sha256_content (vectorized pandas UDFs)
+      → C3 quarantine predicate (invalid rows never merge)
       → LWW dedup (salted two-stage when skew expected)
-      → MERGE INTO lake table (copy-on-write over affected files)
-      → marker + lineage commit
+      → MERGE INTO lake table
+      → rejects + lineage + marker commit
 
-Every step is a DataFrame transform; the only actions are the data-file
-write, the tiny stats/lineage aggregations, and the manifest/marker
-renames.
+There is one apply path. A merge-on-read (MoR) batch into a table that
+already has files appends a delta commit, and its lineage/quarantine
+aggregates ride the merge-write plan as an ``Observation``: a clean batch
+is ONE Spark job, in batch replay and in the streaming tail alike. Every
+other batch (copy-on-write, and the first commit of any table) runs the
+metrics as a key-only scan first, because CoW must know the affected
+buckets before it builds the merge plan. Both end in the same commit
+tail. ``maybe_compact`` is the one MoR compaction trigger, called by
+batch replay and the streaming tail after each ``apply_batch``.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from pyorchdb_spark.functions.udfs import normalize_path, sha256_content
 from pyorchdb_spark.sources.catalog import BatchLedger
-from pyorchdb_spark.sources.lake import RETAIN_ALL_TOMBSTONES, LakeTable, bucket_expr
+from pyorchdb_spark.sources.lake import RETAIN_ALL_TOMBSTONES, LakeTable, Manifest, bucket_expr
 
 
 @dataclass
@@ -106,34 +112,32 @@ def apply_batch(
     salted: bool = False,
     n_salts: int = 16,
     num_files: int | None = None,
-    cache_batch: bool = False,
     jvm_only_udfs: bool = False,
     mor: bool = False,
-    fuse_metrics: bool = False,
     rows_hint: int | None = None,
-    stream_safe_metrics: bool = False,
     thin_shuffle: bool = False,
 ) -> ApplyResult:
     """Apply one batch idempotently. Safe to call twice with the same id.
 
     ``mor=True`` routes the merge through the delta-append path
     (sources/lake.py merge-on-read): bytes written per batch stay
-    proportional to the batch, never to the table.
+    proportional to the batch, never to the table. Once the table has
+    files, the lineage/quarantine aggregates of a MoR batch ride the
+    merge-write plan as an ``Observation`` instead of running as their own
+    Spark job, so a clean batch costs ONE Spark job. A minimal 2-stage job
+    floors at ~0.3 s of pure scheduling in local mode, so at the
+    10^4-micro-batch design point a second job would be the single largest
+    per-batch fixed cost. CoW batches and a table's first commit run the
+    metrics scan first: CoW needs the affected-bucket hit set BEFORE the
+    merge plan is built.
 
-    ``fuse_metrics=True`` (MoR only): attach the lineage/quarantine
-    aggregates to the merge-write plan instead of running them as their
-    own Spark job — the whole batch then costs ONE Spark job. On this box
-    a minimal 2-stage job floors at ~0.3s of pure scheduling, so at the
-    10^4-micro-batch design point the second job is the single largest
-    per-batch fixed cost (VERDICT r3 next #3). Batch mode rides an
-    ``Observation`` on the write plan; ``stream_safe_metrics=True``
-    switches to the accumulator-probe variant because observations never
-    fire on plans derived from a foreachBatch DataFrame (they would
-    hang) — that is the streaming tail's one-job path (VERDICT r4 next
-    #3). CoW batches can't fuse either way — the affected-bucket hit set
-    must be known BEFORE the merge plan is built. ``rows_hint`` (e.g. the
-    previous batch's row count) sizes the delta's bucket generation since
-    the fused path learns the true count only after the write.
+    ``rows_hint`` (e.g. the previous batch's row count) sizes a MoR
+    delta's bucket generation, since the fused path learns the true count
+    only after the write.
+
+    ``thin_shuffle``: prune the batch to its LWW winner-tuple rows before
+    the fat bucket exchange (valid rows only: an invalid row must never
+    shadow the real winner).
     """
     if ledger.is_committed(batch_id):
         return ApplyResult(batch_id, skipped=True, version=None, rows_in=0, table_rows_after=0)
@@ -151,116 +155,36 @@ def apply_batch(
     aqe_prev = conf.get("spark.sql.adaptive.enabled", "true")
     conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        return _apply_batch_inner(
-            lake, ledger, events, batch_id,
-            salted=salted, n_salts=n_salts, num_files=num_files,
-            cache_batch=cache_batch, jvm_only_udfs=jvm_only_udfs, mor=mor,
-            fuse_metrics=fuse_metrics, rows_hint=rows_hint,
-            stream_safe_metrics=stream_safe_metrics,
-            thin_shuffle=thin_shuffle,
+        prepared = prepare_events(events, jvm_only=jvm_only_udfs)
+        m = lake.manifest()
+        reason = invalid_reason(
+            lake.keys, watermark_seq=m.tombstone_watermark if m is not None else None
         )
-    finally:
-        conf.set("spark.sql.adaptive.enabled", aqe_prev)
-
-
-def _apply_batch_inner(
-    lake: LakeTable,
-    ledger: BatchLedger,
-    events: DataFrame,
-    batch_id: str,
-    *,
-    salted: bool = False,
-    n_salts: int = 16,
-    num_files: int | None = None,
-    cache_batch: bool = False,
-    jvm_only_udfs: bool = False,
-    mor: bool = False,
-    fuse_metrics: bool = False,
-    rows_hint: int | None = None,
-    stream_safe_metrics: bool = False,
-    thin_shuffle: bool = False,
-) -> ApplyResult:
-    prepared = prepare_events(events, jvm_only=jvm_only_udfs)
-
-    # ONE key-columns-only pass over the batch (the sha UDF is
-    # column-pruned out) computing, together: lineage metrics, C3
-    # quarantine detection, AND — for the CoW path — the affected-bucket
-    # hit set per manifest generation that MERGE needs for file pruning.
-    # Before round 3 the hit set was a second distinct+collect job per
-    # batch (VERDICT r2 #1: per-batch fixed cost dominates 10^4-batch
-    # replays). MoR commits touch no base file, so they skip the hit aggs.
-    m = lake.manifest()
-    gens = [] if mor else LakeTable.bucket_gens(m)
-    reason = invalid_reason(
-        lake.keys, watermark_seq=m.tombstone_watermark if m is not None else None
-    )
-    if fuse_metrics and mor and m is not None and m.files:
-        fused = _apply_batch_fused_acc if stream_safe_metrics else _apply_batch_fused
-        return fused(
-            lake, ledger, prepared, batch_id, m, reason,
-            salted=salted, n_salts=n_salts, rows_hint=rows_hint,
-            thin_shuffle=thin_shuffle,
-        )
-    metrics = ledger.collect_partition_metrics(
-        prepared,
-        invalid_reason=reason,
-        bucket_exprs={nb: bucket_expr(lake.keys, nb) for nb in gens},
-    )
-    # superset-safe when rejects are filtered below: an extra affected
-    # file is rewritten with unchanged rows
-    hits = {(nb, b) for r in metrics for nb in gens for b in (r[f"bkt_{nb}"] or [])}
-    rejected = int(sum(r["n_invalid"] for r in metrics))
-    if rejected:
-        # divert invalid rows to _rejects, merge the rest
-        ledger.record_rejects(
-            batch_id,
-            prepared.withColumn("reject_reason", reason).filter(F.col("reject_reason").isNotNull()),
-        )
-        prepared = prepared.filter(reason.isNull())
-
-    # The merge runs several actions over the batch (pruning-key scan, the
-    # data-file write, lineage agg) — cache the prepared batch so the
-    # pandas UDFs run once. Batches are bounded; the table itself never is.
-    # (NB: no Observation here — observations never fire on plans derived
-    # from a foreachBatch DataFrame, which would hang the streaming tail;
-    # input counts come from the lineage aggregation instead.)
-    # cache_batch default False: a deserialized cache of fat content rows
-    # costs more (GC + storage-memory contention at high parallelism) than
-    # recomputing the batch, because Catalyst column-prunes the pandas
-    # UDFs out of the key-only pruning scan and the lineage scan — only
-    # the data-file write evaluates sha256 over content (measured 3x
-    # regression with caching at local[32], see BENCH/BASELINE.md).
-    if thin_shuffle:
-        # VERDICT r4 next #4: keep fat content rows out of the bucket
-        # exchange — prune the batch to its LWW winner-tuple rows first
-        # (thin map-combined aggregate + broadcast semi-join). Valid rows
-        # only: an invalid row must never shadow the real winner.
-        from pyorchdb_spark.operators.dedup import prune_to_winners
-
-        prepared = prune_to_winners(prepared.filter(reason.isNull()), keys=lake.keys)
-    if cache_batch:
-        prepared = prepared.persist()
-    try:
-        manifest = lake.merge(
-            prepared,
-            batch_id=batch_id,
-            salted=salted,
-            n_salts=n_salts,
-            num_files=num_files,
-            mor=mor,
-            # first-batch volume hint: sizes the initial bucket count so
-            # files start near target_rows_per_file instead of a fixed 32
-            rows_hint=int(sum(r["rows_in"] for r in metrics)),
-            affected_hits=hits if gens else None,
-            manifest=m,
-        )
-        # Lineage from the already-collected metrics (no extra pass).
+        if mor and m is not None and m.files:
+            manifest, metrics, rejected = _merge_fused(
+                lake, ledger, prepared, batch_id, m, reason,
+                salted=salted, n_salts=n_salts, rows_hint=rows_hint, thin_shuffle=thin_shuffle,
+            )
+        else:
+            manifest, metrics, rejected = _merge_scanned(
+                lake, ledger, prepared, batch_id, m, reason,
+                salted=salted, n_salts=n_salts, num_files=num_files, mor=mor,
+                thin_shuffle=thin_shuffle,
+            )
+        if rejected:
+            # divert invalid rows to _rejects: the rare reject path pays
+            # one extra job to materialize them; clean batches never do
+            ledger.record_rejects(
+                batch_id,
+                prepared.withColumn("reject_reason", reason).filter(
+                    F.col("reject_reason").isNotNull()
+                ),
+            )
         table_rows = sum(f["rows"] for f in manifest.files)
         rows_in = ledger.record_lineage(batch_id, metrics, table_rows_after=table_rows)
+        ledger.commit_marker(batch_id, manifest.version, rows_in)
     finally:
-        if cache_batch:
-            prepared.unpersist()
-    ledger.commit_marker(batch_id, manifest.version, rows_in)
+        conf.set("spark.sql.adaptive.enabled", aqe_prev)
     return ApplyResult(
         batch_id,
         skipped=False,
@@ -271,38 +195,91 @@ def _apply_batch_inner(
     )
 
 
-def _apply_batch_fused(
+def _merge_scanned(
     lake: LakeTable,
     ledger: BatchLedger,
     prepared: DataFrame,
     batch_id: str,
-    m,
+    m: Manifest | None,
     reason,
     *,
-    salted: bool = False,
-    n_salts: int = 16,
-    rows_hint: int | None = None,
-    thin_shuffle: bool = False,
-) -> ApplyResult:
-    """ONE-job batch apply (MoR delta path): lineage/quarantine aggregates
-    ride the merge-write plan as an ``Observation`` — no separate metrics
-    job. See ``apply_batch(fuse_metrics=True)`` for when this is legal.
+    salted: bool,
+    n_salts: int,
+    num_files: int | None,
+    mor: bool,
+    thin_shuffle: bool,
+) -> tuple[Manifest, list, int]:
+    """Metrics scan, then merge: CoW batches and a table's first commit.
 
-    ``thin_shuffle``: prune to LWW winner-tuple rows before the fat bucket
-    exchange (VERDICT r4 next #4). The winner aggregate is computed from a
-    PROBE-FREE branch of the batch — the CollectMetrics node must appear
-    exactly once in the plan (on the fat branch) or its counts would
-    double.
+    ONE key-columns-only pass over the batch (the sha UDF is column-pruned
+    out) computes, together: lineage metrics, C3 quarantine detection, AND
+    — for the CoW path — the affected-bucket hit set per manifest
+    generation that MERGE needs for file pruning. MoR commits touch no
+    base file, so they skip the hit aggs. The batch is recomputed, not
+    cached: Catalyst column-prunes the pandas UDFs out of this scan, so
+    only the data-file write evaluates sha256 over content."""
+    gens = [] if mor else LakeTable.bucket_gens(m)
+    metrics = ledger.collect_partition_metrics(
+        prepared,
+        invalid_reason=reason,
+        bucket_exprs={nb: bucket_expr(lake.keys, nb) for nb in gens},
+    )
+    # superset-safe when rejects are filtered below: an extra affected
+    # file is rewritten with unchanged rows
+    hits = {(nb, b) for r in metrics for nb in gens for b in (r[f"bkt_{nb}"] or [])}
+    rejected = int(sum(r["n_invalid"] for r in metrics))
+    src = prepared.filter(reason.isNull()) if rejected else prepared
+    if thin_shuffle:
+        # VERDICT r4 next #4: keep fat content rows out of the bucket
+        # exchange — prune the batch to its LWW winner-tuple rows first
+        # (thin map-combined aggregate + broadcast semi-join). Valid rows
+        # only: an invalid row must never shadow the real winner.
+        from pyorchdb_spark.operators.dedup import prune_to_winners
+
+        src = prune_to_winners(prepared.filter(reason.isNull()), keys=lake.keys)
+    manifest = lake.merge(
+        src,
+        batch_id=batch_id,
+        salted=salted,
+        n_salts=n_salts,
+        num_files=num_files,
+        mor=mor,
+        # first-batch volume hint: sizes the initial bucket count so
+        # files start near target_rows_per_file instead of a fixed 32
+        rows_hint=int(sum(r["rows_in"] for r in metrics)),
+        affected_hits=hits if gens else None,
+        manifest=m,
+    )
+    return manifest, metrics, rejected
+
+
+def _merge_fused(
+    lake: LakeTable,
+    ledger: BatchLedger,
+    prepared: DataFrame,
+    batch_id: str,
+    m: Manifest,
+    reason,
+    *,
+    salted: bool,
+    n_salts: int,
+    rows_hint: int | None,
+    thin_shuffle: bool,
+) -> tuple[Manifest, list, int]:
+    """ONE-job MoR delta commit: the lineage/quarantine aggregates ride the
+    merge-write plan as an ``Observation`` — no separate metrics job. Used
+    by batch replay and by the streaming tail's ``foreachBatch`` alike.
+
+    ``thin_shuffle``: the winner aggregate is computed from an
+    OBSERVATION-FREE branch of the batch — the CollectMetrics node must
+    appear exactly once in the plan (on the fat branch) or its counts
+    would double.
 
     Lineage granularity is one row per batch (partition_id = -1): the
     observation yields global aggregates, and per-file granularity for
     the batch is already durable in the manifest's delta entries (rows +
     footer seq ranges per bucket file). ``low_watermark`` groups lineage
-    by batch_id, so the watermark derivation is unchanged. The rare
-    reject path (n_invalid > 0) pays one extra job to materialize the
-    quarantined rows — clean batches stay at one job."""
-    from pyspark.sql import Observation
-
+    by batch_id, so the watermark derivation is unchanged."""
     seq_valid = F.when(reason.isNull(), F.col("seq"))
     obs = Observation()
     observed = prepared.observe(
@@ -351,166 +328,45 @@ def _apply_batch_fused(
         # at one job.
         metrics = ledger.collect_partition_metrics(prepared, invalid_reason=reason)
         rejected = int(sum(r["n_invalid"] for r in metrics))
-    if rejected:
-        ledger.record_rejects(
-            batch_id,
-            prepared.withColumn("reject_reason", reason).filter(F.col("reject_reason").isNotNull()),
-        )
-    table_rows = sum(f["rows"] for f in manifest.files)
-    rows_in = ledger.record_lineage(batch_id, metrics, table_rows_after=table_rows)
-    ledger.commit_marker(batch_id, manifest.version, rows_in)
-    return ApplyResult(
-        batch_id,
-        skipped=False,
-        version=manifest.version,
-        rows_in=rows_in,
-        table_rows_after=table_rows,
-        rows_rejected=rejected,
-    )
+    return manifest, metrics, rejected
 
 
-class _BatchMetricsParam:
-    """AccumulatorParam for one batch's lineage metrics: a 5-tuple
-    ``(rows_in, n_invalid, tombstones, min_seq, max_seq)`` — sums on the
-    counters, semilattice min/max on the seq bounds (None = unobserved)."""
-
-    def zero(self, v):
-        return v
-
-    def addInPlace(self, a, b):
-        if a is None:
-            return b
-        if b is None:
-            return a
-        mn = a[3] if b[3] is None else (b[3] if a[3] is None else min(a[3], b[3]))
-        mx = a[4] if b[4] is None else (b[4] if a[4] is None else max(a[4], b[4]))
-        return (a[0] + b[0], a[1] + b[1], a[2] + b[2], mn, mx)
-
-
-def _make_metrics_probe(acc):
-    """Arrow-vectorized pass-through probe: returns ``reason`` unchanged
-    while folding this Arrow batch's lineage aggregates into ``acc``. The
-    caller must reference the output EXACTLY once (filter, then drop) —
-    a second reference would re-evaluate the UDF and double-count
-    (Catalyst has no CSE across a filter/project pair; measured)."""
-
-    @F.pandas_udf("string")
-    def probe(reason: pd.Series, seq: pd.Series, op: pd.Series) -> pd.Series:
-        valid = reason.isna()
-        vseq = seq[valid].dropna()
-        acc.add(
-            (
-                int(len(reason)),
-                int((~valid).sum()),
-                int(((op == "delete") & valid).sum()),
-                int(vseq.min()) if len(vseq) else None,
-                int(vseq.max()) if len(vseq) else None,
-            )
-        )
-        return reason
-
-    return probe
-
-
-def _apply_batch_fused_acc(
+def maybe_compact(
     lake: LakeTable,
     ledger: BatchLedger,
-    prepared: DataFrame,
-    batch_id: str,
-    m,
-    reason,
     *,
-    salted: bool = False,
-    n_salts: int = 16,
-    rows_hint: int | None = None,
-    thin_shuffle: bool = False,
-) -> ApplyResult:
-    """ONE-job batch apply for foreachBatch plans (MoR delta path).
+    compact_factor: int,
+    tombstone_lag_batches: int | None,
+) -> None:
+    """The MoR compaction trigger, shared by batch replay and the
+    streaming tail; call it after each ``apply_batch`` returns.
 
-    The streaming twin of ``_apply_batch_fused``: observations never fire
-    on plans derived from a foreachBatch DataFrame (obs.get would hang the
-    tail), so here the lineage/quarantine aggregates ride the merge-write
-    job as ACCUMULATOR updates from an Arrow-vectorized pass-through probe
-    instead (VERDICT r4 next #3 — this removes the second per-batch Spark
-    job that held the 16M streaming gate at ~58% of batch-MoR throughput).
+    Two gates, both driver-only arithmetic: at least ``compact_factor``
+    delta commits accumulated AND some bucket group actually exceeds the
+    fold bounds — otherwise stale cold-group delta dirs would keep the
+    commit count high and re-trigger the (Spark-job) watermark derivation
+    after every batch for nothing. The compaction is partial: only bucket
+    groups whose delta backlog exceeds the bounds are rewritten; cold
+    buckets keep their base files.
 
-    The probe column is referenced exactly once (the quarantine filter)
-    and then dropped, so it evaluates once per input row in the write
-    job's map stage — verified by accumulator count under both a plain
-    write and the LWW window.
-
-    Retry semantics (honest accounting): accumulator updates from
-    transformations can be re-applied if a stage recomputes (speculation /
-    executor loss — impossible in local mode, rare on a cluster). The
-    counters (rows_in / tombstones / n_invalid) could then over-report;
-    they feed reporting only. The GC-safety-critical values — min_seq /
-    max_seq, which derive the tombstone low-watermark — are idempotent
-    under re-update (semilattice), so watermark correctness never depends
-    on exactly-once accumulation.
-
-    Degenerate batches (e.g. every row quarantined) need no fallback here:
-    the quarantine filter depends on the non-foldable probe UDF, so
-    Catalyst cannot collapse the plan to an empty LocalRelation the way it
-    can under the Observation variant — rows always flow through the probe
-    and are counted."""
-    from pyspark.accumulators import AccumulatorParam
-
-    # build the param class on first use: AccumulatorParam is an ABC, so
-    # derive dynamically to keep the module import free of pyspark
-    # internals ordering concerns
-    param = type("_BMP", (_BatchMetricsParam, AccumulatorParam), {})()
-    sc = prepared.sparkSession.sparkContext
-    acc = sc.accumulator((0, 0, 0, None, None), param)
-    probe = _make_metrics_probe(acc)
-    observed = (
-        prepared.withColumn("_obs_reason", probe(reason, F.col("seq"), F.col("op")))
-        .filter(F.col("_obs_reason").isNull())
-        .drop("_obs_reason")
-    )
-    if thin_shuffle:
-        # winner tuples from a PROBE-FREE branch (same valid-row set): the
-        # probe must appear exactly once in the plan (fat branch) or the
-        # accumulator counts would double
-        from pyorchdb_spark.operators.dedup import prune_to_winners, winner_tuples
-
-        w = winner_tuples(prepared.filter(reason.isNull()), keys=lake.keys)
-        observed = prune_to_winners(observed, keys=lake.keys, winners=w)
-    manifest = lake.merge(
-        observed,
-        batch_id=batch_id,
-        salted=salted,
-        n_salts=n_salts,
-        mor=True,
-        rows_hint=rows_hint,
-        manifest=m,
-    )
-    rows_in_acc, n_invalid, tombstones, min_seq, max_seq = acc.value
-    metrics = [
-        {
-            "partition_id": -1,
-            "rows_in": int(rows_in_acc),
-            "tombstones": int(tombstones),
-            "max_seq": max_seq,
-            "min_seq": min_seq,
-        }
-    ]
-    rejected = int(n_invalid)
-    if rejected:
-        # rare path: one extra (tiny) job to materialize quarantined rows
-        ledger.record_rejects(
-            batch_id,
-            prepared.withColumn("reject_reason", reason).filter(F.col("reject_reason").isNotNull()),
-        )
-    table_rows = sum(f["rows"] for f in manifest.files)
-    rows_in = ledger.record_lineage(batch_id, metrics, table_rows_after=table_rows)
-    ledger.commit_marker(batch_id, manifest.version, rows_in)
-    return ApplyResult(
-        batch_id,
-        skipped=False,
-        version=manifest.version,
-        rows_in=rows_in,
-        table_rows_after=table_rows,
-        rows_rejected=rejected,
+    ``tombstone_lag_batches``: None retains ALL tombstones (arbitrarily
+    late events may still arrive — no disorder contract declared);
+    otherwise tombstones at or below the lineage low-watermark are dropped
+    (see ``replay``)."""
+    m = lake.manifest()
+    if m is None:
+        return
+    delta_commits = len({f["path"].split("/")[1] for f in m.files if f.get("delta")})
+    if delta_commits < compact_factor or not lake.partial_compaction_due(
+        max_delta_files_per_group=compact_factor
+    ):
+        return
+    wm = None
+    if tombstone_lag_batches is not None:
+        wm = ledger.low_watermark(lag_batches=tombstone_lag_batches)
+    lake.compact_partial(
+        max_delta_files_per_group=compact_factor,
+        tombstone_watermark_seq=RETAIN_ALL_TOMBSTONES if wm is None else wm,
     )
 
 
@@ -522,7 +378,6 @@ def replay(
     salted: bool | str = False,
     n_salts: int = 16,
     num_files: int | None = None,
-    cache_batch: bool = False,
     jvm_only_udfs: bool = False,
     mor: bool = False,
     mor_compact_factor: int = 8,
@@ -534,10 +389,10 @@ def replay(
 
     ``mor=True``: each batch lands as a delta commit (write cost
     proportional to the batch). Read cost grows with accumulated deltas,
-    so the replay self-compacts once delta commits outnumber
-    ``mor_compact_factor`` — amortized, the table is rewritten every K
-    batches instead of every batch, turning per-batch write amplification
-    from O(table) into O(table / K + batch).
+    so the replay self-compacts (``maybe_compact``) once delta commits
+    reach ``mor_compact_factor`` — amortized, the table is rewritten every
+    K batches instead of every batch, turning per-batch write
+    amplification from O(table) into O(table / K + batch).
 
     ``tombstone_lag_batches``: opt-in tombstone GC. When set, each
     self-compaction derives the ingest low-watermark from the lineage
@@ -596,14 +451,11 @@ def replay(
             salted=salted,
             n_salts=n_salts,
             num_files=num_files,
-            cache_batch=cache_batch,
             jvm_only_udfs=jvm_only_udfs,
             mor=mor,
-            # batch mode: lineage aggregates ride the merge plan (ONE
-            # Spark job per clean batch); the previous batch's row count
-            # sizes the delta generation (replay feeds are near-constant
-            # batch size, and the hint only picks a power-of-two layout)
-            fuse_metrics=True,
+            # the previous batch's row count sizes the delta generation
+            # (replay feeds are near-constant batch size, and the hint
+            # only picks a power-of-two layout)
             rows_hint=prev_rows,
             thin_shuffle=bool(thin_shuffle),
         )
@@ -611,27 +463,9 @@ def replay(
             prev_rows = res.rows_in
         results.append(res)
         if mor:
-            m = lake.manifest()
-            delta_commits = len({f["path"].split("/")[1] for f in m.files if f.get("delta")})
-            # two gates, both driver-only arithmetic: enough delta commits
-            # accumulated AND some bucket group actually exceeds the fold
-            # bounds — otherwise stale cold-group delta dirs would keep the
-            # commit count high and re-trigger the (Spark-job) watermark
-            # derivation after every batch for nothing
-            if delta_commits >= mor_compact_factor and lake.partial_compaction_due(
-                max_delta_files_per_group=mor_compact_factor
-            ):
-                if tombstone_lag_batches is None:
-                    # retain ALL tombstones: arbitrarily late events may
-                    # still arrive (no disorder contract declared)
-                    wm = RETAIN_ALL_TOMBSTONES
-                else:
-                    lw = ledger.low_watermark(lag_batches=tombstone_lag_batches)
-                    wm = RETAIN_ALL_TOMBSTONES if lw is None else lw
-                # partial: rewrite only bucket groups whose delta backlog
-                # exceeds the bounds; cold buckets keep their base files
-                lake.compact_partial(
-                    max_delta_files_per_group=mor_compact_factor,
-                    tombstone_watermark_seq=wm,
-                )
+            maybe_compact(
+                lake, ledger,
+                compact_factor=mor_compact_factor,
+                tombstone_lag_batches=tombstone_lag_batches,
+            )
     return results

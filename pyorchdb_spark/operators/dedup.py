@@ -389,7 +389,7 @@ def choose_salt_strategy(
     key itself) aggregated to (sample size, hottest-key count): ONE
     column-pruned job whose shuffle carries only sampled key rows. Salting
     pays only when the hottest key materially exceeds a balanced shuffle
-    partition (~n/P rows), so:
+    partition (~n/P rows, P = the cluster's ``defaultParallelism``), so:
 
     - plain when the sample is too small to trust (< ``min_sample`` rows
       or hottest < ``min_hot_rows``) or the hot share <= 4/P;
@@ -473,7 +473,9 @@ def choose_strategies(
     length of the non-key, non-order columns); rows with no payload
     columns have nothing to save and never prune."""
     spark = events.sparkSession
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # P = the task slots the cluster has, not the (session-mutable)
+    # shuffle width; build_session sets both to the same value
+    n_parts = spark.sparkContext.defaultParallelism
     sampled = events.select(*keys, seq_col).filter(
         F.pmod(F.xxhash64(F.col(seq_col), F.lit("salt-probe")), F.lit(sample_mod)) == 0
     )

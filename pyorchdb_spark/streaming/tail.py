@@ -27,7 +27,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
-from pyorchdb_spark.ingest import apply_batch
+from pyorchdb_spark.ingest import apply_batch, maybe_compact
 from pyorchdb_spark.sources.catalog import BatchLedger
 from pyorchdb_spark.sources.lake import LakeTable
 
@@ -60,8 +60,9 @@ def tail_events(
 
     ``mor=True``: each micro-batch lands as a merge-on-read delta commit
     (write cost proportional to the micro-batch — the right shape for a
-    high-frequency tail); the sink self-compacts once delta commits reach
-    ``mor_compact_factor``, same policy as batch replay.
+    high-frequency tail) through the same one-job ``apply_batch`` path as
+    batch replay; the sink self-compacts once delta commits reach
+    ``mor_compact_factor``, through the same ``maybe_compact`` trigger.
 
     ``tombstone_lag_batches``: opt-in tombstone GC at compaction time
     (see ``ingest.replay`` — low-watermark from the lineage history;
@@ -96,12 +97,6 @@ def tail_events(
             n_salts=n_salts,
             num_files=num_files,
             mor=mor,
-            # MoR micro-batches fuse lineage into the merge-write job via
-            # the accumulator probe (ONE Spark job per clean batch) —
-            # Observations never fire under foreachBatch, so the batch-
-            # mode fused path is not usable here (VERDICT r4 next #3)
-            fuse_metrics=mor,
-            stream_safe_metrics=True,
             rows_hint=state["prev_rows"],
             # prune fat rows to LWW winners before the bucket exchange
             # (VERDICT r4 next #4); decided by the caller — a tail can't
@@ -111,26 +106,11 @@ def tail_events(
         if not res.skipped and res.rows_in:
             state["prev_rows"] = res.rows_in
         if mor:
-            m = lake.manifest()
-            if m is not None:
-                n_delta = len({f["path"].split("/")[1] for f in m.files if f.get("delta")})
-                # same two driver-only gates as batch replay: commit-count
-                # trigger AND a group actually over the fold bounds, so the
-                # low-watermark Spark job never runs per-batch for nothing
-                if n_delta >= mor_compact_factor and lake.partial_compaction_due(
-                    max_delta_files_per_group=mor_compact_factor
-                ):
-                    from pyorchdb_spark.sources.lake import RETAIN_ALL_TOMBSTONES
-
-                    wm = RETAIN_ALL_TOMBSTONES
-                    if tombstone_lag_batches is not None:
-                        lw = ledger.low_watermark(lag_batches=tombstone_lag_batches)
-                        if lw is not None:
-                            wm = lw
-                    lake.compact_partial(
-                        max_delta_files_per_group=mor_compact_factor,
-                        tombstone_watermark_seq=wm,
-                    )
+            maybe_compact(
+                lake, ledger,
+                compact_factor=mor_compact_factor,
+                tombstone_lag_batches=tombstone_lag_batches,
+            )
 
     writer = (
         stream.writeStream.foreachBatch(_apply)

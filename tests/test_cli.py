@@ -36,6 +36,14 @@ def test_cli_generate_and_replay_both_modes(spark, tmp_path, capsys):
     stream = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert stream["table_rows"] == batch["table_rows"]
 
+    # stream mode honours --salt and reports what it resolved
+    main([
+        "replay", "--events", events, "--table", str(tmp_path / "t_stream_salted"),
+        "--mode", "stream", "--salt", "salted", "--no-warmup",
+    ])
+    stream_salted = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert stream_salted["strategy"]["salted"] is True
+
     # jvm-hash variant produces the IDENTICAL final state (per-row sha
     # equality) — validates the scaling bench's UDF-isolation variant
     main(["replay", "--events", events, "--table", str(tmp_path / "t_jvm"), "--jvm-hash", "--no-warmup"])
@@ -47,7 +55,12 @@ def test_cli_generate_and_replay_both_modes(spark, tmp_path, capsys):
         snap = LakeTable(spark, root).snapshot()
         return {tuple(r) for r in snap.select("repo", "path", "content_sha256").collect()}
 
-    assert sig(str(tmp_path / "t_batch")) == sig(str(tmp_path / "t_jvm")) == sig(str(tmp_path / "t_stream"))
+    assert (
+        sig(str(tmp_path / "t_batch"))
+        == sig(str(tmp_path / "t_jvm"))
+        == sig(str(tmp_path / "t_stream"))
+        == sig(str(tmp_path / "t_stream_salted"))
+    )
 
 
 def test_cli_verify_sha_equality(spark, tmp_path, capsys):

@@ -205,9 +205,9 @@ def test_tail_tombstone_gc_watermark(spark, tmp_path):
 def test_stream_tail_one_job_per_clean_batch(spark, tmp_path):
     """VERDICT r4 next #3: after the bootstrap batch, every clean MoR
     micro-batch costs exactly ONE Spark job — the lineage/quarantine
-    aggregates ride the merge-write job as accumulator updates from the
-    Arrow probe (Observations never fire under foreachBatch). Also checks
-    the accumulator-collected lineage against a direct recomputation."""
+    aggregates ride the merge-write job as an ``Observation``, the same
+    fused path batch replay uses. Also checks the observed lineage
+    against a direct recomputation."""
     import os as _os
 
     from pyspark.sql import functions as F
@@ -242,7 +242,7 @@ def test_stream_tail_one_job_per_clean_batch(spark, tmp_path):
         # jobs); epochs 1..3 are fused to ONE job each
         assert used == 6, f"expected 6 Spark jobs for 4 micro-batches (3 bootstrap + 3x1), got {used}"
 
-        # accumulator lineage vs direct recomputation over the raw log
+        # observed lineage vs direct recomputation over the raw log
         lin = ledger.lineage().filter(F.col("batch_id").startswith("stream-"))
         got = lin.agg(
             F.sum("rows_in").alias("rows"),
@@ -263,5 +263,72 @@ def test_stream_tail_one_job_per_clean_batch(spark, tmp_path):
         # and the streamed state still matches the replay oracle
         exp_state = expected_final_state(prepare_events(ev).drop("content_sha256").toPandas())
         assert _sig(lake.snapshot()) == state_signature(exp_state)
+    finally:
+        ev.unpersist()
+
+
+def test_stream_tail_observation_quarantines_hostile_rows(spark, tmp_path):
+    """The fused MoR apply under ``foreachBatch`` takes the reject branch
+    and thin-shuffle pruning: hostile rows in a post-bootstrap micro-batch
+    are quarantined with their reasons, lineage counts every input row,
+    and the table still equals the oracle over the valid rows."""
+    import os as _os
+
+    from pyorchdb_spark.generator import split_batches
+    from pyorchdb_spark.streaming.tail import EVENT_SCHEMA_DDL
+
+    ev = change_events(spark, 2_000, batch_size=500).cache()
+    try:
+        # a REAL key whose LWW winner arrives in the hostile batch b000002
+        real = (
+            ev.groupBy("repo", "path")
+            .agg(F.max_by("batch_id", "seq").alias("last"))
+            .filter(F.col("last") == "b000002")
+            .orderBy("repo", "path")
+            .first()
+        )
+        ts = ev.first()["ts"]
+        hostile = spark.createDataFrame(
+            [
+                ("", "empty_repo.py", "h1", 10**12, "upsert", "py", "x", "b000002", ts, None),
+                ("r", "noseq.py", "h2", None, "upsert", "py", "x", "b000002", ts, None),
+                # an unknown op on that key with the highest seq: it must
+                # never shadow the winner (thin pruning included)
+                (real.repo, real.path, "h3", 10**12, "upsrt", "py", "x", "b000002", ts, None),
+            ],
+            EVENT_SCHEMA_DDL,  # all nullable, unlike the generator's schema
+        )
+        log_dir = tmp_path / "log"
+        log_dir.mkdir()
+        # one file per batch with pinned mtimes: micro-batches map 1:1
+        # onto log batches, so the hostile rows land in a fused epoch
+        for i, (b, bdf) in enumerate(split_batches(ev.unionByName(hostile))):
+            out = str(log_dir / f"batch_id={b}")
+            bdf.drop("batch_id").coalesce(1).write.parquet(out)
+            for f in _os.listdir(out):
+                _os.utime(_os.path.join(out, f), (1_700_000_000 + i * 100,) * 2)
+        root = str(tmp_path / "t")
+        lake, ledger = LakeTable(spark, root), BatchLedger(spark, root)
+        run_tail_to_completion(
+            spark, str(log_dir), lake, ledger, str(tmp_path / "ckpt"),
+            num_files=2, max_files_per_trigger=1, mor=True, thin_shuffle=True,
+            mor_compact_factor=100,
+        )
+
+        exp_state = expected_final_state(prepare_events(ev).drop("content_sha256").toPandas())
+        assert _sig(lake.snapshot()) == state_signature(exp_state)
+
+        lin = ledger.lineage().filter(F.col("batch_id").startswith("stream-"))
+        assert lin.agg(F.sum("rows_in")).first()[0] == ev.count() + 3
+
+        rej = ledger.rejects().collect()
+        assert sorted(r["reject_reason"] for r in rej) == [
+            "null_or_empty_key", "null_seq", "unknown_op",
+        ]
+        (rejected_batch,) = {r["batch_id_rejected"] for r in rej}
+        # the rejecting epoch went through the fused path: its lineage is
+        # the Observation's single global row
+        parts = [r["partition_id"] for r in lin.filter(F.col("batch_id") == rejected_batch).collect()]
+        assert parts == [-1]
     finally:
         ev.unpersist()
