@@ -292,6 +292,26 @@ def q_union_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return old.unionByName(new, allowMissingColumns=True)
 
 
+# --------------------------------------------------------------------------
+# sessions (operators/timeseries.py; streaming/stateful.py holds the
+# streaming twin — parity in tests/test_stateful_streaming.py)
+# --------------------------------------------------------------------------
+
+def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gap-based sessions (strictly-greater-than-gap splits): one shuffle
+    on user_id + two window functions; oracle = SQL gaps-and-islands."""
+    from pyorchdb_spark.operators.timeseries import sessionize
+
+    ev = _t(spark, sf_dir, "events")
+    return sessionize(ev, "ts", gap="1 day", keys=("user_id",))
+
+
+# --------------------------------------------------------------------------
+# event analytics: top-k, event-time windows, funnel, cohorts, ranking,
+# as-of / interval / range joins.  Not CDC queries, so they stay out of
+# queries(); tests/test_entry.py checks them against analytics_oracle_sql().
+# --------------------------------------------------------------------------
+
 def q_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O1 — deterministic global sort + limit (top-10 users by value)."""
     ev = _t(spark, sf_dir, "events")
@@ -303,12 +323,6 @@ def q_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "n_events")
     )
 
-
-# --------------------------------------------------------------------------
-# event-time windows / sessions / JSON (operators/timeseries.py,
-# streaming/stateful.py holds the streaming twins — parity in
-# tests/test_stateful_streaming.py)
-# --------------------------------------------------------------------------
 
 def q_events_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-day event-time windows per event_type (F.window)."""
@@ -326,15 +340,6 @@ def q_events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _t(spark, sf_dir, "events")
     return windowed_agg(ev, "ts", "2 days", slide="1 day")
-
-
-def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessions (strictly-greater-than-gap splits): one shuffle
-    on user_id + two window functions; oracle = SQL gaps-and-islands."""
-    from pyorchdb_spark.operators.timeseries import sessionize
-
-    ev = _t(spark, sf_dir, "events")
-    return sessionize(ev, "ts", gap="1 day", keys=("user_id",))
 
 
 def q_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -513,547 +518,6 @@ def q_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# analytics (bench headliners; joins/agg with broadcast + pushdown)
-# --------------------------------------------------------------------------
-
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("sum_disc_price"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    # no broadcast hint on customer: it is unbounded at scale — Catalyst/
-    # AQE broadcasts it when its statistics fit (it does at bench SFs,
-    # asserted in test_entry.test_analytics_plan_shapes)
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-        .limit(10)
-        .select("l_orderkey")
-    )
-
-
-def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    region = _t(spark, sf_dir, "region")
-    nation = _t(spark, sf_dir, "nation")
-    cust = _t(spark, sf_dir, "customer")
-    sup = _t(spark, sf_dir, "supplier")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    # broadcast hints ONLY on the bounded dimensions (nation: 25 rows,
-    # region: 5 — fixed by the schema); supplier/customer grow with scale
-    # and are left to statistics-driven planning (AQE broadcasts them
-    # while they fit, shuffles them when they don't)
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(sup, li.l_suppkey == sup.s_suppkey)
-        .join(cust, (orders.o_custkey == cust.c_custkey) & (cust.c_nationkey == sup.s_nationkey))
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy("n_name")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
-    )
-
-
-def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 shape: pure filter+agg — the predicate-pushdown showcase
-    (every filter reaches the parquet scan; zero joins, one partial agg)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1996-01-01"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01"))
-            & (F.col("l_discount") >= 0.04)
-            & (F.col("l_discount") <= 0.06)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias("revenue"))
-    )
-
-
-def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape adapted to this schema (no l_commitdate): orders
-    with at least one lineitem shipped > 90 days after the order date,
-    counted per priority — the EXISTS -> left-semi-join pattern."""
-    orders = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01")) & (F.col("o_orderdate") < F.lit("1997-01-01"))
-    )
-    late = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    return (
-        orders.join(
-            late,
-            (orders.o_orderkey == late.l_orderkey)
-            & (late.l_shipdate > F.col("o_orderdate") + F.expr("INTERVAL 90 DAYS")),
-            "left_semi",
-        )
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-    )
-
-
-def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 shape: revenue lost to returns per customer in one
-    quarter, top 20 — join + agg + deterministic top-k."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01")) & (F.col("o_orderdate") < F.lit("1996-04-01"))
-    )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    nation = _t(spark, sf_dir, "nation")
-    # exact decimal accumulation (order-independent), then ONE final
-    # decimal->double conversion per output row: a double SUM is
-    # order-dependent, but summing in decimal and converting the exact
-    # result to double is deterministic on both engines — and avoids the
-    # half-cent HALF_UP-vs-double-repr divergence a final round() hits,
-    # while a raw DECIMAL output hash-diverges on trailing-zero rendering
-    # ('107568.9600' vs '107568.96').
-    disc = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(F.sum(disc).cast("decimal(28,4)").cast("double").alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("c_custkey"))
-        .limit(20)
-    )
-
-
-def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7 shape: trade volume between two nations per direction and
-    year — double nation join with an order-insensitive pair predicate."""
-    n1 = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("supp_nation")
-    )
-    n2 = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("c_nkey"), F.col("n_name").alias("cust_nation")
-    )
-    sup = _t(spark, sf_dir, "supplier")
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01")) & (F.col("l_shipdate") < F.lit("1998-01-01"))
-    )
-    pair = (
-        ((F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2"))
-        | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
-    )
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(sup, li.l_suppkey == sup.s_suppkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(n1), sup.s_nationkey == F.col("s_nkey"))
-        .join(F.broadcast(n2), cust.c_nationkey == F.col("c_nkey"))
-        .filter(pair)
-        .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
-    )
-
-
-def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape: promo revenue share in one month — conditional
-    aggregation over a fact-dimension join."""
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-03-01")) & (F.col("l_shipdate") < F.lit("1996-04-01"))
-    )
-    part = _t(spark, sf_dir, "part")
-    disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.join(part, li.l_partkey == part.p_partkey)
-        .agg(
-            F.round(
-                100
-                * F.sum(F.when(F.col("p_type").startswith("PROMO"), disc).otherwise(F.lit(0.0)))
-                / F.sum(disc),
-                4,
-            ).alias("promo_revenue_pct")
-        )
-    )
-
-
-def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8 shape: one nation's share of a region's ECONOMY-part
-    order revenue per year — two-level conditional aggregation over a
-    seven-table join (part/region filters pushed to their scans, both
-    nation roles broadcast)."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
-    orders = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01")) & (F.col("o_orderdate") < F.lit("1998-01-01"))
-    )
-    cust = _t(spark, sf_dir, "customer")
-    sup = _t(spark, sf_dir, "supplier")
-    n_cust = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("cn_key"), F.col("n_regionkey").alias("cn_rkey")
-    )
-    n_supp = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
-    )
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.join(part, li.l_partkey == part.p_partkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(n_cust), cust.c_nationkey == F.col("cn_key"))
-        .join(F.broadcast(region), F.col("cn_rkey") == region.r_regionkey)
-        .join(sup, li.l_suppkey == sup.s_suppkey)
-        .join(F.broadcast(n_supp), sup.s_nationkey == F.col("sn_key"))
-        .groupBy(F.year("o_orderdate").alias("o_year"))
-        .agg(
-            F.round(
-                F.sum(F.when(F.col("supp_nation") == "NATION_12", vol).otherwise(F.lit(0.0)))
-                / F.sum(vol),
-                6,
-            ).alias("mkt_share")
-        )
-    )
-
-
-def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9 shape adapted to this schema: profit per supplier nation
-    and year over parts matching a name pattern.  The schema has no
-    partsupp, so supply cost is proxied as ``0.6 * p_retailprice *
-    l_quantity`` — deterministic and engine-neutral (stated in the oracle
-    identically)."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_name").contains("red"))
-    sup = _t(spark, sf_dir, "supplier")
-    orders = _t(spark, sf_dir, "orders")
-    nation = _t(spark, sf_dir, "nation")
-    profit = (
-        F.col("l_extendedprice") * (1 - F.col("l_discount"))
-        - 0.6 * F.col("p_retailprice") * F.col("l_quantity")
-    ).cast("decimal(18,4)")
-    return (
-        li.join(part, li.l_partkey == part.p_partkey)
-        .join(sup, li.l_suppkey == sup.s_suppkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(nation), sup.s_nationkey == nation.n_nationkey)
-        .groupBy(F.col("n_name").alias("nation"), F.year("o_orderdate").alias("o_year"))
-        # exact decimal accumulation, ONE final conversion (q10 pattern)
-        .agg(F.sum(profit).cast("decimal(28,4)").cast("double").alias("sum_profit"))
-    )
-
-
-def q12_late_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12 shape adapted (no l_shipmode/l_receiptdate): among
-    lineitems shipped more than 60 days after their order date in 1996-97,
-    count critical- vs normal-priority orders per return flag — the
-    conditional dual count over a fact join."""
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01")) & (F.col("l_shipdate") < F.lit("1998-01-01"))
-    )
-    orders = _t(spark, sf_dir, "orders")
-    crit = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .filter(F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS"))
-        .groupBy("l_returnflag")
-        .agg(
-            F.sum(F.when(crit, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(crit, 0).otherwise(1)).alias("low_line_count"),
-        )
-    )
-
-
-def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 shape: distribution of order counts per customer —
-    LEFT OUTER join (customers with no orders count as 0) with a join-side
-    predicate, then a second aggregation over the first's result."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderpriority") != "5-LOW")
-    per_cust = (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_outer")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return per_cust.groupBy("c_count").agg(F.count(F.lit(1)).alias("custdist"))
-
-
-def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15 shape: supplier(s) achieving the maximum quarterly
-    revenue — a derived aggregate joined against its own maximum (the
-    max side is a 1-row broadcast equi-join, not a nested-loop)."""
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01")) & (F.col("l_shipdate") < F.lit("1996-04-01"))
-    )
-    sup = _t(spark, sf_dir, "supplier")
-    rev = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        F.sum((F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)"))
-        .cast("decimal(28,4)").cast("double")
-        .alias("total_revenue")
-    )
-    max_rev = rev.agg(F.max("total_revenue").alias("max_revenue"))
-    return (
-        rev.join(F.broadcast(max_rev), rev.total_revenue == max_rev.max_revenue)
-        .join(sup, F.col("supplier_no") == sup.s_suppkey)
-        .select("s_suppkey", "s_name", "total_revenue")
-    )
-
-
-def q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape: average yearly revenue lost if small-quantity
-    orders for one brand's parts were not taken — the correlated AVG
-    subquery decorrelated into a per-part aggregate joined back."""
-    part = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#11").select("p_partkey")
-    li = _t(spark, sf_dir, "lineitem")
-    # restrict lineitem to the brand's parts FIRST (broadcast semi-ish
-    # inner join on the pruned part list), then decorrelate the per-part
-    # average over that small subset only
-    li_brand = li.join(F.broadcast(part), li.l_partkey == part.p_partkey).select(
-        "l_partkey", "l_quantity", "l_extendedprice"
-    )
-    avg_q = li_brand.groupBy(F.col("l_partkey").alias("ap_key")).agg(
-        (0.2 * F.avg("l_quantity")).alias("qty_limit")
-    )
-    return (
-        li_brand.join(F.broadcast(avg_q), li_brand.l_partkey == F.col("ap_key"))
-        .filter(F.col("l_quantity") < F.col("qty_limit"))
-        .agg(F.round(F.sum("l_extendedprice") / 7.0, 2).alias("avg_yearly"))
-    )
-
-
-def q18_large_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 shape: customers with any single order totalling more
-    than 300 units — HAVING over a fact aggregate, joined up to the
-    order/customer detail, deterministic top-100."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("total_qty"))
-        .filter(F.col("total_qty") > 300)
-    )
-    return (
-        big.join(orders, big.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .select("c_custkey", "c_name", "o_orderkey", "o_orderdate", "o_totalprice", "total_qty")
-        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .limit(100)
-    )
-
-
-def q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19 shape: revenue from three OR'd brand/size/quantity
-    windows — the disjunctive mixed-column predicate (part attributes
-    AND lineitem attributes inside each disjunct) that exercises
-    post-join filter placement."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    joined = li.join(part, li.l_partkey == part.p_partkey)
-    cond = (
-        ((F.col("p_brand") == "Brand#11") & F.col("p_size").between(1, 5) & F.col("l_quantity").between(1, 11))
-        | ((F.col("p_brand") == "Brand#14") & F.col("p_size").between(1, 10) & F.col("l_quantity").between(10, 20))
-        | ((F.col("p_brand") == "Brand#17") & F.col("p_size").between(1, 15) & F.col("l_quantity").between(20, 30))
-    )
-    return joined.filter(cond).agg(
-        F.sum((F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)"))
-        .cast("decimal(28,4)").cast("double")
-        .alias("revenue")
-    )
-
-
-def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q21 shape adapted (lateness = shipped >90 days after order
-    date; no receipt/commit dates in this schema): suppliers who were the
-    SOLE late shipper on a finished multi-supplier order — EXISTS
-    (another supplier shipped the order) AND NOT EXISTS (another supplier
-    shipped late), as one semi and one anti hash join."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    sup = _t(spark, sf_dir, "supplier")
-    lo = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            "l_orderkey",
-            "l_suppkey",
-            (F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 90 DAYS")).alias("late"),
-        )
-    )
-    l1 = lo.filter(F.col("late")).select("l_orderkey", "l_suppkey")
-    l2 = lo.select(F.col("l_orderkey").alias("o2"), F.col("l_suppkey").alias("s2"))
-    l3 = lo.filter(F.col("late")).select(F.col("l_orderkey").alias("o3"), F.col("l_suppkey").alias("s3"))
-    return (
-        l1.join(l2, (l1.l_orderkey == l2.o2) & (l1.l_suppkey != l2.s2), "left_semi")
-        .join(l3, (l1.l_orderkey == F.col("o3")) & (l1.l_suppkey != F.col("s3")), "left_anti")
-        .join(sup, l1.l_suppkey == sup.s_suppkey)
-        .groupBy("s_name")
-        .agg(F.count(F.lit(1)).alias("numwait"))
-        .orderBy(F.desc("numwait"), F.asc("s_name"))
-        .limit(20)
-    )
-
-
-def q22_idle_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 shape adapted (no c_phone: nation keys stand in for the
-    country-code substring): per selected nation, customers with an
-    above-average positive balance and NO orders — scalar aggregate
-    threshold + NOT EXISTS as a left-anti join."""
-    nations = [1, 3, 5, 7, 9, 11, 13]
-    cust = _t(spark, sf_dir, "customer").filter(F.col("c_nationkey").isin(nations))
-    orders = _t(spark, sf_dir, "orders").select("o_custkey")
-    # scalar-subquery materialization: one bounded driver scalar (the
-    # same thing Catalyst does internally for an uncorrelated scalar
-    # subquery), NOT a data collect
-    avg_bal = cust.filter(F.col("c_acctbal") > 0.0).agg(F.avg("c_acctbal")).first()[0]
-    return (
-        cust.filter(F.col("c_acctbal") > avg_bal)
-        .join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
-        .groupBy(F.col("c_nationkey").alias("cntrycode"))
-        .agg(
-            F.count(F.lit(1)).alias("numcust"),
-            F.round(F.sum("c_acctbal"), 2).alias("totacctbal"),
-        )
-    )
-
-
-def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2 shape adapted (no partsupp table: the observed
-    part-supplier relation is derived from lineitem, unit cost =
-    min(l_extendedprice / l_quantity)): for STANDARD parts of small
-    size, the supplier in one region offering the minimum unit cost —
-    the correlated MIN subquery decorrelated into a per-part aggregate
-    joined back, all dimensions broadcast."""
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey", "l_extendedprice", "l_quantity")
-    part = _t(spark, sf_dir, "part").filter(
-        (F.col("p_type") == "STANDARD") & (F.col("p_size") <= 15)
-    ).select("p_partkey", "p_name", "p_size")
-    sup = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    # part/supplier/nation/region are all tiny dims; the one big input
-    # (lineitem) is reduced to a (part, supp) cost relation in a single
-    # partial-aggregated shuffle before any join
-    cost = (
-        li.join(F.broadcast(part.select("p_partkey")), li.l_partkey == F.col("p_partkey"))
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("unit_cost"))
-    )
-    eur = (
-        cost.join(F.broadcast(sup), cost.l_suppkey == sup.s_suppkey)
-        .join(F.broadcast(nation), sup.s_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-    )
-    min_cost = eur.groupBy(F.col("l_partkey").alias("mc_key")).agg(
-        F.min("unit_cost").alias("min_cost")
-    )
-    return (
-        eur.join(
-            F.broadcast(min_cost),
-            (eur.l_partkey == F.col("mc_key")) & (eur.unit_cost == F.col("min_cost")),
-        )
-        .join(F.broadcast(part), eur.l_partkey == part.p_partkey)
-        # raw double: min() of identical IEEE divisions is engine-exact;
-        # a round() here would reintroduce HALF_UP-vs-half-away skew
-        .select("s_acctbal", "s_name", "n_name", "p_partkey", "p_name", "unit_cost")
-        .orderBy(F.desc("s_acctbal"), F.asc("n_name"), F.asc("s_name"), F.asc("p_partkey"))
-        .limit(100)
-    )
-
-
-def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q11 shape adapted (part value = revenue shipped by one
-    nation's suppliers, not availqty*supplycost): parts whose value
-    exceeds a fixed fraction of the nation's grand total — a per-group
-    aggregate HAVING against an uncorrelated scalar aggregate, planned
-    as a 1-row broadcast join, never a driver collect of data rows."""
-    li = _t(spark, sf_dir, "lineitem")
-    sup = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3")
-    nat_li = (
-        li.join(F.broadcast(sup.join(F.broadcast(nation), sup.s_nationkey == nation.n_nationkey)
-                            .select("s_suppkey")),
-                li.l_suppkey == F.col("s_suppkey"))
-        .select("l_partkey", (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)").alias("val"))
-    )
-    # exact decimal accumulation at BOTH levels (a double grand total
-    # would be partition-order-dependent and could flip boundary rows),
-    # one decimal->double conversion per emitted value
-    per_part = nat_li.groupBy("l_partkey").agg(
-        F.sum("val").cast("decimal(28,4)").alias("dec_value")
-    )
-    total = per_part.agg(
-        F.sum("dec_value").cast("decimal(38,4)").cast("double").alias("grand_total")
-    )
-    return (
-        per_part.join(F.broadcast(total))
-        .withColumn("part_value", F.col("dec_value").cast("double"))
-        .filter(F.col("part_value") > F.col("grand_total") * 0.001)
-        .select(F.col("l_partkey").alias("p_partkey"), "part_value")
-        .orderBy(F.desc("part_value"), F.asc("p_partkey"))
-    )
-
-
-def q16_supplier_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q16 shape adapted (supplier-part relation from lineitem;
-    the 'complaints' exclusion list = suppliers with negative balance):
-    distinct supplier count per (brand, type, size) bucket for
-    non-PROMO mid-size parts — distinct aggregation over a semi-reduced
-    fact with a broadcast anti-join."""
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    part = _t(spark, sf_dir, "part").filter(
-        (F.col("p_type") != "PROMO") & F.col("p_size").isin(1, 5, 9, 14, 19, 23, 36, 45)
-    ).select("p_partkey", "p_brand", "p_type", "p_size")
-    bad = _t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0.0).select("s_suppkey")
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(F.broadcast(bad), li.l_suppkey == bad.s_suppkey, "left_anti")
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.desc("supplier_cnt"), F.asc("p_brand"), F.asc("p_type"), F.asc("p_size"))
-    )
-
-
-def q20_dominant_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q20 shape adapted (no availqty: 'excess stock' becomes
-    market dominance — a supplier holding >30% of a part's shipped 1996
-    quantity): suppliers of red parts who dominate at least one such
-    part, named per nation — nested per-(part,supp)/per-part aggregates
-    compared, then a semi join up to the supplier dimension."""
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01")) & (F.col("l_shipdate") < F.lit("1997-01-01"))
-    )
-    red = _t(spark, sf_dir, "part").filter(F.col("p_name").like("red%")).select("p_partkey")
-    sup = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    red_li = li.join(F.broadcast(red), li.l_partkey == red.p_partkey).select(
-        "l_partkey", "l_suppkey", "l_quantity"
-    )
-    per_ps = red_li.groupBy("l_partkey", "l_suppkey").agg(F.sum("l_quantity").alias("supp_qty"))
-    per_p = per_ps.groupBy(F.col("l_partkey").alias("tp_key")).agg(
-        F.sum("supp_qty").alias("total_qty")
-    )
-    dominant = (
-        per_ps.join(F.broadcast(per_p), per_ps.l_partkey == F.col("tp_key"))
-        .filter(F.col("supp_qty") > F.col("total_qty") * 0.3)
-        .select("l_suppkey")
-    )
-    return (
-        sup.join(dominant, sup.s_suppkey == dominant.l_suppkey, "left_semi")
-        .join(F.broadcast(nation), F.col("s_nationkey") == nation.n_nationkey)
-        .select("s_name", "n_name", "s_acctbal")
-        .orderBy(F.asc("s_name"))
-    )
-
-
-# --------------------------------------------------------------------------
 # CDC history projections (SCD2 / transitions)
 # --------------------------------------------------------------------------
 
@@ -1079,8 +543,7 @@ def q_scd2_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyorchdb_spark.operators.scd import scd2_apply_batch, scd2_history
 
     ev = _t(spark, sf_dir, "events")
-    # bounded driver scalar (split point), same pattern as q22's scalar
-    # subquery materialization
+    # one bounded scalar: the split point
     thr = ev.agg(F.floor(F.max("event_id") * 2 / 3).alias("t")).first()[0]
     base = ev.filter(F.col("event_id") <= thr)
     late = ev.filter(F.col("event_id") > thr)
@@ -1616,54 +1079,9 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # The driver records only the FIRST 50 entries (dict insertion order) on
-    # the correctness board (VERDICT r4 "Next #1").  Slots 1-50 therefore go
-    # to: (a) the 31 queries that carried no driver row in r4 — every
-    # dedup_*/ann_*/scd2_*/text/UDF/sampling op, incl. the never-recorded
-    # ann_topk_ivf and the new-oracle dedup_simhash/dedup_substring/
-    # stratified_sample/repetition_stats; (b) the q12 fix (CAST AS BIGINT);
-    # (c) the load-bearing CDC/IVM/lineage rows; (d) one query per remaining
-    # operator family.  Everything rotated BELOW slot 50 was driver-green in
-    # CORRECTNESS_r04 (the full TPC-H suite and the events/curate family) and
-    # stays pytest-covered via tests/test_entry.py, which runs ALL entries.
+    # At most 50 entries: the correctness board records only the first 50.
     return {
-        # --- (a) LLM-pipeline ops, unrecorded in r4 (all driver-green in r3
-        #         except where noted; oracles unchanged since) -------------
-        "dedup_exact": q_dedup_exact,
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "dedup_substring": q_dedup_substring,          # oracle new in r4, never recorded
-        "dedup_groups": q_dedup_groups,
-        "dedup_fuzzy_resolve": q_dedup_fuzzy_resolve,
-        "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "dedup_minhash_groups": q_dedup_minhash_groups,
-        "dedup_simhash": q_dedup_simhash,              # oracle new in r4, never recorded
-        "dedup_embedding": q_dedup_embedding,
-        "dedup_embedding_lsh": q_dedup_embedding_lsh,
-        "ann_topk": q_ann_topk,
-        "ann_topk_ivf": q_ann_topk_ivf,                # never recorded in any round
-        "scrub_pii": q_scrub_pii,
-        "decontaminate": q_decontaminate,
-        "remove_boilerplate": q_remove_boilerplate,
-        "stratified_sample": q_stratified_sample,      # oracle new in r4, never recorded
-        "train_val_split": q_train_val_split,
-        "curate_corpus": q_curate_corpus,
-        "text_stats": q_text_stats,
-        "doc_quality": q_doc_quality,
-        "repetition_stats": q_repetition_stats,        # oracle new in r4, never recorded
-        "clean_values": q_clean_values,
-        "fingerprint": q_fingerprint,
-        "normalize_paths": q_normalize_paths,
-        "sha256_udf": q_sha256_udf,
-        "lang_of_path": q_lang_of_path,
-        "corpus_ngrams": q_corpus_ngrams,
-        "topk_per_group": q_topk_per_group,
-        "scd2_history": q_scd2_history,
-        "scd2_incremental": q_scd2_incremental,
-        "scd2_lake_incremental": q_scd2_lake_incremental,  # new r5 (bucket-pruned folds)
-        "state_transitions": q_state_transitions,
-        # --- (b) the r4 hash-fail, oracle fixed this round ----------------
-        "q12_late_priority": q12_late_priority,
-        # --- (c) load-bearing CDC / IVM / lineage (green r4, keep on) -----
+        # CDC engine semantics, IVM and lineage
         "cdc_lww": q_cdc_lww,
         "cdc_lww_salted": q_cdc_lww_salted,
         "cdc_final_state": q_cdc_final_state,
@@ -1673,50 +1091,46 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cdc_snapshot_diff": q_cdc_snapshot_diff,
         "ivm_group_stats": q_ivm_group_stats,
         "lineage_counts": q_lineage_counts,
-        # --- (d) one representative per remaining operator family --------
-        "union_evolution": q_union_evolution,          # A2/U2 schema evolution
-        "insert_period": q_insert_period,              # P8 regex period injection
-        "filter_not_contains": q_filter_not_contains,  # P6/P7 list filters
-        "distinct_directories": q_distinct_directories,  # A1/F1 split+index
-        "topk_users": q_topk_users,                    # O1 top-k
-        "sessionize": q_sessionize,                    # stateful-streaming batch twin
-        "asof_latest_click": q_asof_latest_click,      # as-of join custom op
-        "range_join_incidents": q_range_join_incidents,  # range join custom op
-        # ------------------- slot 51+ (off the recorded board) -----------
-        "value_quantiles": q_value_quantiles,          # green r4; approx/exact quantile op
-        # All rows below were driver-green in CORRECTNESS_r04 and are still
-        # run per-round by tests/test_entry.py against the same oracles.
-        "events_windowed": q_events_windowed,          # green r4
-        "events_sliding": q_events_sliding,            # green r4
-        "json_props": q_json_props,                    # green r4
-        "funnel_steps": q_funnel_steps,                # green r4
-        "cohort_retention": q_cohort_retention,        # green r4
-        "rolling_value": q_rolling_value,              # green r4
-        "value_deciles": q_value_deciles,              # green r4
-        "click_attribution": q_click_attribution,      # green r4
-        "events_pivot": q_events_pivot,                # green r4
-        "events_rollup": q_events_rollup,              # green r4
-        "q1_pricing_summary": q1_pricing_summary,      # green r4
-        "q3_shipping_priority": q3_shipping_priority,  # green r4
-        "q5_local_supplier_volume": q5_local_supplier_volume,  # green r4
-        "q6_forecast_revenue": q6_forecast_revenue,    # green r4
-        "q4_order_priority": q4_order_priority,        # green r4
-        "q10_returned_items": q10_returned_items,      # green r4
-        "q7_volume_shipping": q7_volume_shipping,      # green r4
-        "q14_promo_revenue": q14_promo_revenue,        # green r4
-        "q8_market_share": q8_market_share,            # green r4
-        "q9_product_profit": q9_product_profit,        # green r4
-        "q13_customer_distribution": q13_customer_distribution,  # green r4
-        "q15_top_supplier": q15_top_supplier,          # green r4
-        "q17_small_quantity": q17_small_quantity,      # green r4
-        "q18_large_volume": q18_large_volume,          # green r4
-        "q19_discounted_revenue": q19_discounted_revenue,  # green r4
-        "q21_waiting_supplier": q21_waiting_supplier,  # green r4
-        "q22_idle_balances": q22_idle_balances,        # green r4
-        "q2_min_cost_supplier": q2_min_cost_supplier,  # green r4
-        "q11_important_parts": q11_important_parts,    # green r4
-        "q16_supplier_count": q16_supplier_count,      # green r4
-        "q20_dominant_supplier": q20_dominant_supplier,  # green r4
+        # CDC history projections
+        "scd2_history": q_scd2_history,
+        "scd2_incremental": q_scd2_incremental,
+        "scd2_lake_incremental": q_scd2_lake_incremental,
+        "state_transitions": q_state_transitions,
+        "sessionize": q_sessionize,
+        # reference-parity curate surface
+        "union_evolution": q_union_evolution,
+        "insert_period": q_insert_period,
+        "filter_not_contains": q_filter_not_contains,
+        "distinct_directories": q_distinct_directories,
+        "clean_values": q_clean_values,
+        # LLM-pipeline dedup / text / UDF / sampling ops
+        "dedup_exact": q_dedup_exact,
+        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
+        "dedup_substring": q_dedup_substring,
+        "dedup_groups": q_dedup_groups,
+        "dedup_fuzzy_resolve": q_dedup_fuzzy_resolve,
+        "dedup_minhash_lsh": q_dedup_minhash_lsh,
+        "dedup_minhash_groups": q_dedup_minhash_groups,
+        "dedup_simhash": q_dedup_simhash,
+        "dedup_embedding": q_dedup_embedding,
+        "dedup_embedding_lsh": q_dedup_embedding_lsh,
+        "ann_topk": q_ann_topk,
+        "ann_topk_ivf": q_ann_topk_ivf,
+        "scrub_pii": q_scrub_pii,
+        "decontaminate": q_decontaminate,
+        "remove_boilerplate": q_remove_boilerplate,
+        "stratified_sample": q_stratified_sample,
+        "train_val_split": q_train_val_split,
+        "curate_corpus": q_curate_corpus,
+        "text_stats": q_text_stats,
+        "doc_quality": q_doc_quality,
+        "repetition_stats": q_repetition_stats,
+        "fingerprint": q_fingerprint,
+        "normalize_paths": q_normalize_paths,
+        "sha256_udf": q_sha256_udf,
+        "lang_of_path": q_lang_of_path,
+        "corpus_ngrams": q_corpus_ngrams,
+        "topk_per_group": q_topk_per_group,
     }
 
 
@@ -1881,87 +1295,6 @@ def oracle_sql() -> dict[str, str]:
             UNION ALL
             SELECT doc_id, lang, n_chars AS extra_chars FROM documents WHERE doc_id % 2 = 1
         """,
-        "topk_users": """
-            SELECT user_id, n_events FROM (
-              SELECT user_id, count(*) AS n_events
-              FROM events GROUP BY user_id
-            ) ORDER BY n_events DESC, user_id ASC LIMIT 10
-        """,
-        "events_windowed": """
-            SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS window_start,
-                   CAST(date_trunc('day', ts) AS TIMESTAMP) + INTERVAL 1 DAY AS window_end,
-                   event_type,
-                   count(*) AS n_events,
-                   round(sum(value), 2) AS total_value
-            FROM events GROUP BY 1, 2, 3
-        """,
-        "events_sliding": """
-            WITH w AS (
-              SELECT CAST(date_trunc('day', ts) AS TIMESTAMP)
-                       - x * INTERVAL 1 DAY AS window_start, value
-              FROM events, (VALUES (0), (1)) t(x)
-            )
-            SELECT window_start,
-                   window_start + INTERVAL 2 DAY AS window_end,
-                   count(*) AS n_events,
-                   round(sum(value), 2) AS total_value
-            FROM w GROUP BY 1, 2
-        """,
-        "rolling_value": """
-            SELECT user_id, event_id,
-                   CAST(CAST(sum(CAST(value AS DECIMAL(18,4))) OVER w
-                             AS DECIMAL(28,4)) AS DOUBLE)
-                   / count(*) OVER w AS rolling_avg
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY event_id
-                         ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-        """,
-        "value_deciles": """
-            WITH totals AS (
-              SELECT user_id,
-                     CAST(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DECIMAL(28,4)) AS DOUBLE) AS total_value
-              FROM events GROUP BY 1
-            ), tiles AS (
-              SELECT total_value,
-                     CAST(NTILE(10) OVER (ORDER BY total_value DESC, user_id ASC) AS INTEGER) AS decile
-              FROM totals
-            )
-            SELECT decile, count(*) AS n_users,
-                   max(total_value) AS top_value,
-                   min(total_value) AS bottom_value
-            FROM tiles GROUP BY 1
-        """,
-        "funnel_steps": """
-            WITH s1 AS (
-              SELECT user_id, min(ts) AS t FROM events
-              WHERE event_type = 'view' GROUP BY 1
-            ), s2 AS (
-              SELECT e.user_id, min(e.ts) AS t
-              FROM events e JOIN s1 ON e.user_id = s1.user_id AND e.ts >= s1.t
-              WHERE e.event_type = 'click' GROUP BY 1
-            ), s3 AS (
-              SELECT e.user_id, min(e.ts) AS t
-              FROM events e JOIN s2 ON e.user_id = s2.user_id AND e.ts >= s2.t
-              WHERE e.event_type = 'purchase' GROUP BY 1
-            )
-            SELECT 'view' AS stage, 1 AS stage_idx,
-                   (SELECT count(*) FROM s1) AS n_users
-            UNION ALL SELECT 'click', 2, (SELECT count(*) FROM s2)
-            UNION ALL SELECT 'purchase', 3, (SELECT count(*) FROM s3)
-        """,
-        "cohort_retention": """
-            WITH fu AS (
-              SELECT user_id, min(CAST(ts AS DATE)) AS cohort_date
-              FROM events GROUP BY 1
-            ), act AS (
-              SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events
-            )
-            SELECT cohort_date,
-                   CAST(date_diff('day', cohort_date, d) AS INTEGER) AS day_offset,
-                   count(*) AS n_users
-            FROM act JOIN fu USING (user_id)
-            GROUP BY 1, 2
-        """,
         "sessionize": """
             WITH o AS (
               SELECT user_id, ts, value,
@@ -1980,364 +1313,6 @@ def oracle_sql() -> dict[str, str]:
                    count(*) AS n_events,
                    round(sum(value), 2) AS total_value
             FROM s GROUP BY user_id, sess
-        """,
-        "json_props": """
-            SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
-                   count(*) AS n,
-                   round(sum(value), 2) AS total_value
-            FROM events GROUP BY 1
-        """,
-        "range_join_incidents": """
-            WITH incidents AS (
-              SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS incident_day,
-                     min(ts) AS s, max(ts) AS e
-              FROM events WHERE event_type = 'error' GROUP BY 1
-            )
-            SELECT incident_day,
-                   count(*) AS n_purchases,
-                   round(sum(value), 2) AS total_value
-            FROM events p JOIN incidents i ON p.ts BETWEEN i.s AND i.e
-            WHERE p.event_type = 'purchase'
-            GROUP BY incident_day
-        """,
-        "asof_latest_click": """
-            SELECT e.user_id, e.event_id, c.ts AS click_ts, c.value AS click_value
-            FROM (SELECT user_id, ts, event_id FROM events WHERE event_type = 'error') e
-            ASOF LEFT JOIN
-                 (SELECT user_id, ts, value FROM events WHERE event_type = 'click') c
-              ON e.user_id = c.user_id AND e.ts >= c.ts
-        """,
-        "click_attribution": """
-            SELECT s.user_id,
-                   s.event_id AS signup_event_id,
-                   c.event_id AS click_event_id,
-                   c.ts AS click_ts,
-                   c.value AS click_value
-            FROM events s JOIN events c
-              ON s.user_id = c.user_id
-             AND c.ts <= s.ts
-             AND c.ts >= s.ts - INTERVAL 30 MINUTE
-            WHERE s.event_type = 'signup' AND c.event_type = 'click'
-        """,
-        "value_quantiles": """
-            SELECT event_type,
-                   round(quantile_cont(value, 0.25), 4) AS q25,
-                   round(quantile_cont(value, 0.50), 4) AS q50,
-                   round(quantile_cont(value, 0.75), 4) AS q75
-            FROM events GROUP BY event_type
-        """,
-        "events_pivot": """
-            SELECT user_id,
-                   round(sum(value) FILTER (event_type = 'click'), 2) AS click_value,
-                   round(sum(value) FILTER (event_type = 'view'), 2) AS view_value,
-                   round(sum(value) FILTER (event_type = 'purchase'), 2) AS purchase_value,
-                   round(sum(value) FILTER (event_type = 'error'), 2) AS error_value
-            FROM events GROUP BY user_id
-        """,
-        "events_rollup": """
-            SELECT event_type,
-                   CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-                   count(*) AS n_events,
-                   round(sum(value), 2) AS total_value
-            FROM events
-            GROUP BY ROLLUP (event_type, CAST(date_trunc('day', ts) AS TIMESTAMP))
-        """,
-        "q1_pricing_summary": """
-            SELECT l_returnflag, l_linestatus,
-                   round(sum(l_quantity), 2) AS sum_qty,
-                   round(sum(l_extendedprice), 2) AS sum_base_price,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-                   count(*) AS count_order
-            FROM lineitem
-            WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-            GROUP BY l_returnflag, l_linestatus
-        """,
-        "q3_shipping_priority": """
-            SELECT l_orderkey FROM (
-              SELECT l_orderkey, sum(l_extendedprice * (1 - l_discount)) AS revenue
-              FROM lineitem
-              JOIN orders ON l_orderkey = o_orderkey
-              JOIN customer ON o_custkey = c_custkey
-              WHERE c_mktsegment = 'BUILDING'
-              GROUP BY l_orderkey
-            ) ORDER BY revenue DESC, l_orderkey ASC LIMIT 10
-        """,
-        "q5_local_supplier_volume": """
-            SELECT n_name, round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-            FROM lineitem
-            JOIN orders ON l_orderkey = o_orderkey
-            JOIN supplier ON l_suppkey = s_suppkey
-            JOIN customer ON o_custkey = c_custkey AND c_nationkey = s_nationkey
-            JOIN nation ON c_nationkey = n_nationkey
-            JOIN region ON n_regionkey = r_regionkey
-            GROUP BY n_name
-        """,
-        "q6_forecast_revenue": """
-            SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue
-            FROM lineitem
-            WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-              AND l_shipdate <  TIMESTAMP '1997-01-01'
-              AND l_discount BETWEEN 0.04 AND 0.06
-              AND l_quantity < 24
-        """,
-        "q4_order_priority": """
-            SELECT o_orderpriority, count(*) AS order_count
-            FROM orders
-            WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-              AND o_orderdate <  TIMESTAMP '1997-01-01'
-              AND EXISTS (
-                SELECT 1 FROM lineitem
-                WHERE l_orderkey = o_orderkey
-                  AND l_shipdate > o_orderdate + INTERVAL 90 DAY
-              )
-            GROUP BY o_orderpriority
-        """,
-        "q10_returned_items": """
-            SELECT c_custkey, c_name, n_name,
-                   CAST(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DECIMAL(28,4)) AS DOUBLE) AS revenue
-            FROM lineitem
-            JOIN orders ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            JOIN nation ON c_nationkey = n_nationkey
-            WHERE l_returnflag = 'R'
-              AND o_orderdate >= TIMESTAMP '1996-01-01'
-              AND o_orderdate <  TIMESTAMP '1996-04-01'
-            GROUP BY c_custkey, c_name, n_name
-            ORDER BY revenue DESC, c_custkey ASC LIMIT 20
-        """,
-        "q7_volume_shipping": """
-            SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-                   CAST(year(l_shipdate) AS INT) AS l_year,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-            FROM lineitem
-            JOIN orders ON l_orderkey = o_orderkey
-            JOIN supplier ON l_suppkey = s_suppkey
-            JOIN customer ON o_custkey = c_custkey
-            JOIN nation n1 ON s_nationkey = n1.n_nationkey
-            JOIN nation n2 ON c_nationkey = n2.n_nationkey
-            WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-              AND l_shipdate <  TIMESTAMP '1998-01-01'
-              AND ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-                OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-            GROUP BY n1.n_name, n2.n_name, year(l_shipdate)
-        """,
-        "q14_promo_revenue": """
-            SELECT round(100 * sum(CASE WHEN p_type LIKE 'PROMO%'
-                                        THEN l_extendedprice * (1 - l_discount)
-                                        ELSE 0.0 END)
-                         / sum(l_extendedprice * (1 - l_discount)), 4) AS promo_revenue_pct
-            FROM lineitem JOIN part ON l_partkey = p_partkey
-            WHERE l_shipdate >= TIMESTAMP '1996-03-01'
-              AND l_shipdate <  TIMESTAMP '1996-04-01'
-        """,
-        "q8_market_share": """
-            SELECT year(o_orderdate) AS o_year,
-                   round(sum(CASE WHEN sn.n_name = 'NATION_12'
-                                  THEN l_extendedprice * (1 - l_discount)
-                                  ELSE 0.0 END)
-                         / sum(l_extendedprice * (1 - l_discount)), 6) AS mkt_share
-            FROM lineitem
-            JOIN part     ON l_partkey = p_partkey
-            JOIN orders   ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            JOIN nation cn ON c_nationkey = cn.n_nationkey
-            JOIN region   ON cn.n_regionkey = r_regionkey
-            JOIN supplier ON l_suppkey = s_suppkey
-            JOIN nation sn ON s_nationkey = sn.n_nationkey
-            WHERE p_type = 'ECONOMY' AND r_name = 'ASIA'
-              AND o_orderdate >= TIMESTAMP '1996-01-01'
-              AND o_orderdate <  TIMESTAMP '1998-01-01'
-            GROUP BY 1
-        """,
-        "q9_product_profit": """
-            SELECT n_name AS nation,
-                   year(o_orderdate) AS o_year,
-                   CAST(CAST(sum(CAST(l_extendedprice * (1 - l_discount)
-                                      - 0.6 * p_retailprice * l_quantity
-                                      AS DECIMAL(18,4))) AS DECIMAL(28,4)) AS DOUBLE) AS sum_profit
-            FROM lineitem
-            JOIN part     ON l_partkey = p_partkey
-            JOIN supplier ON l_suppkey = s_suppkey
-            JOIN orders   ON l_orderkey = o_orderkey
-            JOIN nation   ON s_nationkey = n_nationkey
-            WHERE p_name LIKE '%red%'
-            GROUP BY 1, 2
-        """,
-        "q12_late_priority": """
-            SELECT l_returnflag,
-                   CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                            THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-                   CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                            THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-            FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-            WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-              AND l_shipdate <  TIMESTAMP '1998-01-01'
-              AND l_shipdate > o_orderdate + INTERVAL 60 DAY
-            GROUP BY l_returnflag
-        """,
-        "q13_customer_distribution": """
-            SELECT c_count, count(*) AS custdist FROM (
-              SELECT c_custkey, count(o_orderkey) AS c_count
-              FROM customer LEFT OUTER JOIN orders
-                ON c_custkey = o_custkey AND o_orderpriority <> '5-LOW'
-              GROUP BY c_custkey
-            ) GROUP BY c_count
-        """,
-        "q15_top_supplier": """
-            WITH rev AS (
-              SELECT l_suppkey AS supplier_no,
-                     CAST(CAST(sum(CAST(l_extendedprice * (1 - l_discount)
-                                        AS DECIMAL(18,4))) AS DECIMAL(28,4)) AS DOUBLE)
-                       AS total_revenue
-              FROM lineitem
-              WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-                AND l_shipdate <  TIMESTAMP '1996-04-01'
-              GROUP BY l_suppkey
-            )
-            SELECT s_suppkey, s_name, total_revenue
-            FROM supplier JOIN rev ON s_suppkey = supplier_no
-            WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
-        """,
-        "q17_small_quantity": """
-            WITH li_brand AS (
-              SELECT l_partkey, l_quantity, l_extendedprice
-              FROM lineitem JOIN part ON l_partkey = p_partkey
-              WHERE p_brand = 'Brand#11'
-            ), avg_q AS (
-              SELECT l_partkey AS ap_key, 0.2 * avg(l_quantity) AS qty_limit
-              FROM li_brand GROUP BY l_partkey
-            )
-            SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly
-            FROM li_brand JOIN avg_q ON l_partkey = ap_key
-            WHERE l_quantity < qty_limit
-        """,
-        "q18_large_volume": """
-            SELECT c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice, total_qty
-            FROM (
-              SELECT l_orderkey, sum(l_quantity) AS total_qty
-              FROM lineitem GROUP BY l_orderkey HAVING sum(l_quantity) > 300
-            ) big
-            JOIN orders   ON big.l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            ORDER BY o_totalprice DESC, o_orderkey ASC
-            LIMIT 100
-        """,
-        "q19_discounted_revenue": """
-            SELECT CAST(CAST(sum(CAST(l_extendedprice * (1 - l_discount)
-                                      AS DECIMAL(18,4))) AS DECIMAL(28,4)) AS DOUBLE) AS revenue
-            FROM lineitem JOIN part ON l_partkey = p_partkey
-            WHERE (p_brand = 'Brand#11' AND p_size BETWEEN 1 AND 5  AND l_quantity BETWEEN 1  AND 11)
-               OR (p_brand = 'Brand#14' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 10 AND 20)
-               OR (p_brand = 'Brand#17' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 20 AND 30)
-        """,
-        "q21_waiting_supplier": """
-            WITH lo AS (
-              SELECT l_orderkey, l_suppkey,
-                     l_shipdate > o_orderdate + INTERVAL 90 DAY AS late
-              FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-              WHERE o_orderstatus = 'F'
-            )
-            SELECT s_name, count(*) AS numwait
-            FROM lo l1 JOIN supplier ON l1.l_suppkey = s_suppkey
-            WHERE l1.late
-              AND EXISTS (SELECT 1 FROM lo l2
-                          WHERE l2.l_orderkey = l1.l_orderkey
-                            AND l2.l_suppkey <> l1.l_suppkey)
-              AND NOT EXISTS (SELECT 1 FROM lo l3
-                              WHERE l3.l_orderkey = l1.l_orderkey
-                                AND l3.l_suppkey <> l1.l_suppkey
-                                AND l3.late)
-            GROUP BY s_name
-            ORDER BY numwait DESC, s_name ASC
-            LIMIT 20
-        """,
-        "q22_idle_balances": """
-            SELECT c_nationkey AS cntrycode,
-                   count(*) AS numcust,
-                   round(sum(c_acctbal), 2) AS totacctbal
-            FROM customer
-            WHERE c_nationkey IN (1, 3, 5, 7, 9, 11, 13)
-              AND c_acctbal > (SELECT avg(c_acctbal) FROM customer
-                               WHERE c_acctbal > 0.0
-                                 AND c_nationkey IN (1, 3, 5, 7, 9, 11, 13))
-              AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-            GROUP BY 1
-        """,
-        "q2_min_cost_supplier": """
-            WITH cost AS (
-              SELECT l_partkey, l_suppkey,
-                     min(l_extendedprice / l_quantity) AS unit_cost
-              FROM lineitem
-              WHERE l_partkey IN (SELECT p_partkey FROM part
-                                  WHERE p_type = 'STANDARD' AND p_size <= 15)
-              GROUP BY l_partkey, l_suppkey
-            ), eur AS (
-              SELECT c.*, s.s_name, s.s_acctbal, n.n_name
-              FROM cost c
-              JOIN supplier s ON c.l_suppkey = s.s_suppkey
-              JOIN nation n ON s.s_nationkey = n.n_nationkey
-              JOIN region r ON n.n_regionkey = r.r_regionkey
-              WHERE r.r_name = 'EUROPE'
-            )
-            SELECT s_acctbal, s_name, n_name, p_partkey, p_name, unit_cost
-            FROM eur
-            JOIN part ON l_partkey = p_partkey
-            WHERE unit_cost = (SELECT min(unit_cost) FROM eur e2
-                               WHERE e2.l_partkey = eur.l_partkey)
-            ORDER BY s_acctbal DESC, n_name ASC, s_name ASC, p_partkey ASC
-            LIMIT 100
-        """,
-        "q11_important_parts": """
-            WITH per_part AS (
-              SELECT l_partkey,
-                     CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DECIMAL(28,4)) AS dec_value
-              FROM lineitem
-              WHERE l_suppkey IN (
-                SELECT s_suppkey FROM supplier JOIN nation
-                  ON s_nationkey = n_nationkey WHERE n_name = 'NATION_3')
-              GROUP BY l_partkey
-            )
-            SELECT l_partkey AS p_partkey,
-                   CAST(dec_value AS DOUBLE) AS part_value
-            FROM per_part
-            WHERE CAST(dec_value AS DOUBLE) >
-                  CAST(CAST((SELECT sum(dec_value) FROM per_part) AS DECIMAL(38,4)) AS DOUBLE) * 0.001
-            ORDER BY part_value DESC, p_partkey ASC
-        """,
-        "q16_supplier_count": """
-            SELECT p_brand, p_type, p_size,
-                   count(DISTINCT l_suppkey) AS supplier_cnt
-            FROM lineitem
-            JOIN part ON l_partkey = p_partkey
-            WHERE p_type <> 'PROMO'
-              AND p_size IN (1, 5, 9, 14, 19, 23, 36, 45)
-              AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier
-                                    WHERE s_acctbal < 0.0)
-            GROUP BY p_brand, p_type, p_size
-            ORDER BY supplier_cnt DESC, p_brand ASC, p_type ASC, p_size ASC
-        """,
-        "q20_dominant_supplier": """
-            WITH red_li AS (
-              SELECT l_partkey, l_suppkey, l_quantity
-              FROM lineitem
-              WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-                AND l_shipdate <  TIMESTAMP '1997-01-01'
-                AND l_partkey IN (SELECT p_partkey FROM part
-                                  WHERE p_name LIKE 'red%')
-            ), per_ps AS (
-              SELECT l_partkey, l_suppkey, sum(l_quantity) AS supp_qty
-              FROM red_li GROUP BY l_partkey, l_suppkey
-            ), per_p AS (
-              SELECT l_partkey, sum(supp_qty) AS total_qty
-              FROM per_ps GROUP BY l_partkey
-            )
-            SELECT s_name, n_name, s_acctbal
-            FROM supplier JOIN nation ON s_nationkey = n_nationkey
-            WHERE s_suppkey IN (
-              SELECT ps.l_suppkey FROM per_ps ps
-              JOIN per_p p ON ps.l_partkey = p.l_partkey
-              WHERE ps.supp_qty > p.total_qty * 0.3)
-            ORDER BY s_name ASC
         """,
         "scd2_history": _SCD2_SQL,
         "scd2_incremental": _SCD2_SQL,
@@ -2760,5 +1735,172 @@ def oracle_sql() -> dict[str, str]:
                      ) AS rank
               FROM q, c WHERE q.query_id <> c.corpus_id
             ) WHERE rank <= 5
+        """,
+    }
+
+
+
+def analytics_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {
+        "topk_users": q_topk_users,
+        "events_windowed": q_events_windowed,
+        "events_sliding": q_events_sliding,
+        "funnel_steps": q_funnel_steps,
+        "cohort_retention": q_cohort_retention,
+        "rolling_value": q_rolling_value,
+        "value_deciles": q_value_deciles,
+        "asof_latest_click": q_asof_latest_click,
+        "click_attribution": q_click_attribution,
+        "range_join_incidents": q_range_join_incidents,
+        "value_quantiles": q_value_quantiles,
+        "events_pivot": q_events_pivot,
+        "events_rollup": q_events_rollup,
+        "json_props": q_json_props,
+    }
+
+
+def analytics_oracle_sql() -> dict[str, str]:
+    return {
+        "topk_users": """
+            SELECT user_id, n_events FROM (
+              SELECT user_id, count(*) AS n_events
+              FROM events GROUP BY user_id
+            ) ORDER BY n_events DESC, user_id ASC LIMIT 10
+        """,
+        "events_windowed": """
+            SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS window_start,
+                   CAST(date_trunc('day', ts) AS TIMESTAMP) + INTERVAL 1 DAY AS window_end,
+                   event_type,
+                   count(*) AS n_events,
+                   round(sum(value), 2) AS total_value
+            FROM events GROUP BY 1, 2, 3
+        """,
+        "events_sliding": """
+            WITH w AS (
+              SELECT CAST(date_trunc('day', ts) AS TIMESTAMP)
+                       - x * INTERVAL 1 DAY AS window_start, value
+              FROM events, (VALUES (0), (1)) t(x)
+            )
+            SELECT window_start,
+                   window_start + INTERVAL 2 DAY AS window_end,
+                   count(*) AS n_events,
+                   round(sum(value), 2) AS total_value
+            FROM w GROUP BY 1, 2
+        """,
+        "funnel_steps": """
+            WITH s1 AS (
+              SELECT user_id, min(ts) AS t FROM events
+              WHERE event_type = 'view' GROUP BY 1
+            ), s2 AS (
+              SELECT e.user_id, min(e.ts) AS t
+              FROM events e JOIN s1 ON e.user_id = s1.user_id AND e.ts >= s1.t
+              WHERE e.event_type = 'click' GROUP BY 1
+            ), s3 AS (
+              SELECT e.user_id, min(e.ts) AS t
+              FROM events e JOIN s2 ON e.user_id = s2.user_id AND e.ts >= s2.t
+              WHERE e.event_type = 'purchase' GROUP BY 1
+            )
+            SELECT 'view' AS stage, 1 AS stage_idx,
+                   (SELECT count(*) FROM s1) AS n_users
+            UNION ALL SELECT 'click', 2, (SELECT count(*) FROM s2)
+            UNION ALL SELECT 'purchase', 3, (SELECT count(*) FROM s3)
+        """,
+        "cohort_retention": """
+            WITH fu AS (
+              SELECT user_id, min(CAST(ts AS DATE)) AS cohort_date
+              FROM events GROUP BY 1
+            ), act AS (
+              SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events
+            )
+            SELECT cohort_date,
+                   CAST(date_diff('day', cohort_date, d) AS INTEGER) AS day_offset,
+                   count(*) AS n_users
+            FROM act JOIN fu USING (user_id)
+            GROUP BY 1, 2
+        """,
+        "rolling_value": """
+            SELECT user_id, event_id,
+                   CAST(CAST(sum(CAST(value AS DECIMAL(18,4))) OVER w
+                             AS DECIMAL(28,4)) AS DOUBLE)
+                   / count(*) OVER w AS rolling_avg
+            FROM events
+            WINDOW w AS (PARTITION BY user_id ORDER BY event_id
+                         ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
+        """,
+        "value_deciles": """
+            WITH totals AS (
+              SELECT user_id,
+                     CAST(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DECIMAL(28,4)) AS DOUBLE) AS total_value
+              FROM events GROUP BY 1
+            ), tiles AS (
+              SELECT total_value,
+                     CAST(NTILE(10) OVER (ORDER BY total_value DESC, user_id ASC) AS INTEGER) AS decile
+              FROM totals
+            )
+            SELECT decile, count(*) AS n_users,
+                   max(total_value) AS top_value,
+                   min(total_value) AS bottom_value
+            FROM tiles GROUP BY 1
+        """,
+        "asof_latest_click": """
+            SELECT e.user_id, e.event_id, c.ts AS click_ts, c.value AS click_value
+            FROM (SELECT user_id, ts, event_id FROM events WHERE event_type = 'error') e
+            ASOF LEFT JOIN
+                 (SELECT user_id, ts, value FROM events WHERE event_type = 'click') c
+              ON e.user_id = c.user_id AND e.ts >= c.ts
+        """,
+        "click_attribution": """
+            SELECT s.user_id,
+                   s.event_id AS signup_event_id,
+                   c.event_id AS click_event_id,
+                   c.ts AS click_ts,
+                   c.value AS click_value
+            FROM events s JOIN events c
+              ON s.user_id = c.user_id
+             AND c.ts <= s.ts
+             AND c.ts >= s.ts - INTERVAL 30 MINUTE
+            WHERE s.event_type = 'signup' AND c.event_type = 'click'
+        """,
+        "range_join_incidents": """
+            WITH incidents AS (
+              SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS incident_day,
+                     min(ts) AS s, max(ts) AS e
+              FROM events WHERE event_type = 'error' GROUP BY 1
+            )
+            SELECT incident_day,
+                   count(*) AS n_purchases,
+                   round(sum(value), 2) AS total_value
+            FROM events p JOIN incidents i ON p.ts BETWEEN i.s AND i.e
+            WHERE p.event_type = 'purchase'
+            GROUP BY incident_day
+        """,
+        "value_quantiles": """
+            SELECT event_type,
+                   round(quantile_cont(value, 0.25), 4) AS q25,
+                   round(quantile_cont(value, 0.50), 4) AS q50,
+                   round(quantile_cont(value, 0.75), 4) AS q75
+            FROM events GROUP BY event_type
+        """,
+        "events_pivot": """
+            SELECT user_id,
+                   round(sum(value) FILTER (event_type = 'click'), 2) AS click_value,
+                   round(sum(value) FILTER (event_type = 'view'), 2) AS view_value,
+                   round(sum(value) FILTER (event_type = 'purchase'), 2) AS purchase_value,
+                   round(sum(value) FILTER (event_type = 'error'), 2) AS error_value
+            FROM events GROUP BY user_id
+        """,
+        "events_rollup": """
+            SELECT event_type,
+                   CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
+                   count(*) AS n_events,
+                   round(sum(value), 2) AS total_value
+            FROM events
+            GROUP BY ROLLUP (event_type, CAST(date_trunc('day', ts) AS TIMESTAMP))
+        """,
+        "json_props": """
+            SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
+                   count(*) AS n,
+                   round(sum(value), 2) AS total_value
+            FROM events GROUP BY 1
         """,
     }

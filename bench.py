@@ -160,16 +160,6 @@ def main() -> None:
         "cdc_lww_salted",
         "cdc_merge_upsert",
         "ivm_group_stats",
-        "q1_pricing_summary",
-        "q3_shipping_priority",
-        "q5_local_supplier_volume",
-        "q18_large_volume",
-        "q21_waiting_supplier",
-        "q2_min_cost_supplier",
-        "funnel_steps",
-        "cohort_retention",
-        "rolling_value",
-        "value_deciles",
         "scd2_incremental",
         "corpus_ngrams",
         "dedup_exact",
@@ -180,11 +170,7 @@ def main() -> None:
         "dedup_groups",
         "text_stats",
         "ann_topk",
-        "events_windowed",
         "sessionize",
-        "asof_latest_click",
-        "events_rollup",
-        "range_join_incidents",
         "scrub_pii",
         "decontaminate",
         "curate_corpus",

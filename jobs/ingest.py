@@ -249,7 +249,7 @@ def cmd_verify(args) -> dict:
     from pyspark.sql import functions as F
 
     from pyorchdb_spark.ingest import invalid_reason, prepare_events
-    from pyorchdb_spark.operators.dedup import lww_dedup, lww_dedup_salted
+    from pyorchdb_spark.operators.dedup import lww_dedup
     from pyorchdb_spark.sources.lake import LakeTable
 
     spark = _spark(args.master, args.shuffle_partitions)
@@ -260,9 +260,8 @@ def cmd_verify(args) -> dict:
     prepared = prepare_events(events, jvm_only=args.jvm_hash).filter(
         invalid_reason().isNull()
     )
-    dedup = lww_dedup_salted if args.salted else lww_dedup
     expected = (
-        dedup(prepared)
+        lww_dedup(prepared)
         .filter(F.col("op") != "delete")
         .select("repo", "path", F.col("content_sha256").alias("_sha_expected"))
     )
@@ -567,7 +566,6 @@ def main(argv=None) -> None:
     v = sub.add_parser("verify")
     v.add_argument("--events", required=True)
     v.add_argument("--table", required=True)
-    v.add_argument("--salted", action="store_true")
     v.add_argument("--roundtrip", action="store_true",
                    help="also round-trip the maintenance surfaces: aggview "
                         "refresh vs full recompute, ANALYZE stats, rollback/"

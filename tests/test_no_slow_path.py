@@ -37,5 +37,5 @@ def test_pandas_udfs_are_vectorized():
     """Every UDF in the engine is a pandas_udf / mapInPandas (Arrow)."""
     udfs = open(os.path.join(PKG, "functions", "udfs.py")).read()
     assert udfs.count("@F.pandas_udf") >= 3
-    mm = open(os.path.join(PKG, "operators", "multimodal.py")).read()
-    assert "mapInPandas" in mm
+    comp = open(os.path.join(PKG, "operators", "components.py")).read()
+    assert ".mapInPandas(" in comp
