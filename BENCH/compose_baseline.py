@@ -109,10 +109,8 @@ construction, checkable in the plans):
   resource this box cannot scale.
 
 Deviations disclosed: single box (shared DRAM, shared page cache);
-pandas-UDF tasks co-schedule a python worker per JVM task thread (the
-`jvm-hash` configs isolate this — byte-identical results, zero python
-workers); best-of-2 under +/-30-130% host noise is the largest error
-source.
+best-of-2 under +/-30-130% host noise is the largest error source. The
+replay path runs no python worker (prepare is built-in expressions).
 
 Reproduce: `python BENCH/run_scaling.py --n-events 16000000 --runs 2`
 (8 vs 32) and `... --low 2 --high 8` (2 vs 8), then

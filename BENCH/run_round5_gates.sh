@@ -13,7 +13,7 @@ step() { echo "=== $(date +%H:%M:%S) $1 ===" >&2; }
 # 1. throughput scaling matrix, 16M, interleaved best-of-2
 step "scaling matrix"
 python BENCH/run_scaling.py --n-events 16000000 --runs 2 \
-  --configs udf_single,jvm_single,udf_multi,mor_multi,mor_thin,udf_multi_thin,auto_salt_multi,mor_fixed64 \
+  --configs udf_single,udf_multi,mor_multi,mor_thin,udf_multi_thin,auto_salt_multi,mor_fixed64 \
   > "$OUT/scaling.json" 2> "$OUT/scaling.log"
 
 # 2. shuffle byte accounting, thin-content generator rows (reps 2)

@@ -8,8 +8,8 @@ Protocol (BASELINE.md "Sandbox scaling protocol", declared round 1):
 2. package the engine as dist/engine.zip and run the SAME replay job via
    ``spark-submit --py-files dist/engine.zip jobs/ingest.py replay`` at
    ``local[8]`` (N) and ``local[32]`` (4N), fresh JVM each, for every
-   config in the matrix: {pandas-UDF, jvm-hash} x {single-merge,
-   multi-batch};
+   config in the matrix: {single-merge, multi-batch} x {CoW, MoR,
+   stream} x shuffle width;
 3. interleave the levels (8,32,8,32,...) and take best-of-N per level —
    host noise on this shared box is +/-30% between identical runs;
 4. report events/sec at both + scaling efficiency
@@ -173,34 +173,36 @@ def steal_share(before: tuple[int, int] | None, after: tuple[int, int] | None) -
 
 CONFIGS = [
     # (key, label, extra replay flags)
-    ("udf_single", "pandas-UDF sha256, single MERGE", ["--coalesce-batches"]),
-    ("jvm_single", "JVM sha2 (no python workers), single MERGE", ["--coalesce-batches", "--jvm-hash"]),
-    ("udf_multi", "pandas-UDF sha256, incremental 4-batch replay", []),
+    # Every config runs the engine's one prepare (built-in sha2 + ICU NFC,
+    # no Python worker); the config keys keep their historical udf_ names.
+    ("udf_single", "single MERGE", ["--coalesce-batches"]),
+    ("udf_multi", "incremental 4-batch replay", []),
     # Constant shuffle width at BOTH levels — the cluster-faithful shape:
     # on a real cluster the shuffle layout is sized to the DATA and stays
     # fixed while executors are added; deriving width from the core count
     # (the default) conflates plan shape with slot count.
-    ("udf_fixed64", "pandas-UDF sha256, single MERGE, shuffle width fixed at 64",
+    ("udf_fixed64", "single MERGE, shuffle width fixed at 64",
      ["--coalesce-batches", "--shuffle-partitions", "64"]),
-    ("jvm_fixed64", "JVM sha2, single MERGE, shuffle width fixed at 64",
-     ["--coalesce-batches", "--jvm-hash", "--shuffle-partitions", "64"]),
     # merge-on-read incremental replay — the engine's fastest (and
     # default-recommended) path since round 3: delta writes ∝ batch +
-    # partial compaction, measured 2.3x CoW at 16M events
-    ("mor_multi", "pandas-UDF sha256, incremental 4-batch MoR replay",
+    # partial compaction, measured 2.3x CoW at 16M events.
+    # The official 1v4 rows (mor_multi 0.817/0.852/0.882, mor_stream 0.799;
+    # BENCH/r5c/cluster_1v4*) were measured on the pandas-UDF prepare, so
+    # the next 1v4 run measures the built-in one.
+    ("mor_multi", "incremental 4-batch MoR replay",
      ["--mor"]),
-    ("mor_fixed64", "pandas-UDF sha256, incremental MoR replay, shuffle width fixed at 64",
+    ("mor_fixed64", "incremental MoR replay, shuffle width fixed at 64",
      ["--mor", "--shuffle-partitions", "64"]),
     # adaptive skew strategy (round 4): one sampled key-frequency job
     # picks plain/salted + n_salts; on the generator's near-uniform keys
     # it must match plain-replay throughput (static always-on salting
     # measured a 1.5x penalty here in round 3)
-    ("auto_salt_multi", "pandas-UDF sha256, incremental 4-batch replay, --salt auto",
+    ("auto_salt_multi", "incremental 4-batch replay, --salt auto",
      ["--salt", "auto"]),
     # MoR + adaptive salt: the apples-to-apples skew comparison against
     # mor_multi (same sink path, only the dedup strategy differs) — the
     # pair the --hot-share matrix reads
-    ("mor_auto", "pandas-UDF sha256, incremental 4-batch MoR replay, --salt auto",
+    ("mor_auto", "incremental 4-batch MoR replay, --salt auto",
      ["--mor", "--salt", "auto"]),
     # thin-row LWW shuffle pruning (round 5, VERDICT r4 next #4): prune
     # each batch to its winner tuples with a column-pruned map-combined
@@ -217,11 +219,11 @@ CONFIGS = [
     # rather than the batch driver loop — ties the streaming surface to
     # the N-vs-4N criterion. --thin off: stream mode refuses auto by
     # design (per-micro-batch dup ratio is unobservable up front).
-    ("mor_stream", "pandas-UDF sha256, streaming tail (availableNow), MoR micro-batches",
+    ("mor_stream", "streaming tail (availableNow), MoR micro-batches",
      ["--mor", "--mode", "stream", "--max-files-per-trigger", "4", "--thin", "off"]),
-    ("mor_thin", "pandas-UDF sha256, incremental 4-batch MoR replay, --thin forced",
+    ("mor_thin", "incremental 4-batch MoR replay, --thin forced",
      ["--mor", "--thin", "thin"]),
-    ("udf_multi_thin", "pandas-UDF sha256, incremental 4-batch replay, --thin forced",
+    ("udf_multi_thin", "incremental 4-batch replay, --thin forced",
      ["--thin", "thin"]),
 ]
 
@@ -245,7 +247,7 @@ def main() -> None:
                         "clause (run with --configs mor_multi,"
                         "auto_salt_multi to compare plain vs adaptive salt "
                         "under skew at both cluster sizes)")
-    p.add_argument("--configs", default="udf_single,jvm_single,udf_multi,udf_fixed64,jvm_fixed64")
+    p.add_argument("--configs", default="udf_single,udf_multi,udf_fixed64")
     p.add_argument("--cluster", action="store_true",
                    help="multi-JVM cluster emulation: masters become "
                         "local-cluster[E,C,M] with SEPARATE executor JVMs "
@@ -427,11 +429,11 @@ Deviations from an ideal cluster measurement, disclosed:
    bus; a real 4N-executor cluster brings 4x DRAM bandwidth and 4x NVMe.
    Per-task CPU time for identical map work inflates ~2.6x going 2->8
    concurrent slots (round-1 task metrics) — the dominant ceiling.
-2. **pandas-UDF tasks co-schedule a python worker per JVM task thread**
-   (pipelined Arrow), so `local[N]` really runs ~2N runnable processes.
-   The `--jvm-hash` config isolates this: identical per-row sha256 state
-   (cross-checked byte-identical in tests/test_cli.py), zero python
-   workers.
+2. **No python workers on the replay path**: prepare (sha256 + NFC
+   path normalization) is built-in JVM expressions, so `local[N]` runs
+   N task threads and nothing beside them. Rows measured before that
+   change (the round-5 1v4 rows) ran a pandas-UDF prepare, which
+   co-scheduled one python worker per task thread.
 3. **Best-of-{a.runs} on interleaved runs** on byte-identical input —
    noisy-neighbor variance is the largest single error source.
 

@@ -165,13 +165,12 @@ def cmd_replay(args) -> dict:
 
     n_events = events.count()  # input size (not timed as apply work)
     if args.warmup:
-        # untimed steady-state warmup: spawns the python UDF workers
-        # (pandas import is a per-session fixed cost) and faults the input
-        # into page cache, so the timed run measures events/sec of the
-        # engine, not session bring-up.
+        # untimed steady-state warmup: loads the prepare expressions' JVM
+        # classes (ICU, sha2) and faults the input into page cache, so the
+        # timed run measures events/sec of the engine, not session bring-up.
         from pyorchdb_spark.ingest import prepare_events
 
-        prepare_events(events, jvm_only=args.jvm_hash).write.format("noop").mode("overwrite").save()
+        prepare_events(events).write.format("noop").mode("overwrite").save()
     sb0 = _shuffle_totals(spark)
     t0 = time.time()
     if args.mode == "stream":
@@ -205,8 +204,7 @@ def cmd_replay(args) -> dict:
         thin: bool | str = {"off": False, "thin": True, "auto": "auto"}[args.thin]
         strategy = {}
         replay(lake, ledger, events, salted=salted, num_files=args.num_files,
-               jvm_only_udfs=args.jvm_hash, mor=args.mor, thin_shuffle=thin,
-               strategy_out=strategy)
+               mor=args.mor, thin_shuffle=thin, strategy_out=strategy)
     dt = time.time() - t0
     sb1 = _shuffle_totals(spark)
     shuffle = (
@@ -257,9 +255,7 @@ def cmd_verify(args) -> dict:
     lake = LakeTable(spark, args.table)
 
     t0 = time.time()
-    prepared = prepare_events(events, jvm_only=args.jvm_hash).filter(
-        invalid_reason().isNull()
-    )
+    prepared = prepare_events(events).filter(invalid_reason().isNull())
     expected = (
         lww_dedup(prepared)
         .filter(F.col("op") != "delete")
@@ -555,8 +551,6 @@ def main(argv=None) -> None:
                    help="merge-on-read delta commits: per-batch write cost "
                         "proportional to the batch (not the table); reads "
                         "resolve LWW across base+delta until self-compaction")
-    r.add_argument("--jvm-hash", action="store_true",
-                   help="use built-in sha2/regexp instead of pandas UDFs (scaling isolation)")
     r.add_argument("--shuffle-partitions", type=int, default=None,
                    help="hold shuffle width constant across parallelism levels "
                         "(cluster-faithful scaling: same plan/layout, more slots; "
@@ -570,7 +564,6 @@ def main(argv=None) -> None:
                    help="also round-trip the maintenance surfaces: aggview "
                         "refresh vs full recompute, ANALYZE stats, rollback/"
                         "RESTORE sha-equality + resync horizon guard")
-    v.add_argument("--jvm-hash", action="store_true")
     v.add_argument("--shuffle-partitions", type=int, default=None)
     v.add_argument("--master", default=None)
 

@@ -99,7 +99,7 @@ def lang_id(col) -> Column:
 
 
 def content_fingerprint(col) -> Column:
-    """Whole-document fingerprint: sha256 of NFC text (cheap, built-in)."""
+    """Whole-document fingerprint: sha256 of the raw text, as DuckDB's ``sha256(text)``."""
     return F.sha2(col, 256)
 
 

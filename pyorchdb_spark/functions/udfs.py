@@ -1,11 +1,11 @@
-"""Vectorized pandas/Arrow UDFs — the engine's only Python-side compute.
+"""Vectorized pandas/Arrow UDFs: board rows and the tests' cross-check.
 
-The input_hint (BASELINE.json:15) mandates: DataFrame ops + vectorized
-pandas/Arrow UDFs, **no per-row Python**. The reference's equivalent
-surface is arbitrary pandas per table (``clean_db``,
-PyOrchDB/main.py:267-274); here it is exactly three narrow, typed,
-Arrow-batched functions. ``F.sha2`` / built-in expressions are used as
-independent cross-checks in tests (SURVEY.md section 2.8 F9).
+The input_hint (BASELINE.json:15) mandates DataFrame ops + vectorized
+pandas/Arrow UDFs, **no per-row Python**. The ingest hot path calls none
+of these: ``ingest.prepare_events`` uses ``F.sha2`` and ICU NFC built-ins.
+These three back the ``normalize_paths``/``sha256_udf``/``lang_of_path``
+board rows, and ``_norm_one``/``sha256_content`` independently cross-check
+the engine's built-ins in tests (SURVEY.md section 2.8 F9).
 """
 
 from __future__ import annotations

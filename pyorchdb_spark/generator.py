@@ -36,6 +36,10 @@ _M = 1_000_003
 _EXTS = [".py", ".md", ".rs", ".ts", ".java"]
 _LANGS = ["python", "markdown", "rust", "typescript", "java"]
 _DIRS = ["src", "lib", "core", "util", "api", "cli", "tests", "docs"]
+# nfc_noise spellings, (composed, decomposed) by index: Latin acute/grave
+# and Hangul L+V, whose NFC is the same in every Unicode version
+_NFC = ["\u00e9", "\u00e8", "\u00e1", "\uac00", "\ub098"]
+_NFD = ["e\u0301", "e\u0300", "a\u0301", "\u1100\u1161", "\u1102\u1161"]
 
 
 def _u(col, salt: str):
@@ -61,6 +65,7 @@ def change_events(
     path_mod: int = 997,
     key_space: str = "grid",
     hot_share: float = 0.0,
+    nfc_noise: float = 0.0,
 ) -> DataFrame:
     """Build the deterministic change-event DataFrame.
 
@@ -109,7 +114,17 @@ def change_events(
     ext = F.element_at(F.lit(_EXTS), (ext_idx + 1).cast("int"))
     lang = F.element_at(F.lit(_LANGS), (ext_idx + 1).cast("int"))
 
-    # ~5% of paths carry "./" noise — exercises normalize_path.
+    if nfc_noise > 0.0:
+        # non-NFC producers: a deterministic ``nfc_noise`` share of keys gets
+        # an accented dir suffix, spelled composed or decomposed per event,
+        # so one key reaches the log in both forms. Default 0.0 leaves the
+        # pinned-bit-identical grid untouched.
+        pick = (F.pmod(F.xxhash64(key_id, F.lit("nfc_ch")), F.lit(len(_NFC))) + 1).cast("int")
+        nfd = F.pmod(F.xxhash64(F.col("id"), F.lit("nfd")), F.lit(2)) == 0
+        accent = F.element_at(F.when(nfd, F.lit(_NFD)).otherwise(F.lit(_NFC)), pick)
+        dir2 = F.when(_u(key_id, "nfc") < nfc_noise, F.concat(dir2, F.lit("_"), accent)).otherwise(dir2)
+
+    # ~5% of paths carry "./" noise — exercises path normalization.
     raw_path = F.concat(
         F.when(F.pmod(F.xxhash64(key_id, F.lit("noise")), F.lit(20)) == 0, F.lit("./")).otherwise(F.lit("")),
         dir1, F.lit("/"), dir2, F.lit("/mod_"),

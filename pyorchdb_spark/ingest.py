@@ -6,7 +6,7 @@ a single declarative Catalyst plan per batch:
 
     raw events
       → marker gate (skip committed batch_ids — one marker-file check)
-      → normalize_path / sha256_content (vectorized pandas UDFs)
+      → prepare: ICU NFC + path rules, sha256 (built-in expressions, no Python)
       → C3 quarantine predicate (invalid rows never merge)
       → LWW dedup (salted two-stage when skew expected)
       → MERGE INTO lake table
@@ -30,7 +30,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from pyorchdb_spark.functions.udfs import normalize_path, sha256_content
 from pyorchdb_spark.sources.catalog import BatchLedger
 from pyorchdb_spark.sources.lake import RETAIN_ALL_TOMBSTONES, LakeTable, Manifest, bucket_expr
 
@@ -75,31 +74,25 @@ def invalid_reason(keys=("repo", "path"), watermark_seq: int | None = None):
 def prepare_events(events: DataFrame, jvm_only: bool = False) -> DataFrame:
     """Curation: normalize paths, stamp content sha256 (engine columns).
 
-    The sha256 column is the replay invariant (BASELINE.json:15); path
-    normalization keeps key identity stable across noisy producers
-    (SURVEY.md section 2.10). Both are Arrow-vectorized — no per-row
-    Python anywhere in the plan.
-
-    ``jvm_only=True`` swaps in the equivalent built-in expressions
-    (``F.sha2``, regexp chain — byte-identical results on ASCII paths,
-    cross-checked in tests). Used by the scaling bench to isolate engine
-    scalability from python-worker co-scheduling: each pandas-UDF task
-    occupies a JVM thread *plus* a python worker, so on one box a "task
-    slot" silently consumes ~2 cores, flattening slot-count scaling runs.
+    sha256 is the replay invariant (BASELINE.json:15); path normalization
+    (NFC, strip leading ``./``, collapse ``//``, drop a trailing ``/``)
+    keeps key identity stable across noisy producers (SURVEY.md 2.10).
+    Both are built-in expressions, so no Python worker runs. NFC is ICU's
+    (icu4j ships in pyspark's jars), and so is its Unicode version; ICU throws
+    on the null that ``java_method`` passes through, hence the guard.
     """
-    if jvm_only:
-        norm = F.regexp_replace(
-            F.regexp_replace(F.regexp_replace(F.col("path"), r"^(\./)+", ""), r"/{2,}", "/"),
-            r"(.)/$",
-            "$1",
-        )
-        sha = F.sha2("content", 256)
-    else:
-        norm = normalize_path("path")
-        sha = sha256_content("content")
+    # jvm_only is ignored: perfbench's udf_probes is its only caller
+    icu_nfc = F.java_method(F.lit("com.ibm.icu.text.Normalizer"), F.lit("compose"), "path", F.lit(False))
+    nfc = F.when(F.col("path").isNotNull(), icu_nfc)
+    norm = F.regexp_replace(
+        F.regexp_replace(F.regexp_replace(nfc, r"^(\./)+", ""), r"/{2,}", "/"),
+        # (?s) and \z: a newline in a path is just a character, as in _norm_one
+        r"(?s)(.)/\z",
+        "$1",
+    )
     return events.withColumn("path", norm).withColumn(
         "content_sha256",
-        F.when(F.col("op") == "delete", F.lit(None).cast("string")).otherwise(sha),
+        F.when(F.col("op") == "delete", F.lit(None).cast("string")).otherwise(F.sha2("content", 256)),
     )
 
 
@@ -112,7 +105,6 @@ def apply_batch(
     salted: bool = False,
     n_salts: int = 16,
     num_files: int | None = None,
-    jvm_only_udfs: bool = False,
     mor: bool = False,
     rows_hint: int | None = None,
     thin_shuffle: bool = False,
@@ -155,7 +147,7 @@ def apply_batch(
     aqe_prev = conf.get("spark.sql.adaptive.enabled", "true")
     conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        prepared = prepare_events(events, jvm_only=jvm_only_udfs)
+        prepared = prepare_events(events)
         m = lake.manifest()
         reason = invalid_reason(
             lake.keys, watermark_seq=m.tombstone_watermark if m is not None else None
@@ -211,12 +203,12 @@ def _merge_scanned(
 ) -> tuple[Manifest, list, int]:
     """Metrics scan, then merge: CoW batches and a table's first commit.
 
-    ONE key-columns-only pass over the batch (the sha UDF is column-pruned
+    ONE key-columns-only pass over the batch (the sha2 is column-pruned
     out) computes, together: lineage metrics, C3 quarantine detection, AND
     — for the CoW path — the affected-bucket hit set per manifest
     generation that MERGE needs for file pruning. MoR commits touch no
     base file, so they skip the hit aggs. The batch is recomputed, not
-    cached: Catalyst column-prunes the pandas UDFs out of this scan, so
+    cached: Catalyst column-prunes sha256 out of this scan, so
     only the data-file write evaluates sha256 over content."""
     gens = [] if mor else LakeTable.bucket_gens(m)
     metrics = ledger.collect_partition_metrics(
@@ -378,7 +370,6 @@ def replay(
     salted: bool | str = False,
     n_salts: int = 16,
     num_files: int | None = None,
-    jvm_only_udfs: bool = False,
     mor: bool = False,
     mor_compact_factor: int = 8,
     tombstone_lag_batches: int | None = None,
@@ -451,7 +442,6 @@ def replay(
             salted=salted,
             n_salts=n_salts,
             num_files=num_files,
-            jvm_only_udfs=jvm_only_udfs,
             mor=mor,
             # the previous batch's row count sizes the delta generation
             # (replay feeds are near-constant batch size, and the hint

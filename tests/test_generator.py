@@ -129,3 +129,25 @@ def test_generator_hot_share_collapses_events_onto_one_key(spark):
     a = change_events(spark, 2_000, hot_share=0.3, num_partitions=2)
     b = change_events(spark, 2_000, hot_share=0.3, num_partitions=7)
     assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+
+
+def test_generator_nfc_noise_spells_one_key_two_ways(spark):
+    import unicodedata
+
+    ev = change_events(spark, 3_000, nfc_noise=0.3)
+    paths = [r["path"] for r in ev.select("path").distinct().collect()]
+    non_nfc = [p for p in paths if unicodedata.normalize("NFC", p) != p]
+    nfc_twins = {unicodedata.normalize("NFC", p) for p in non_nfc} & set(paths)
+    # decomposed spellings exist, and keys reach the log in both forms
+    assert non_nfc and nfc_twins
+    # every non-NFC spelling is one of the version-stable pairs: Latin
+    # acute/grave or Hangul L+V jamo
+    marks = {c for p in non_nfc for c in p if not c.isascii()}
+    assert marks <= {"\u0301", "\u0300", "\u1100", "\u1102", "\u1161"}
+    # default stays the pinned grid: bit-identical to nfc_noise=0
+    base = change_events(spark, 2_000)
+    zero = change_events(spark, 2_000, nfc_noise=0.0)
+    assert base.exceptAll(zero).isEmpty() and zero.exceptAll(base).isEmpty()
+    a = change_events(spark, 2_000, nfc_noise=0.3, num_partitions=2)
+    b = change_events(spark, 2_000, nfc_noise=0.3, num_partitions=7)
+    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()

@@ -451,3 +451,110 @@ def test_resolve_full_sync_empty_source_is_noop(spark):
     synced = resolve_full_sync(target, empty, keys=("repo", "path"), seq_col="seq")
     rows = {(r["path"], r["op"], r["content"]) for r in synced.collect()}
     assert rows == {("a", "upsert", "x"), ("b", "upsert", "y")}
+
+
+# ---------- one prepare definition: NFC key identity ----------
+
+
+def _cmd_verify_as_perfbench(spark, events_path, table):
+    """``jobs/ingest.py verify`` called exactly as perfbench's correctness
+    gate calls it (its own loader and argument Namespace)."""
+    from perfbench.inputs import Log
+    from perfbench.workloads import load_verify, verify
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    log = Log(path=events_path, batch_ids=[], events=0, bytes=0, files_per_batch=0)
+    return verify(load_verify(repo, spark), log, table)
+
+
+def _norm_oracle_sig(pdf):
+    from pyorchdb_spark.functions.udfs import _norm_one
+
+    pdf = pdf.copy()
+    pdf["path"] = pdf["path"].map(_norm_one)
+    return state_signature(expected_final_state(pdf))
+
+
+def _replay_stream_verify(spark, tmp_path, log_dir):
+    """MoR batch replay and the MoR streaming tail over one log; returns
+    both tables' signatures and verify's report on the batch table."""
+    from pyorchdb_spark.streaming.tail import run_tail_to_completion
+
+    events = spark.read.parquet(log_dir)
+    root = str(tmp_path / "replay")
+    lake = LakeTable(spark, root)
+    replay(lake, BatchLedger(spark, root), events, mor=True)
+    sroot = str(tmp_path / "tail")
+    slake = LakeTable(spark, sroot)
+    run_tail_to_completion(
+        spark, log_dir, slake, BatchLedger(spark, sroot), str(tmp_path / "ckpt"),
+        mor=True, max_files_per_trigger=1,
+    )
+    return _sig(lake.snapshot()), _sig(slake.snapshot()), _cmd_verify_as_perfbench(spark, log_dir, root)
+
+
+def test_nfc_split_is_one_key_in_replay_tail_and_verify(spark, tmp_path):
+    """One repo writes the same path decomposed and composed at different
+    seqs (and deletes one key in the other spelling): batch replay, the
+    tail and verify's global-LWW plan must all see one key per NFC form."""
+    from pyorchdb_spark.streaming.tail import EVENT_SCHEMA_DDL
+
+    cafe_nfd, cafe_nfc = "src/cafe\u0301.py", "src/caf\u00e9.py"
+    ga_nfd, ga_nfc = "\u1100\u1161.rs", "\uac00.rs"
+    rows = [
+        ("r", cafe_nfd, "c1", 1, "upsert", "python", "v1", "b0", None, None),
+        ("r", cafe_nfc, "c2", 2, "upsert", "python", "v2", "b0", None, None),
+        ("r", ga_nfd, "c3", 3, "upsert", "rust", "h1", "b0", None, None),
+        ("r", "plain.py", "c4", 4, "upsert", "python", "p1", "b0", None, None),
+        ("r", cafe_nfd, "c5", 5, "upsert", "python", "v3", "b1", None, None),
+        ("r", ga_nfc, "c6", 6, "delete", "rust", None, "b1", None, None),
+    ]
+    ev = spark.createDataFrame(rows, EVENT_SCHEMA_DDL)
+    log_dir = str(tmp_path / "log")
+    ev.write.partitionBy("batch_id").parquet(log_dir)
+
+    exp = _norm_oracle_sig(ev.toPandas())
+    assert {(r, p) for r, p, _ in exp} == {("r", cafe_nfc), ("r", "plain.py")}
+    batch_sig, tail_sig, v = _replay_stream_verify(spark, tmp_path, log_dir)
+    assert batch_sig == exp
+    assert tail_sig == exp
+    assert v["sha256_equal"] is True, v
+    assert v["keys"] == 2
+
+
+def test_generated_nfc_noise_replay_is_sha_equal(spark, tmp_path):
+    """The generator's non-NFC variant through batch replay, the tail and
+    verify: sha-equal to the pandas oracle over ``_norm_one`` paths."""
+    from pyorchdb_spark.generator import write_events
+
+    ev = change_events(spark, 3_000, batch_size=1_000, nfc_noise=0.3)
+    log_dir = str(tmp_path / "log")
+    write_events(ev, log_dir)
+    exp = _norm_oracle_sig(spark.read.parquet(log_dir).toPandas())
+    batch_sig, tail_sig, v = _replay_stream_verify(spark, tmp_path, log_dir)
+    assert batch_sig == exp
+    assert tail_sig == exp
+    assert v["sha256_equal"] is True, v
+
+
+def test_engine_nfc_is_icu_not_python(spark):
+    """Pin one string from each side of the Unicode-version gap. The
+    engine's NFC definition is ICU's (pyspark ships icu4j 77, Unicode 16),
+    not the driver's Python's (3.11 ships Unicode 14.0)."""
+    import unicodedata
+
+    from pyorchdb_spark.functions.udfs import _norm_one
+
+    kirat_rai = "x/\U00016D67\U00016D67.py"  # Unicode 16 composes the pair
+    cases = {
+        "cafe\u0301.py": "caf\u00e9.py",
+        "\u1100\u1161.rs": "\uac00.rs",
+        kirat_rai: "x/\U00016D68.py",
+    }
+    df = spark.createDataFrame(
+        [(k, i, "upsert", "x") for i, k in enumerate(cases)], "path string, seq long, op string, content string"
+    )
+    got = {r["seq"]: r["path"] for r in prepare_events(df).collect()}
+    assert [got[i] for i in range(len(cases))] == list(cases.values())
+    python_unicode = tuple(int(x) for x in unicodedata.unidata_version.split("."))
+    assert _norm_one(kirat_rai) == (kirat_rai if python_unicode < (16,) else cases[kirat_rai])

@@ -39,3 +39,23 @@ def test_pandas_udfs_are_vectorized():
     assert udfs.count("@F.pandas_udf") >= 3
     comp = open(os.path.join(PKG, "operators", "components.py")).read()
     assert ".mapInPandas(" in comp
+
+
+def test_prepare_runs_no_python(spark):
+    """The ingest hot path's prepare (NFC path + sha256) executes as
+    built-in expressions, with no Python evaluation node in its physical
+    plan, and its path rules equal the Python cross-check ``_norm_one``."""
+    from pyorchdb_spark.functions.udfs import _norm_one
+    from pyorchdb_spark.ingest import prepare_events
+
+    paths = ["./a//b.py", "././/x//", "/", "a\n/", "a/\n", "c.py"]
+    df = spark.createDataFrame(
+        [("r", p, i, "upsert", "x") for i, p in enumerate(paths)] + [("r", "d.py", 9, "delete", None)],
+        "repo string, path string, seq long, op string, content string",
+    )
+    prepared = prepare_events(df)
+    prepared.write.format("noop").mode("overwrite").save()
+    plan = prepared._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+    got = {r["seq"]: r["path"] for r in prepared.collect()}
+    assert [got[i] for i in range(len(paths))] == [_norm_one(p) for p in paths]

@@ -93,3 +93,22 @@ def test_quarantined_seq_does_not_poison_watermark(spark, tmp_path):
     res2 = replay(lake, ledger, late, num_files=2)
     assert res2[0].rows_rejected == 0
     assert lake.snapshot().filter(F.col("path") == "fresh.py").count() == 1
+
+
+def test_null_path_and_null_content_delete_survive_prepare(spark, tmp_path):
+    """The ICU NFC call in prepare is null-guarded: a null path and a
+    null-content delete reach the apply without an NPE, and the null path
+    is quarantined like any missing key."""
+    root = str(tmp_path / "nulls")
+    lake, ledger = LakeTable(spark, root), BatchLedger(spark, root)
+    rows = [
+        ("r", "a.py", "c1", 1, "upsert", "python", "x", "b0"),
+        ("r", None, "c2", 2, "upsert", "python", "y", "b0"),
+        ("r", "b.py", "c3", 3, "upsert", "python", "z", "b0"),
+        ("r", "b.py", "c4", 4, "delete", "python", None, "b0"),
+    ]
+    res = apply_batch(lake, ledger, spark.createDataFrame(rows, DDL), "b0", num_files=1)
+    assert res.rows_rejected == 1
+    assert [r["path"] for r in lake.snapshot().collect()] == ["a.py"]
+    rej = ledger.rejects().collect()
+    assert [(r["path"], r["reject_reason"]) for r in rej] == [(None, "null_or_empty_key")]
