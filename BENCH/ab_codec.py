@@ -63,7 +63,7 @@ def replay(zpath: str, events: str, master: str, codec: str, tag: str) -> dict:
         "--conf", f"spark.local.dir={os.path.join(SCRATCH, 'tmp')}",
         "--conf", f"spark.io.compression.codec={codec}",
         "--py-files", zpath, os.path.join(REPO, "jobs", "ingest.py"),
-        "replay", "--events", events, "--table", work, "--mor",
+        "replay", "--events", events, "--table", work,
         "--master", master,
     ]
     out = subprocess.run(cmd, capture_output=True, text=True, timeout=3600)

@@ -57,7 +57,7 @@ def replay(zpath: str, job: str, events: str, master: str, tag: str) -> dict:
         *exec_conf,
         "--conf", f"spark.local.dir={os.path.join(SCRATCH, 'tmp')}",
         "--py-files", zpath, job,
-        "replay", "--events", events, "--table", work, "--mor",
+        "replay", "--events", events, "--table", work,
         "--master", master,
     ]
     out = subprocess.run(cmd, capture_output=True, text=True, timeout=3600)

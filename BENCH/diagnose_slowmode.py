@@ -55,7 +55,7 @@ def run_replay(zpath: str, events_dir: str, master: str, tag: str,
         *ev_conf,
         "--py-files", zpath,
         os.path.join(REPO, "jobs", "ingest.py"),
-        "replay", "--events", events_dir, "--table", work, "--mor",
+        "replay", "--events", events_dir, "--table", work,
         "--master", master,
     ]
     out = subprocess.run(cmd, capture_output=True, text=True, timeout=3600)

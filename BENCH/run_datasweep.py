@@ -42,8 +42,8 @@ def main() -> None:
     p.add_argument("--sizes", default="4000000,16000000,64000000")
     p.add_argument("--cores", type=int, default=32)
     p.add_argument("--content-max-reps", type=int, default=2)
-    p.add_argument("--flags", default="--mor",
-                   help="replay flags, comma-separated (default: --mor)")
+    p.add_argument("--flags", default="",
+                   help="extra replay flags, comma-separated (default: none)")
     p.add_argument("--out", default=None, help="write the summary JSON here too")
     a = p.parse_args()
 

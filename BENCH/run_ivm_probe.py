@@ -85,18 +85,18 @@ def main() -> None:
             runs.append(round(fn(), 3))
         timings[label] = min(runs)
 
-    # one replayed base lake per variant run (MoR — the fast commit path)
+    # one replayed base lake per variant run
     def fresh_lake(tag):
         root = os.path.join(work, tag)
         shutil.rmtree(root, ignore_errors=True)
         lake = LakeTable(spark, root)
-        lake.merge(with_bytes(initial), batch_id="init", mor=True, num_files=args.num_files)
+        lake.merge(with_bytes(initial), batch_id="init", num_files=args.num_files)
         return lake
 
     def run_merge_only():
         lake = fresh_lake("merge_only")
         t0 = time.time()
-        lake.merge(with_bytes(batch), batch_id="b1", mor=True)
+        lake.merge(with_bytes(batch), batch_id="b1")
         return time.time() - t0
 
     maintained = {}
@@ -108,7 +108,7 @@ def main() -> None:
         ).localCheckpoint(eager=True)
         t0 = time.time()
         agg = maintain_on_lake_merge(
-            lake, with_bytes(batch), prev, "lang", ["bytes"], batch_id="b1", mor=True
+            lake, with_bytes(batch), prev, "lang", ["bytes"], batch_id="b1"
         )
         rows = {r["grp"]: (r["n_rows"], r["sum_bytes"]) for r in agg.collect()}
         dt = time.time() - t0
@@ -121,7 +121,7 @@ def main() -> None:
         return time.time() - t0
 
     snap_lake = fresh_lake("snapshot_reagg")
-    snap_lake.merge(with_bytes(batch), batch_id="b1", mor=True)
+    snap_lake.merge(with_bytes(batch), batch_id="b1")
 
     def run_reagg_snapshot():
         t0 = time.time()

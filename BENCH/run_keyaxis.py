@@ -69,7 +69,7 @@ def main() -> None:
                         "grid:3:<mod> points")
     p.add_argument("--cores", type=int, default=32)
     p.add_argument("--content-max-reps", type=int, default=2)
-    p.add_argument("--flags", default="--mor")
+    p.add_argument("--flags", default="")
     p.add_argument("--skip-verify", action="store_true")
     p.add_argument("--keep-inputs", action="store_true",
                    help="leave generated event dirs on scratch for reuse")

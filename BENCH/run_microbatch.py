@@ -12,9 +12,8 @@ Protocol notes:
 - input generated once per (n_events, batches) into $SPARK_GRAFT_SCRATCH
   (default /dev/shm) and reused; partitioned by batch_id so each batch's
   scan opens only its own directory;
-- MoR replay (the design-point write path: bytes per batch proportional
-  to the batch) with the default self-compaction cadence, plus optional
-  CoW for contrast;
+- MoR replay (the lake's one write path: bytes per batch proportional
+  to the batch) with the default self-compaction cadence;
 - one Spark session per series (scheduling noise dominates at this batch
   size; a fresh JVM per series keeps block-manager state comparable);
 - final-state sha equality across series is asserted (same events ->
@@ -22,7 +21,7 @@ Protocol notes:
   global-LWW plan.
 
 Usage: python BENCH/run_microbatch.py [--n-events 2000000]
-       [--series 4,64,256] [--cpus 32] [--cow]
+       [--series 4,64,256] [--cpus 32]
 """
 
 from __future__ import annotations
@@ -50,7 +49,7 @@ def gen_events(spark, n_events: int, batches: int) -> str:
     return out
 
 
-def replay_series(spark, events_dir: str, table_root: str, mor: bool) -> dict:
+def replay_series(spark, events_dir: str, table_root: str) -> dict:
     from pyorchdb_spark.ingest import replay
     from pyorchdb_spark.sources.catalog import BatchLedger
     from pyorchdb_spark.sources.lake import LakeTable
@@ -59,7 +58,7 @@ def replay_series(spark, events_dir: str, table_root: str, mor: bool) -> dict:
     events = spark.read.parquet(events_dir)
     lake, ledger = LakeTable(spark, table_root), BatchLedger(spark, table_root)
     t0 = time.time()
-    results = replay(lake, ledger, events, mor=mor)
+    results = replay(lake, ledger, events)
     wall = time.time() - t0
     n_batches = len(results)
     state = lake.snapshot()
@@ -81,7 +80,6 @@ def main() -> None:
     p.add_argument("--n-events", type=int, default=2_000_000)
     p.add_argument("--series", default="4,64,256")
     p.add_argument("--cpus", type=int, default=32)
-    p.add_argument("--cow", action="store_true", help="also run copy-on-write series")
     args = p.parse_args()
 
     from pyorchdb_spark.session import build_session
@@ -94,13 +92,7 @@ def main() -> None:
         )
         events_dir = gen_events(spark, args.n_events, batches)
         row: dict = {}
-        row["mor"] = replay_series(
-            spark, events_dir, os.path.join(SCRATCH, "microbatch_table"), mor=True
-        )
-        if args.cow:
-            row["cow"] = replay_series(
-                spark, events_dir, os.path.join(SCRATCH, "microbatch_table"), mor=False
-            )
+        row["mor"] = replay_series(spark, events_dir, os.path.join(SCRATCH, "microbatch_table"))
         out["series"][str(batches)] = row
         # partial results to stderr as soon as a series lands: a crashed
         # or killed later series must not erase earlier measurements

@@ -11,7 +11,7 @@ Protocol (all via spark-submit --py-files, the north-rule job surface):
    ``--evolution-batch 8``: batches 8..15 carry the additive
    ``lang_variant`` column, batches 0..7 predate it — the mid-stream
    schema evolution happens INSIDE the streamed replay.
-2. phase 1: start the streaming tail (``replay --mode stream --mor``)
+2. phase 1: start the streaming tail (``replay --mode stream``)
    as a subprocess and SIGKILL the whole process group (no JVM shutdown
    hooks, no stop(), a real crash) once K batch markers exist.
 3. phase 2: rerun the identical command, same checkpoint; it must
@@ -104,7 +104,7 @@ def main() -> None:
     subprocess.run(["rm", "-rf", table], check=True)
     replay_args = [
         "replay", "--events", ev, "--table", table, "--mode", "stream",
-        "--mor", "--thin", "off",
+        "--thin", "off",
         "--max-files-per-trigger", str(args.max_files_per_trigger),
     ]
 

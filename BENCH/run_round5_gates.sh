@@ -13,13 +13,13 @@ step() { echo "=== $(date +%H:%M:%S) $1 ===" >&2; }
 # 1. throughput scaling matrix, 16M, interleaved best-of-2
 step "scaling matrix"
 python BENCH/run_scaling.py --n-events 16000000 --runs 2 \
-  --configs udf_single,udf_multi,mor_multi,mor_thin,udf_multi_thin,auto_salt_multi,mor_fixed64 \
+  --configs mor_multi,mor_thin,mor_auto,mor_fixed64 \
   > "$OUT/scaling.json" 2> "$OUT/scaling.log"
 
 # 2. shuffle byte accounting, thin-content generator rows (reps 2)
 step "byte accounting (thin content)"
 python BENCH/run_scaling.py --n-events 16000000 --measure-bytes --skip-cpu-probe \
-  --configs udf_multi,udf_multi_thin,mor_multi,mor_thin \
+  --configs mor_multi,mor_thin \
   > "$OUT/bytes_reps2.json" 2> "$OUT/bytes_reps2.log"
 
 # 3. shuffle byte accounting at the thin-row design point: fat content
@@ -27,7 +27,7 @@ python BENCH/run_scaling.py --n-events 16000000 --measure-bytes --skip-cpu-probe
 step "byte accounting (fat content)"
 python BENCH/run_scaling.py --n-events 4000000 --content-max-reps 16 \
   --measure-bytes --skip-cpu-probe \
-  --configs udf_multi,udf_multi_thin,mor_multi,mor_thin \
+  --configs mor_multi,mor_thin \
   > "$OUT/bytes_fat.json" 2> "$OUT/bytes_fat.log"
 
 # 4. streaming tail at the 16M gate (one-job micro-batches, r5)
@@ -39,7 +39,7 @@ SPARK_SUBMIT=${SPARK_HOME:-/opt/spark}/bin/spark-submit
 $SPARK_SUBMIT --master 'local[32]' --driver-memory 24g \
   --conf spark.local.dir=$SPARK_GRAFT_SCRATCH/tmp \
   --py-files dist/engine.zip jobs/ingest.py replay \
-  --events "$EV" --table "$TBL" --mode stream --mor \
+  --events "$EV" --table "$TBL" --mode stream \
   --max-files-per-trigger 8 --master 'local[32]' \
   > "$OUT/stream_gate.json" 2> "$OUT/stream_gate.log"
 $SPARK_SUBMIT --master 'local[32]' --driver-memory 24g \
@@ -57,7 +57,7 @@ rm -rf "$TBL"
 $SPARK_SUBMIT --master 'local[32]' --driver-memory 24g \
   --conf spark.local.dir=$SPARK_GRAFT_SCRATCH/tmp \
   --py-files dist/engine.zip jobs/ingest.py replay \
-  --events "$EV" --table "$TBL" --mor --master 'local[32]' \
+  --events "$EV" --table "$TBL" --master 'local[32]' \
   > "$OUT/roundtrip_replay.json" 2> "$OUT/roundtrip_replay.log"
 $SPARK_SUBMIT --master 'local[32]' --driver-memory 24g \
   --conf spark.local.dir=$SPARK_GRAFT_SCRATCH/tmp \

@@ -45,7 +45,7 @@ EOF
 step "batch MoR (A)"
 TBL=$SPARK_GRAFT_SCRATCH/ab_batch
 rm -rf "$TBL"
-submit32 replay --events "$EV" --table "$TBL" --mor --master 'local[32]' \
+submit32 replay --events "$EV" --table "$TBL" --master 'local[32]' \
   > "$OUT/batch_mor_a.json" 2> "$OUT/batch_mor_a.log"
 
 step "verify --roundtrip (on the batch table, VERDICT r4 next #7 gate)"
@@ -56,7 +56,7 @@ rm -rf "$TBL"
 step "streaming tail (B)"
 TBL=$SPARK_GRAFT_SCRATCH/ab_stream
 rm -rf "$TBL"
-submit32 replay --events "$EV" --table "$TBL" --mode stream --mor \
+submit32 replay --events "$EV" --table "$TBL" --mode stream \
   --max-files-per-trigger 8 --master 'local[32]' \
   > "$OUT/stream_gate.json" 2> "$OUT/stream_gate.log"
 submit32 verify --events "$EV" --table "$TBL" --master 'local[32]' \
@@ -66,7 +66,7 @@ rm -rf "$TBL"
 step "batch MoR (A2 — brackets the stream run so window drift shows)"
 TBL=$SPARK_GRAFT_SCRATCH/ab_batch2
 rm -rf "$TBL"
-submit32 replay --events "$EV" --table "$TBL" --mor --master 'local[32]' \
+submit32 replay --events "$EV" --table "$TBL" --master 'local[32]' \
   > "$OUT/batch_mor_a2.json" 2> "$OUT/batch_mor_a2.log"
 rm -rf "$TBL"
 
@@ -75,7 +75,7 @@ rm -rf "$TBL"
 #    MoR 8->32 speedup >= 1.0x, or byte accounting proving substrate).
 step "scaling matrix"
 python BENCH/run_scaling.py --n-events 16000000 --runs 2 \
-  --configs udf_multi,mor_multi,mor_thin,udf_multi_thin,auto_salt_multi \
+  --configs mor_multi,mor_thin,mor_auto \
   > "$OUT/scaling.json" 2> "$OUT/scaling.log"
 
 # 3. IVM fused-maintenance probe in the same quiet window (first pass ran

@@ -8,8 +8,8 @@ Protocol (BASELINE.md "Sandbox scaling protocol", declared round 1):
 2. package the engine as dist/engine.zip and run the SAME replay job via
    ``spark-submit --py-files dist/engine.zip jobs/ingest.py replay`` at
    ``local[8]`` (N) and ``local[32]`` (4N), fresh JVM each, for every
-   config in the matrix: {single-merge, multi-batch} x {CoW, MoR,
-   stream} x shuffle width;
+   config in the matrix: {batch replay, stream} x skew/thin strategy x
+   shuffle width (every config is merge-on-read, the lake's one merge);
 3. interleave the levels (8,32,8,32,...) and take best-of-N per level —
    host noise on this shared box is +/-30% between identical runs;
 4. report events/sec at both + scaling efficiency
@@ -174,36 +174,26 @@ def steal_share(before: tuple[int, int] | None, after: tuple[int, int] | None) -
 CONFIGS = [
     # (key, label, extra replay flags)
     # Every config runs the engine's one prepare (built-in sha2 + ICU NFC,
-    # no Python worker); the config keys keep their historical udf_ names.
-    ("udf_single", "single MERGE", ["--coalesce-batches"]),
-    ("udf_multi", "incremental 4-batch replay", []),
+    # no Python worker) and its one merge, merge-on-read: delta writes ∝
+    # batch + partial compaction (measured 2.3x the retired copy-on-write
+    # merge at 16M events). The mor_ keys keep their historical names.
+    # The official 1v4 rows (mor_multi 0.817/0.852/0.882, mor_stream 0.799;
+    # BENCH/r5c/cluster_1v4*) were measured on the pandas-UDF prepare, so
+    # the next 1v4 run measures the built-in one.
+    ("mor_multi", "incremental 4-batch MoR replay", []),
     # Constant shuffle width at BOTH levels — the cluster-faithful shape:
     # on a real cluster the shuffle layout is sized to the DATA and stays
     # fixed while executors are added; deriving width from the core count
     # (the default) conflates plan shape with slot count.
-    ("udf_fixed64", "single MERGE, shuffle width fixed at 64",
-     ["--coalesce-batches", "--shuffle-partitions", "64"]),
-    # merge-on-read incremental replay — the engine's fastest (and
-    # default-recommended) path since round 3: delta writes ∝ batch +
-    # partial compaction, measured 2.3x CoW at 16M events.
-    # The official 1v4 rows (mor_multi 0.817/0.852/0.882, mor_stream 0.799;
-    # BENCH/r5c/cluster_1v4*) were measured on the pandas-UDF prepare, so
-    # the next 1v4 run measures the built-in one.
-    ("mor_multi", "incremental 4-batch MoR replay",
-     ["--mor"]),
     ("mor_fixed64", "incremental MoR replay, shuffle width fixed at 64",
-     ["--mor", "--shuffle-partitions", "64"]),
+     ["--shuffle-partitions", "64"]),
     # adaptive skew strategy (round 4): one sampled key-frequency job
     # picks plain/salted + n_salts; on the generator's near-uniform keys
     # it must match plain-replay throughput (static always-on salting
-    # measured a 1.5x penalty here in round 3)
-    ("auto_salt_multi", "incremental 4-batch replay, --salt auto",
-     ["--salt", "auto"]),
-    # MoR + adaptive salt: the apples-to-apples skew comparison against
-    # mor_multi (same sink path, only the dedup strategy differs) — the
-    # pair the --hot-share matrix reads
+    # measured a 1.5x penalty here in round 3). Against mor_multi only the
+    # dedup strategy differs — the pair the --hot-share matrix reads.
     ("mor_auto", "incremental 4-batch MoR replay, --salt auto",
-     ["--mor", "--salt", "auto"]),
+     ["--salt", "auto"]),
     # thin-row LWW shuffle pruning (round 5, VERDICT r4 next #4): prune
     # each batch to its winner tuples with a column-pruned map-combined
     # aggregate before the fat bucket exchange, then re-join content for
@@ -220,10 +210,8 @@ CONFIGS = [
     # the N-vs-4N criterion. --thin off: stream mode refuses auto by
     # design (per-micro-batch dup ratio is unobservable up front).
     ("mor_stream", "streaming tail (availableNow), MoR micro-batches",
-     ["--mor", "--mode", "stream", "--max-files-per-trigger", "4", "--thin", "off"]),
+     ["--mode", "stream", "--max-files-per-trigger", "4", "--thin", "off"]),
     ("mor_thin", "incremental 4-batch MoR replay, --thin forced",
-     ["--mor", "--thin", "thin"]),
-    ("udf_multi_thin", "incremental 4-batch replay, --thin forced",
      ["--thin", "thin"]),
 ]
 
@@ -245,9 +233,9 @@ def main() -> None:
                         "collapses onto ONE (repo,path) key — ties the "
                         "north rule's skew/salting clause to its scaling "
                         "clause (run with --configs mor_multi,"
-                        "auto_salt_multi to compare plain vs adaptive salt "
+                        "mor_auto to compare plain vs adaptive salt "
                         "under skew at both cluster sizes)")
-    p.add_argument("--configs", default="udf_single,udf_multi,udf_fixed64")
+    p.add_argument("--configs", default="mor_multi,mor_fixed64")
     p.add_argument("--cluster", action="store_true",
                    help="multi-JVM cluster emulation: masters become "
                         "local-cluster[E,C,M] with SEPARATE executor JVMs "
@@ -270,6 +258,9 @@ def main() -> None:
                         "(off by default: a small smoke run must not clobber "
                         "the committed full-protocol evidence)")
     a = p.parse_args()
+    unknown = set(a.configs.split(",")) - {c[0] for c in CONFIGS}
+    if unknown:
+        p.error(f"unknown --configs {sorted(unknown)}; known: {[c[0] for c in CONFIGS]}")
 
     def master_for(n: int) -> str:
         if a.cluster:

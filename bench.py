@@ -204,32 +204,31 @@ def main() -> None:
     events = spark.read.parquet(events_dir)
     n_rows = events.count()
 
-    # A/B the skew strategies + write paths on identical input (SURVEY.md
-    # section 4): plain window dedup vs salted two-stage, and copy-on-write
-    # vs merge-on-read delta commits.
+    # A/B the skew strategies on identical input (SURVEY.md section 4):
+    # plain window dedup vs salted two-stage. Every row runs the lake's one
+    # merge, merge-on-read delta commits.
     replay_stats = {}
     n_replay_runs = int(os.environ.get("SPARK_GRAFT_BENCH_REPLAY_RUNS", "2"))
     configs = (
-        ("cdc_replay", False, False),
-        ("cdc_replay_salted", True, False),
+        ("cdc_replay", False),
+        ("cdc_replay_salted", True),
         # evidence the skew-strategy CHOOSER, not just the strategies: on
         # this near-uniform input auto must track plain, while the Zipf
         # stress in BENCH/BASELINE.md shows it beating plain under skew
-        ("cdc_replay_auto", "auto", False),
-        ("cdc_replay_mor", False, True),
+        ("cdc_replay_auto", "auto"),
     )
     # INTERLEAVED like the headline queries: label-by-label runs hand the
     # first label all of the merge path's JVM warmup (measured: plain's
     # first samples 1.5x slower than the identical plain path chosen by
     # `auto` minutes later in the same process)
-    runs_by_label: dict[str, list[float]] = {label: [] for label, _, _ in configs}
+    runs_by_label: dict[str, list[float]] = {label: [] for label, _ in configs}
     for i in range(n_replay_runs):
-        for label, salted, mor in configs:
+        for label, salted in configs:
             work = os.path.join(REPO, ".bench_work", f"{label}_{i}")
             shutil.rmtree(work, ignore_errors=True)
             lake, ledger = LakeTable(spark, work), BatchLedger(spark, work)
             t0 = time.time()
-            replay(lake, ledger, events, salted=salted, mor=mor)
+            replay(lake, ledger, events, salted=salted)
             runs_by_label[label].append(round(time.time() - t0, 3))
             shutil.rmtree(work, ignore_errors=True)
     for label, runs in runs_by_label.items():

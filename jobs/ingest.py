@@ -195,7 +195,7 @@ def cmd_replay(args) -> dict:
         run_tail_to_completion(
             spark, args.events, lake, ledger, ckpt,
             salted=strategy["salted"], n_salts=strategy["n_salts"],
-            num_files=args.num_files, mor=args.mor,
+            num_files=args.num_files,
             max_files_per_trigger=args.max_files_per_trigger,
             thin_shuffle=strategy["thin"],
         )
@@ -204,7 +204,7 @@ def cmd_replay(args) -> dict:
         thin: bool | str = {"off": False, "thin": True, "auto": "auto"}[args.thin]
         strategy = {}
         replay(lake, ledger, events, salted=salted, num_files=args.num_files,
-               mor=args.mor, thin_shuffle=thin, strategy_out=strategy)
+               thin_shuffle=thin, strategy_out=strategy)
     dt = time.time() - t0
     sb1 = _shuffle_totals(spark)
     shuffle = (
@@ -547,10 +547,6 @@ def main(argv=None) -> None:
                         "source files (availableNow splits the backlog)")
     r.add_argument("--coalesce-batches", action="store_true")
     r.add_argument("--warmup", action=argparse.BooleanOptionalAction, default=True)
-    r.add_argument("--mor", action="store_true",
-                   help="merge-on-read delta commits: per-batch write cost "
-                        "proportional to the batch (not the table); reads "
-                        "resolve LWW across base+delta until self-compaction")
     r.add_argument("--shuffle-partitions", type=int, default=None,
                    help="hold shuffle width constant across parallelism levels "
                         "(cluster-faithful scaling: same plan/layout, more slots; "

@@ -12,15 +12,13 @@ a single declarative Catalyst plan per batch:
       → MERGE INTO lake table
       → rejects + lineage + marker commit
 
-There is one apply path. A merge-on-read (MoR) batch into a table that
-already has files appends a delta commit, and its lineage/quarantine
-aggregates ride the merge-write plan as an ``Observation``: a clean batch
-is ONE Spark job, in batch replay and in the streaming tail alike. Every
-other batch (copy-on-write, and the first commit of any table) runs the
-metrics as a key-only scan first, because CoW must know the affected
-buckets before it builds the merge plan. Both end in the same commit
-tail. ``maybe_compact`` is the one MoR compaction trigger, called by
-batch replay and the streaming tail after each ``apply_batch``.
+There is one apply path, ``apply_batch``. The merge is merge-on-read
+(MoR): a table's first commit writes its base files, every later commit
+appends a delta, and the lineage/quarantine aggregates ride the
+merge-write plan as an ``Observation`` — a clean batch is ONE Spark job,
+in batch replay and in the streaming tail alike. ``maybe_compact`` is the
+one compaction trigger, called by batch replay and the streaming tail
+after each ``apply_batch``.
 """
 
 from __future__ import annotations
@@ -31,7 +29,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from pyorchdb_spark.sources.catalog import BatchLedger
-from pyorchdb_spark.sources.lake import RETAIN_ALL_TOMBSTONES, LakeTable, Manifest, bucket_expr
+from pyorchdb_spark.sources.lake import RETAIN_ALL_TOMBSTONES, LakeTable
 
 
 @dataclass
@@ -105,31 +103,38 @@ def apply_batch(
     salted: bool = False,
     n_salts: int = 16,
     num_files: int | None = None,
-    mor: bool = False,
     rows_hint: int | None = None,
     thin_shuffle: bool = False,
 ) -> ApplyResult:
     """Apply one batch idempotently. Safe to call twice with the same id.
 
-    ``mor=True`` routes the merge through the delta-append path
-    (sources/lake.py merge-on-read): bytes written per batch stay
-    proportional to the batch, never to the table. Once the table has
-    files, the lineage/quarantine aggregates of a MoR batch ride the
-    merge-write plan as an ``Observation`` instead of running as their own
-    Spark job, so a clean batch costs ONE Spark job. A minimal 2-stage job
-    floors at ~0.3 s of pure scheduling in local mode, so at the
-    10^4-micro-batch design point a second job would be the single largest
-    per-batch fixed cost. CoW batches and a table's first commit run the
-    metrics scan first: CoW needs the affected-bucket hit set BEFORE the
-    merge plan is built.
+    The merge is merge-on-read (sources/lake.py): bytes written per batch
+    stay proportional to the batch, never to the table. The
+    lineage/quarantine aggregates ride the merge-write plan as an
+    ``Observation`` instead of running as their own Spark job, so a clean
+    batch — a table's first commit included — costs ONE Spark job. A
+    minimal 2-stage job floors at ~0.3 s of pure scheduling in local
+    mode, so at the 10^4-micro-batch design point a second job would be
+    the single largest per-batch fixed cost. Used by batch replay and by
+    the streaming tail's ``foreachBatch`` alike.
 
-    ``rows_hint`` (e.g. the previous batch's row count) sizes a MoR
-    delta's bucket generation, since the fused path learns the true count
-    only after the write.
+    ``rows_hint`` (e.g. the previous batch's row count) sizes the
+    commit's bucket generation, since the fused path learns the true
+    count only after the write; ``num_files`` fixes a fresh table's
+    bucket count.
 
     ``thin_shuffle``: prune the batch to its LWW winner-tuple rows before
-    the fat bucket exchange (valid rows only: an invalid row must never
-    shadow the real winner).
+    the fat bucket exchange. The winner aggregate is computed from an
+    OBSERVATION-FREE branch of the valid rows — an invalid row must never
+    shadow the real winner, and the CollectMetrics node must appear
+    exactly once in the plan (on the fat branch) or its counts would
+    double.
+
+    Lineage granularity is one row per batch (partition_id = -1): the
+    observation yields global aggregates, and per-file granularity for
+    the batch is already durable in the manifest (rows + footer seq
+    ranges per bucket file). ``low_watermark`` groups lineage by
+    batch_id, so the watermark derivation is unchanged.
     """
     if ledger.is_committed(batch_id):
         return ApplyResult(batch_id, skipped=True, version=None, rows_in=0, table_rows_after=0)
@@ -152,17 +157,54 @@ def apply_batch(
         reason = invalid_reason(
             lake.keys, watermark_seq=m.tombstone_watermark if m is not None else None
         )
-        if mor and m is not None and m.files:
-            manifest, metrics, rejected = _merge_fused(
-                lake, ledger, prepared, batch_id, m, reason,
-                salted=salted, n_salts=n_salts, rows_hint=rows_hint, thin_shuffle=thin_shuffle,
-            )
-        else:
-            manifest, metrics, rejected = _merge_scanned(
-                lake, ledger, prepared, batch_id, m, reason,
-                salted=salted, n_salts=n_salts, num_files=num_files, mor=mor,
-                thin_shuffle=thin_shuffle,
-            )
+        seq_valid = F.when(reason.isNull(), F.col("seq"))
+        obs = Observation()
+        observed = prepared.observe(
+            obs,
+            F.count(F.lit(1)).alias("rows_in"),
+            F.sum(reason.isNotNull().cast("long")).alias("n_invalid"),
+            F.sum((reason.isNull() & (F.col("op") == "delete")).cast("long")).alias("tombstones"),
+            F.max(seq_valid).alias("max_seq"),
+            F.min(seq_valid).alias("min_seq"),
+        )
+        src = observed.filter(reason.isNull())
+        if thin_shuffle:
+            from pyorchdb_spark.operators.dedup import prune_to_winners, winner_tuples
+
+            w = winner_tuples(prepared.filter(reason.isNull()), keys=lake.keys)
+            src = prune_to_winners(src, keys=lake.keys, winners=w)
+        manifest = lake.merge(
+            src,
+            batch_id=batch_id,
+            salted=salted,
+            n_salts=n_salts,
+            num_files=num_files,
+            rows_hint=rows_hint,
+            manifest=m,
+        )
+        try:
+            got = obs.get
+            metrics = [
+                {
+                    "partition_id": -1,
+                    "rows_in": int(got["rows_in"] or 0),
+                    "tombstones": got["tombstones"],
+                    "max_seq": got["max_seq"],
+                    "min_seq": got["min_seq"],
+                }
+            ]
+            rejected = int(got["n_invalid"] or 0)
+        except Exception:
+            # The observation can come back EMPTY (pyspark's conversion
+            # then raises): when every row of a literal-sourced batch folds
+            # away at optimization time (e.g. a single straggler
+            # quarantined by the below-watermark predicate), Catalyst
+            # collapses the plan to an empty LocalRelation and the
+            # CollectMetrics node never executes. Such batches are
+            # degenerate by construction, so pay one explicit (tiny)
+            # metrics job for them; clean batches stay at one job.
+            metrics = ledger.collect_partition_metrics(prepared, invalid_reason=reason)
+            rejected = int(sum(r["n_invalid"] for r in metrics))
         if rejected:
             # divert invalid rows to _rejects: the rare reject path pays
             # one extra job to materialize them; clean batches never do
@@ -187,142 +229,6 @@ def apply_batch(
     )
 
 
-def _merge_scanned(
-    lake: LakeTable,
-    ledger: BatchLedger,
-    prepared: DataFrame,
-    batch_id: str,
-    m: Manifest | None,
-    reason,
-    *,
-    salted: bool,
-    n_salts: int,
-    num_files: int | None,
-    mor: bool,
-    thin_shuffle: bool,
-) -> tuple[Manifest, list, int]:
-    """Metrics scan, then merge: CoW batches and a table's first commit.
-
-    ONE key-columns-only pass over the batch (the sha2 is column-pruned
-    out) computes, together: lineage metrics, C3 quarantine detection, AND
-    — for the CoW path — the affected-bucket hit set per manifest
-    generation that MERGE needs for file pruning. MoR commits touch no
-    base file, so they skip the hit aggs. The batch is recomputed, not
-    cached: Catalyst column-prunes sha256 out of this scan, so
-    only the data-file write evaluates sha256 over content."""
-    gens = [] if mor else LakeTable.bucket_gens(m)
-    metrics = ledger.collect_partition_metrics(
-        prepared,
-        invalid_reason=reason,
-        bucket_exprs={nb: bucket_expr(lake.keys, nb) for nb in gens},
-    )
-    # superset-safe when rejects are filtered below: an extra affected
-    # file is rewritten with unchanged rows
-    hits = {(nb, b) for r in metrics for nb in gens for b in (r[f"bkt_{nb}"] or [])}
-    rejected = int(sum(r["n_invalid"] for r in metrics))
-    src = prepared.filter(reason.isNull()) if rejected else prepared
-    if thin_shuffle:
-        # VERDICT r4 next #4: keep fat content rows out of the bucket
-        # exchange — prune the batch to its LWW winner-tuple rows first
-        # (thin map-combined aggregate + broadcast semi-join). Valid rows
-        # only: an invalid row must never shadow the real winner.
-        from pyorchdb_spark.operators.dedup import prune_to_winners
-
-        src = prune_to_winners(prepared.filter(reason.isNull()), keys=lake.keys)
-    manifest = lake.merge(
-        src,
-        batch_id=batch_id,
-        salted=salted,
-        n_salts=n_salts,
-        num_files=num_files,
-        mor=mor,
-        # first-batch volume hint: sizes the initial bucket count so
-        # files start near target_rows_per_file instead of a fixed 32
-        rows_hint=int(sum(r["rows_in"] for r in metrics)),
-        affected_hits=hits if gens else None,
-        manifest=m,
-    )
-    return manifest, metrics, rejected
-
-
-def _merge_fused(
-    lake: LakeTable,
-    ledger: BatchLedger,
-    prepared: DataFrame,
-    batch_id: str,
-    m: Manifest,
-    reason,
-    *,
-    salted: bool,
-    n_salts: int,
-    rows_hint: int | None,
-    thin_shuffle: bool,
-) -> tuple[Manifest, list, int]:
-    """ONE-job MoR delta commit: the lineage/quarantine aggregates ride the
-    merge-write plan as an ``Observation`` — no separate metrics job. Used
-    by batch replay and by the streaming tail's ``foreachBatch`` alike.
-
-    ``thin_shuffle``: the winner aggregate is computed from an
-    OBSERVATION-FREE branch of the batch — the CollectMetrics node must
-    appear exactly once in the plan (on the fat branch) or its counts
-    would double.
-
-    Lineage granularity is one row per batch (partition_id = -1): the
-    observation yields global aggregates, and per-file granularity for
-    the batch is already durable in the manifest's delta entries (rows +
-    footer seq ranges per bucket file). ``low_watermark`` groups lineage
-    by batch_id, so the watermark derivation is unchanged."""
-    seq_valid = F.when(reason.isNull(), F.col("seq"))
-    obs = Observation()
-    observed = prepared.observe(
-        obs,
-        F.count(F.lit(1)).alias("rows_in"),
-        F.sum(reason.isNotNull().cast("long")).alias("n_invalid"),
-        F.sum((reason.isNull() & (F.col("op") == "delete")).cast("long")).alias("tombstones"),
-        F.max(seq_valid).alias("max_seq"),
-        F.min(seq_valid).alias("min_seq"),
-    )
-    src = observed.filter(reason.isNull())
-    if thin_shuffle:
-        from pyorchdb_spark.operators.dedup import prune_to_winners, winner_tuples
-
-        w = winner_tuples(prepared.filter(reason.isNull()), keys=lake.keys)
-        src = prune_to_winners(src, keys=lake.keys, winners=w)
-    manifest = lake.merge(
-        src,
-        batch_id=batch_id,
-        salted=salted,
-        n_salts=n_salts,
-        mor=True,
-        rows_hint=rows_hint,
-        manifest=m,
-    )
-    try:
-        got = obs.get
-        metrics = [
-            {
-                "partition_id": -1,
-                "rows_in": int(got["rows_in"] or 0),
-                "tombstones": got["tombstones"],
-                "max_seq": got["max_seq"],
-                "min_seq": got["min_seq"],
-            }
-        ]
-        rejected = int(got["n_invalid"] or 0)
-    except Exception:
-        # The observation can come back EMPTY (pyspark's conversion then
-        # raises): when every row of a literal-sourced batch folds away
-        # at optimization time (e.g. a single straggler quarantined by
-        # the below-watermark predicate), Catalyst collapses the plan to
-        # an empty LocalRelation and the CollectMetrics node never
-        # executes. Such batches are degenerate by construction, so pay
-        # one explicit (tiny) metrics job for them; clean batches stay
-        # at one job.
-        metrics = ledger.collect_partition_metrics(prepared, invalid_reason=reason)
-        rejected = int(sum(r["n_invalid"] for r in metrics))
-    return manifest, metrics, rejected
-
-
 def maybe_compact(
     lake: LakeTable,
     ledger: BatchLedger,
@@ -330,7 +236,7 @@ def maybe_compact(
     compact_factor: int,
     tombstone_lag_batches: int | None,
 ) -> None:
-    """The MoR compaction trigger, shared by batch replay and the
+    """The compaction trigger, shared by batch replay and the
     streaming tail; call it after each ``apply_batch`` returns.
 
     Two gates, both driver-only arithmetic: at least ``compact_factor``
@@ -370,7 +276,7 @@ def replay(
     salted: bool | str = False,
     n_salts: int = 16,
     num_files: int | None = None,
-    mor: bool = False,
+    mor: bool = True,
     mor_compact_factor: int = 8,
     tombstone_lag_batches: int | None = None,
     thin_shuffle: bool | str = False,
@@ -378,7 +284,7 @@ def replay(
 ) -> list[ApplyResult]:
     """Batch-mode replay of a whole event log in batch_id order.
 
-    ``mor=True``: each batch lands as a delta commit (write cost
+    Each batch after the first lands as a delta commit (write cost
     proportional to the batch). Read cost grows with accumulated deltas,
     so the replay self-compacts (``maybe_compact``) once delta commits
     reach ``mor_compact_factor`` — amortized, the table is rewritten every
@@ -411,6 +317,9 @@ def replay(
     unobservable from the outside, which made the round-5e thin matrix
     ambiguous about whether thin had even engaged.
     """
+    # mor: accepted for perfbench/workloads.py, its only caller; MoR is the only merge
+    if not mor:
+        raise ValueError("the lake is merge-on-read only: mor=False is not supported")
     if thin_shuffle is True:
         salted = False  # redundant under thin pruning (see docstring) —
         # decided BEFORE any salted="auto" probe so the answer it would
@@ -442,7 +351,6 @@ def replay(
             salted=salted,
             n_salts=n_salts,
             num_files=num_files,
-            mor=mor,
             # the previous batch's row count sizes the delta generation
             # (replay feeds are near-constant batch size, and the hint
             # only picks a power-of-two layout)
@@ -452,10 +360,9 @@ def replay(
         if not res.skipped and res.rows_in:
             prev_rows = res.rows_in
         results.append(res)
-        if mor:
-            maybe_compact(
-                lake, ledger,
-                compact_factor=mor_compact_factor,
-                tombstone_lag_batches=tombstone_lag_batches,
-            )
+        maybe_compact(
+            lake, ledger,
+            compact_factor=mor_compact_factor,
+            tombstone_lag_batches=tombstone_lag_batches,
+        )
     return results

@@ -23,7 +23,7 @@ Scale shape (100 TB): one maintenance step shuffles
 O(changed keys + |groups|) THIN rows — (group, count, sums) triples —
 never the table. The changed keys' old/new states are read from the
 affected bucket files only (``LakeTable._affected_files`` manifest
-arithmetic, the same pruning MERGE itself uses), so a micro-batch over a
+arithmetic, or the delta commit's own bucket entries), so a micro-batch over a
 10^5-file table opens O(batch buckets) files. Maintenance cost is
 proportional to the batch, not the table — at the 10^10-event design
 point that's the difference between a continuously-fresh aggregate and
@@ -155,13 +155,14 @@ def ivm_step(
 
 def lake_scoped_state(lake, manifest, batch_events: DataFrame) -> DataFrame:
     """Live state of the batch's keys at ``manifest``, reading ONLY the
-    affected bucket files (the same manifest arithmetic MERGE uses) —
+    affected bucket files (``LakeTable._affected_files`` manifest
+    arithmetic) —
     the O(batch) read that keeps lake-backed maintenance off the table
     scan path. MoR deltas in the affected set resolve LWW as in
-    ``snapshot``. (The MoR branch of ``maintain_on_lake_merge`` needs
-    tombstone winners kept for its second LWW round and derives its scope
-    from the delta manifest instead, so it reads inline rather than
-    through here.)"""
+    ``snapshot``. (``maintain_on_lake_merge`` needs tombstone winners kept
+    for its second LWW round and derives its scope from the delta
+    manifest instead, so after a table's first commit it reads inline
+    rather than through here.)"""
     affected, _ = lake._affected_files(manifest, batch_events)
     if not affected:
         return _live(lake.spark.createDataFrame([], manifest.schema()))
@@ -213,7 +214,6 @@ def maintain_on_lake_merge(
     group_col: str,
     sum_cols: Sequence[str],
     batch_id: str | None = None,
-    mor: bool = False,
 ) -> DataFrame:
     """MERGE a batch into the lake AND return the maintained aggregate:
     old contributions are captured from the pre-merge manifest, the
@@ -227,7 +227,7 @@ def maintain_on_lake_merge(
     - the versioned lake never deletes a superseded data file at merge
       time (time travel / rollback depend on old versions), so the OLD
       scope reads lazily from the pre-merge manifest AFTER the commit;
-    - MoR: the affected-file hit set is derived from the delta commit's
+    - the affected-file hit set is derived from the delta commit's
       own (bucket, nb) manifest entries — pure driver arithmetic, no
       discovery job (``_delta_hit_set``); the delta files contain exactly
       the batch's LWW winners, so no row-level semi-join is needed either
@@ -250,12 +250,12 @@ def maintain_on_lake_merge(
     conf.set("spark.sql.adaptive.enabled", "false")
     try:
         m_before = lake.manifest()
-        m_after = lake.merge(batch_events, batch_id=batch_id, mor=mor)
+        m_after = lake.merge(batch_events, batch_id=batch_id)
         if m_before is None or not m_before.files:
             old_scoped = _live(spark.createDataFrame([], m_after.schema()))
             new_scoped = lake_scoped_state(lake, m_after, batch_events)
             plan = apply_delta(prev_agg, old_scoped, new_scoped, group_col, sum_cols)
-        elif mor:
+        else:
             from pyorchdb_spark.operators.dedup import lww_dedup
 
             prev_paths = {f["path"] for f in m_before.files}
@@ -291,10 +291,6 @@ def maintain_on_lake_merge(
             plan = apply_delta(
                 prev_agg, _live(resolved_old), _live(new_resolved), group_col, sum_cols
             )
-        else:
-            old_scoped = lake_scoped_state(lake, m_before, batch_events)
-            new_scoped = lake_scoped_state(lake, m_after, batch_events)
-            plan = apply_delta(prev_agg, old_scoped, new_scoped, group_col, sum_cols)
         # ONE maintenance action inside the AQE-off window; |groups| rows
         return plan.localCheckpoint(eager=True)
     finally:

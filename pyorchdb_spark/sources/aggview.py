@@ -17,9 +17,10 @@ Refresh contract (the part that makes it exactly-once):
   ``base_version`` — re-applying a version's delta is exact (same
   retract + add), so recovery needs no undo log.
 - per base commit, the changed-key set is read from THAT commit's new
-  data files: a MoR delta commit contributes O(batch) rows, a CoW
-  commit the rewritten buckets (a superset of the batch's keys —
-  harmless: retract+add of an unchanged key cancels exactly).
+  data files: a merge commit contributes O(batch) rows, an
+  ``overwrite`` or rollback commit every file it (re)publishes (a
+  superset of the changed keys — harmless: retract+add of an unchanged
+  key cancels exactly).
 - old/new contributions are scoped reads at version v-1 / v through the
   affected-bucket manifest arithmetic (semi-joined before MoR LWW
   resolution — ``operators/ivm.lake_scoped_state``), so refresh cost is

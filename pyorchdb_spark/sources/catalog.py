@@ -86,20 +86,10 @@ class BatchLedger:
 
     # ---------- lineage ----------
 
-    def collect_partition_metrics(
-        self, source_events: DataFrame, invalid_reason=None, bucket_exprs=None
-    ) -> list:
+    def collect_partition_metrics(self, source_events: DataFrame, invalid_reason=None) -> list:
         """One pass over the batch: per-partition rows/tombstones/max_seq
         (+ invalid count when a quarantine predicate is given). Collected
         driver-side — one tiny row per task.
-
-        ``bucket_exprs`` ({n_buckets: bucket Column}) folds the lake
-        table's affected-bucket discovery into this SAME pass: per
-        partition, ``collect_set`` of the batch keys' bucket per
-        generation (``bkt_{nb}`` columns, each bounded by nb values).
-        Before round 3 that hit-set was its own distinct+collect job —
-        a second full key-column scan of every batch, pure per-batch
-        fixed cost at the 10^4-micro-batch design point (VERDICT r2 #1).
 
         max_seq/min_seq/tombstones are computed over VALID rows only
         (``invalid_reason`` null): quarantined rows never merge, and a
@@ -123,9 +113,6 @@ class BatchLedger:
         ]
         if invalid_reason is not None:
             aggs.append(F.sum(invalid_reason.isNotNull().cast("long")).alias("n_invalid"))
-        if bucket_exprs:
-            for nb, expr in sorted(bucket_exprs.items()):
-                aggs.append(F.collect_set(expr).alias(f"bkt_{nb}"))
         return (
             source_events.groupBy(F.spark_partition_id().alias("partition_id"))
             .agg(*aggs)

@@ -73,13 +73,14 @@ def _table_rows(lake, manifest) -> int:
     """Live row count for an uploaded table.
 
     Manifest arithmetic (sum of per-file footer counts — zero scan) is
-    exact only for a pure-upsert CoW table; if another writer landed MoR
-    delta commits, physical rows include superseded versions and the sum
-    OVERSTATES table size (ADVICE r3 #3). Deltas are visible in the
-    manifest, so detect them and fall back to ``snapshot().count()`` (one
-    LWW-resolved scan) instead of counting wrong. (CoW-retained foreign
-    tombstones are NOT manifest-detectable; that residual case is the
-    documented limit of the zero-scan path.)"""
+    exact only for a pure-upsert table without delta files (an upload's
+    first commit writes base files); once a re-merge or another writer
+    landed delta commits, physical rows include superseded versions and
+    the sum OVERSTATES table size (ADVICE r3 #3). Deltas are visible in
+    the manifest, so detect them and fall back to ``snapshot().count()``
+    (one LWW-resolved scan) instead of counting wrong. (Foreign
+    tombstones retained in base files are NOT manifest-detectable; that
+    residual case is the documented limit of the zero-scan path.)"""
     files = manifest.files
     if any(f.get("delta") for f in files):
         return int(lake.snapshot().count())
@@ -296,7 +297,7 @@ class ETLWorkflow:
             # not monotonically_increasing_id(): content-derived seqs are
             # stable across runs/partitionings, so the LWW winner among
             # duplicate keys is deterministic and a crash-then-retry
-            # re-merge reproduces byte-identical state (idempotency).
+            # re-merge reproduces the same state (idempotency).
             ev = df.withColumn(
                 "seq", F.xxhash64(*[F.col(c) for c in df.columns])
             ).withColumn("op", F.lit("upsert"))

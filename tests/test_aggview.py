@@ -39,33 +39,30 @@ BATCHES = [
 
 
 def test_refresh_per_commit_and_catchup(spark, tmp_path):
-    for mor in (False, True):
-        lake = LakeTable(spark, str(tmp_path / f"lake_{mor}"), keys=("repo", "path"))
-        view = MaintainedAggregate(lake, str(tmp_path / f"view_{mor}"), "lang", ["size"])
-        # per-commit refresh
-        for i, rows in enumerate(BATCHES[:2]):
-            lake.merge(_b(spark, rows), batch_id=f"b{i}", mor=mor)
-            assert _got(view) == _truth(lake), f"mor={mor} batch={i}"
-        # multi-version catch-up: two commits, one refresh
-        lake.merge(_b(spark, BATCHES[2]), batch_id="b2", mor=mor)
-        lake.merge(
-            _b(spark, [("r3", "e.py", 7, "py", 1.0, "upsert")]), batch_id="b3", mor=mor
-        )
-        assert _got(view) == _truth(lake), f"mor={mor} catchup"
-        # no-op refresh at head keeps the same view version
-        v = view.current_version()
-        view.refresh()
-        assert view.current_version() == v
+    lake = LakeTable(spark, str(tmp_path / "lake"), keys=("repo", "path"))
+    view = MaintainedAggregate(lake, str(tmp_path / "view"), "lang", ["size"])
+    # per-commit refresh
+    for i, rows in enumerate(BATCHES[:2]):
+        lake.merge(_b(spark, rows), batch_id=f"b{i}")
+        assert _got(view) == _truth(lake), f"batch={i}"
+    # multi-version catch-up: two commits, one refresh
+    lake.merge(_b(spark, BATCHES[2]), batch_id="b2")
+    lake.merge(_b(spark, [("r3", "e.py", 7, "py", 1.0, "upsert")]), batch_id="b3")
+    assert _got(view) == _truth(lake), "catchup"
+    # no-op refresh at head keeps the same view version
+    v = view.current_version()
+    view.refresh()
+    assert view.current_version() == v
 
 
 def test_refresh_skips_compaction_and_survives_it(spark, tmp_path):
     lake = LakeTable(spark, str(tmp_path / "lake"), keys=("repo", "path"))
     view = MaintainedAggregate(lake, str(tmp_path / "view"), "lang", ["size"])
     for i, rows in enumerate(BATCHES):
-        lake.merge(_b(spark, rows), batch_id=f"b{i}", mor=True)
+        lake.merge(_b(spark, rows), batch_id=f"b{i}")
     view.refresh()
     lake.compact()
-    lake.merge(_b(spark, [("r9", "z.go", 9, "go", 4.0, "upsert")]), batch_id="b9", mor=True)
+    lake.merge(_b(spark, [("r9", "z.go", 9, "go", 4.0, "upsert")]), batch_id="b9")
     assert _got(view) == _truth(lake)
 
 

@@ -211,8 +211,8 @@ def test_prune_to_winners_preserves_lww(spark):
 
 def test_replay_thin_shuffle_matches_plain_state(spark, tmp_path):
     """thin_shuffle replay (winner pruning before the bucket exchange,
-    VERDICT r4 next #4) reaches byte-identical state to a plain replay —
-    CoW and MoR — and 'auto' flips thin ON for this high-dup-ratio feed."""
+    VERDICT r4 next #4) reaches byte-identical state to a plain replay,
+    and 'auto' flips thin ON for this high-dup-ratio feed."""
     from pyorchdb_spark.generator import change_events
     from pyorchdb_spark.ingest import replay
     from pyorchdb_spark.operators.dedup import choose_strategies
@@ -225,8 +225,7 @@ def test_replay_thin_shuffle_matches_plain_state(spark, tmp_path):
         sigs = {}
         for name, kw in {
             "plain": dict(),
-            "thin_cow": dict(thin_shuffle=True),
-            "thin_mor": dict(thin_shuffle=True, mor=True),
+            "thin": dict(thin_shuffle=True),
             "auto": dict(thin_shuffle="auto", salted="auto"),
         }.items():
             root = str(tmp_path / name)
@@ -234,7 +233,7 @@ def test_replay_thin_shuffle_matches_plain_state(spark, tmp_path):
             rows = LakeTable(spark, root).snapshot().select(
                 "repo", "path", "content_sha256").fillna("x").collect()
             sigs[name] = {tuple(r) for r in rows}
-        assert sigs["plain"] == sigs["thin_cow"] == sigs["thin_mor"] == sigs["auto"]
+        assert sigs["plain"] == sigs["thin"] == sigs["auto"]
         _salted, _n, thin = choose_strategies(ev, keys=("repo", "path"))
         assert thin, "auto probe should enable thin on a dup-heavy feed"
     finally:
@@ -399,7 +398,7 @@ def test_subsplit_identity_placement(spark):
 
 
 def test_merge_subsplit_state_and_layout(spark, tmp_path):
-    """A merge forced to sub-split (both CoW and MoR paths) writes
+    """A merge forced to sub-split (a base commit and a delta commit) writes
     multiple disjoint-key, key-sorted files per bucket and reaches the
     same final state as the unsplit merge."""
     import os
@@ -418,7 +417,7 @@ def test_merge_subsplit_state_and_layout(spark, tmp_path):
         if forced_s is not None:
             lake._sub_splits = lambda nb, rows_hint: forced_s
         lake.merge(b0, batch_id="b0")
-        lake.merge(b1, batch_id="b1", mor=True)
+        lake.merge(b1, batch_id="b1")
         return lake
 
     plain = build(str(tmp_path / "plain"), None)

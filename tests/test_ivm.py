@@ -111,36 +111,34 @@ def test_agg_view_doubles(spark):
 
 
 def test_lake_backed_maintenance(spark, tmp_path):
-    """Maintained aggregate over real lake merges (CoW and MoR) equals
-    the snapshot recompute; reads go through the affected-bucket scope."""
+    """Maintained aggregate over real lake merges (a base commit, then
+    delta commits) equals the snapshot recompute; reads go through the
+    affected-bucket scope."""
     from pyorchdb_spark.sources.lake import LakeTable
 
-    for mor in (False, True):
-        lake = LakeTable(spark, str(tmp_path / f"lake_{mor}"), keys=("repo", "path"))
-        sch = "repo string, path string, seq long, lang string, size double, op string"
+    lake = LakeTable(spark, str(tmp_path / "lake"), keys=("repo", "path"))
+    sch = "repo string, path string, seq long, lang string, size double, op string"
 
-        def _b(rows):
-            return spark.createDataFrame(rows, sch)
+    def _b(rows):
+        return spark.createDataFrame(rows, sch)
 
-        agg = group_contributions(
-            _b([]).limit(0), "lang", ["size"]
-        )  # empty prev aggregate
-        batches = [
-            _b([("r1", "a.py", 1, "py", 10.0, "upsert"), ("r1", "b.rs", 2, "rs", 20.0, "upsert")]),
-            _b([("r1", "a.py", 3, "py", 11.0, "upsert"), ("r2", "c.py", 4, "py", 5.0, "upsert")]),
-            _b([("r1", "b.rs", 5, "rs", 0.0, "delete"), ("r2", "d.go", 6, "go", 2.5, "upsert")]),
-        ]
-        for i, b in enumerate(batches):
-            agg = maintain_on_lake_merge(
-                lake, b, agg, "lang", ["size"], batch_id=f"b{i}", mor=mor
-            ).localCheckpoint()
-        snap = lake.snapshot()
-        assert _as_map(agg, "sum_size") == {
-            r["grp"]: (r["n_rows"], r["sum_size"])
-            for r in group_contributions(snap, "lang", ["size"]).collect()
-        }, f"mor={mor}"
-        got = {r["grp"]: r["n_rows"] for r in agg.collect()}
-        assert got == {"py": 2, "go": 1}  # rs deleted away
+    agg = group_contributions(_b([]).limit(0), "lang", ["size"])  # empty prev aggregate
+    batches = [
+        _b([("r1", "a.py", 1, "py", 10.0, "upsert"), ("r1", "b.rs", 2, "rs", 20.0, "upsert")]),
+        _b([("r1", "a.py", 3, "py", 11.0, "upsert"), ("r2", "c.py", 4, "py", 5.0, "upsert")]),
+        _b([("r1", "b.rs", 5, "rs", 0.0, "delete"), ("r2", "d.go", 6, "go", 2.5, "upsert")]),
+    ]
+    for i, b in enumerate(batches):
+        agg = maintain_on_lake_merge(
+            lake, b, agg, "lang", ["size"], batch_id=f"b{i}"
+        ).localCheckpoint()
+    snap = lake.snapshot()
+    assert _as_map(agg, "sum_size") == {
+        r["grp"]: (r["n_rows"], r["sum_size"])
+        for r in group_contributions(snap, "lang", ["size"]).collect()
+    }
+    got = {r["grp"]: r["n_rows"] for r in agg.collect()}
+    assert got == {"py": 2, "go": 1}  # rs deleted away
 
 
 def test_delta_hit_set_conservative_on_missing_bucket_identity():

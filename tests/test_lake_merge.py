@@ -150,9 +150,9 @@ def test_time_travel_and_vacuum(spark, tmp_path):
 
 
 def test_write_amplification_proportional_to_batch_keys(spark, tmp_path):
-    """VERDICT round 1 item 4: at two table sizes, a 1-key patch rewrites
-    ~one bucket's worth of rows — bytes written ∝ batch keys, not table
-    size."""
+    """VERDICT round 1 item 4: at two table sizes, a 1-key patch writes
+    at most ~one bucket's worth of rows (a merge-on-read delta holds just
+    the patched key) — bytes written ∝ batch keys, not table size."""
     rewritten = {}
     for size in (2_000, 8_000):
         root = str(tmp_path / f"t{size}")
@@ -255,52 +255,6 @@ def test_concurrent_publish_never_clobbers_and_loser_cleans_up(spark, tmp_path):
     assert all(os.path.exists(os.path.join(root, f["path"])) for f in winner.files)
 
 
-def test_fused_hit_set_matches_job_based_split(spark, tmp_path):
-    """VERDICT r2 #1: the affected-bucket hit set folded into the lineage
-    metrics pass must yield the exact same (affected, untouched) split as
-    the standalone distinct job it replaced — across bucket generations
-    (a split table carries two nb values)."""
-    from pyorchdb_spark.sources.lake import bucket_expr
-
-    root = str(tmp_path / "f")
-    lake, ledger = LakeTable(spark, root), BatchLedger(spark, root)
-    ev = change_events(spark, 3_000, batch_size=3_000)
-    replay(lake, ledger, ev, num_files=4)  # all files at generation 4
-
-    # lower the split threshold, patch ONE key: only its bucket is
-    # rewritten and splits to a higher generation -> mixed-gen manifest
-    lake.max_rows_per_file = 50
-    one = lake.snapshot().orderBy("repo", "path").limit(1).collect()[0]
-    patch_df = spark.createDataFrame(
-        [(one["repo"], one["path"], "deadbeef" * 5, 10_000_000, "upsert",
-          one["lang"], "patched!", "zsplit")],
-        "repo string, path string, commit string, seq long, op string, "
-        "lang string, content string, batch_id string",
-    )
-    from pyorchdb_spark.ingest import apply_batch
-
-    apply_batch(lake, ledger, patch_df, "zsplit")
-    m = lake.manifest()
-    assert len(LakeTable.bucket_gens(m)) >= 2  # multi-generation manifest
-
-    batch = prepare_events(
-        change_events(spark, 40, batch_size=40)
-        .orderBy("seq").limit(3).withColumn("batch_id", F.lit("zz"))
-    )
-    gens = LakeTable.bucket_gens(m)
-    metrics = ledger.collect_partition_metrics(
-        batch, bucket_exprs={nb: bucket_expr(lake.keys, nb) for nb in gens}
-    )
-    fused_hits = {(nb, b) for r in metrics for nb in gens for b in (r[f"bkt_{nb}"] or [])}
-
-    a_job, u_job = lake._affected_files(m, batch)  # standalone distinct job
-    a_fused, u_fused = lake._affected_files(m, batch, hits=fused_hits)
-    key = lambda fs: sorted(f["path"] for f in fs)  # noqa: E731
-    assert key(a_job) == key(a_fused)
-    assert key(u_job) == key(u_fused)
-    assert u_fused, "expected some untouched files (pruning actually pruned)"
-
-
 def test_changes_since_incremental_read_prunes_files(spark, tmp_path):
     """CDC consumption: changes_since(X) returns exactly the per-key LWW
     winners with seq > X (tombstones included), and on a MoR table the
@@ -310,7 +264,7 @@ def test_changes_since_incremental_read_prunes_files(spark, tmp_path):
     root = str(tmp_path / "t")
     lake, ledger = LakeTable(spark, root), BatchLedger(spark, root)
     ev = change_events(spark, 4_000, batch_size=1_000)
-    replay(lake, ledger, ev, num_files=4, mor=True)
+    replay(lake, ledger, ev, num_files=4)
     m = lake.manifest()
     assert all("seq_min" in f and "seq_max" in f for f in m.files)
 
@@ -483,12 +437,12 @@ def _replay_stream_verify(spark, tmp_path, log_dir):
     events = spark.read.parquet(log_dir)
     root = str(tmp_path / "replay")
     lake = LakeTable(spark, root)
-    replay(lake, BatchLedger(spark, root), events, mor=True)
+    replay(lake, BatchLedger(spark, root), events)
     sroot = str(tmp_path / "tail")
     slake = LakeTable(spark, sroot)
     run_tail_to_completion(
         spark, log_dir, slake, BatchLedger(spark, sroot), str(tmp_path / "ckpt"),
-        mor=True, max_files_per_trigger=1,
+        max_files_per_trigger=1,
     )
     return _sig(lake.snapshot()), _sig(slake.snapshot()), _cmd_verify_as_perfbench(spark, log_dir, root)
 

@@ -1,9 +1,9 @@
-"""Merge-on-read delta commits (sources/lake.py ``merge(mor=True)``).
+"""Merge-on-read delta commits (sources/lake.py ``LakeTable.merge``).
 
 MoR is the scale-correct write path when batch keys disperse across most
 buckets: a delta commit writes bytes proportional to the BATCH, never the
 table, and reads resolve LWW across base+delta until compaction. These
-tests pin state-equality with the copy-on-write path, idempotency,
+tests pin state-equality with the replay oracle, idempotency,
 out-of-order delete protection, schema evolution, and the replay
 self-compaction policy.
 """
@@ -15,7 +15,8 @@ import os
 from pyspark.sql import functions as F
 
 from pyorchdb_spark.generator import change_events
-from pyorchdb_spark.ingest import replay
+from pyorchdb_spark.ingest import prepare_events, replay
+from pyorchdb_spark.oracle import expected_final_state, state_signature
 from pyorchdb_spark.sources.catalog import BatchLedger
 from pyorchdb_spark.sources.lake import RETAIN_ALL_TOMBSTONES, LakeTable
 
@@ -25,15 +26,19 @@ def _sig(df):
     return {tuple(r) for r in rows}
 
 
-def test_mor_replay_equals_cow(spark, tmp_path):
+def _oracle_sig(ev):
+    exp = expected_final_state(prepare_events(ev).drop("content_sha256").toPandas())
+    return state_signature(exp)
+
+
+def test_mor_replay_matches_oracle(spark, tmp_path):
     ev = change_events(spark, 4_000, batch_size=1_000)
 
-    cow_root, mor_root = str(tmp_path / "cow"), str(tmp_path / "mor")
-    replay(LakeTable(spark, cow_root), BatchLedger(spark, cow_root), ev, num_files=4)
+    mor_root = str(tmp_path / "mor")
     lake_mor = LakeTable(spark, mor_root)
-    replay(lake_mor, BatchLedger(spark, mor_root), ev, num_files=4, mor=True)
+    replay(lake_mor, BatchLedger(spark, mor_root), ev, num_files=4)
 
-    assert _sig(lake_mor.snapshot()) == _sig(LakeTable(spark, cow_root).snapshot())
+    assert _sig(lake_mor.snapshot()) == _oracle_sig(ev)
     # batches 2..4 landed as deltas; base files from batch 1 untouched
     m = lake_mor.manifest()
     assert any(f.get("delta") for f in m.files)
@@ -56,7 +61,7 @@ def test_mor_delta_write_proportional_to_batch(spark, tmp_path):
     root = str(tmp_path / "t")
     lake, ledger = LakeTable(spark, root), BatchLedger(spark, root)
     ev = change_events(spark, 4_000, batch_size=2_000)
-    replay(lake, ledger, ev, num_files=8, mor=True)
+    replay(lake, ledger, ev, num_files=8)
 
     m = lake.manifest()
     base = [f for f in m.files if not f.get("delta")]
@@ -72,14 +77,14 @@ def test_mor_idempotent_and_out_of_order_delete(spark, tmp_path):
     root = str(tmp_path / "t")
     lake, ledger = LakeTable(spark, root), BatchLedger(spark, root)
     ev = change_events(spark, 2_000, batch_size=1_000)
-    replay(lake, ledger, ev, num_files=2, mor=True)
+    replay(lake, ledger, ev, num_files=2)
     sig1 = _sig(lake.snapshot())
 
     # crash between manifest publish and marker write → re-apply appends a
     # duplicate delta; LWW resolution makes it a logical no-op
     last = "b000001"
     os.unlink(os.path.join(ledger.markers_dir, f"{last}.json"))
-    replay(lake, ledger, ev.filter(F.col("batch_id") == last), num_files=2, mor=True)
+    replay(lake, ledger, ev.filter(F.col("batch_id") == last), num_files=2)
     assert _sig(lake.snapshot()) == sig1
 
     # out-of-order late upsert below an applied delete's seq stays dead.
@@ -97,7 +102,7 @@ def test_mor_idempotent_and_out_of_order_delete(spark, tmp_path):
         F.current_timestamp().alias("ts"),
         F.lit(None).cast("string").alias("lang_variant"),
     )
-    replay(lake, ledger, late, num_files=2, mor=True)
+    replay(lake, ledger, late, num_files=2)
     live = lake.snapshot().filter((F.col("repo") == dead.repo) & (F.col("path") == dead.path))
     assert live.count() == 0
 
@@ -107,7 +112,7 @@ def test_mor_schema_evolution_and_self_compaction(spark, tmp_path):
     lake, ledger = LakeTable(spark, root), BatchLedger(spark, root)
     ev = change_events(spark, 6_000, batch_size=1_000, evolution_batch=3)
     # compact after every 2 delta commits
-    replay(lake, ledger, ev, num_files=4, mor=True, mor_compact_factor=2)
+    replay(lake, ledger, ev, num_files=4, mor_compact_factor=2)
 
     m = lake.manifest()
     delta_commits = len({f["path"].split("/")[1] for f in m.files if f.get("delta")})
@@ -118,10 +123,8 @@ def test_mor_schema_evolution_and_self_compaction(spark, tmp_path):
     assert "lang_variant" in snap.columns
     assert snap.filter(F.col("lang_variant").isNotNull()).count() > 0
 
-    # full-state parity with a CoW replay of the same log
-    cow_root = str(tmp_path / "cow")
-    replay(LakeTable(spark, cow_root), BatchLedger(spark, cow_root), ev, num_files=4)
-    assert _sig(lake.snapshot()) == _sig(LakeTable(spark, cow_root).snapshot())
+    # full-state parity with the replay oracle over the same log
+    assert _sig(lake.snapshot()) == _oracle_sig(ev)
 
 
 def _one_event(ev, repo, path, seq, op, content, batch_id, lang="py"):
@@ -151,7 +154,7 @@ def test_tombstone_gc_watermark_drops_dead_keys_and_blocks_stragglers(spark, tmp
     ev = change_events(spark, 2_000, batch_size=1_000)
     # mor_compact_factor=1 -> compact after every delta commit;
     # lag=1 -> watermark trails the head batch by one
-    replay(lake, ledger, ev, num_files=2, mor=True, mor_compact_factor=1,
+    replay(lake, ledger, ev, num_files=2, mor_compact_factor=1,
            tombstone_lag_batches=1)
 
     m = lake.manifest()
@@ -166,7 +169,7 @@ def test_tombstone_gc_watermark_drops_dead_keys_and_blocks_stragglers(spark, tmp
     # the GC actually dropped something: the un-gated replay keeps them
     root2 = str(tmp_path / "ref")
     lake2, ledger2 = LakeTable(spark, root2), BatchLedger(spark, root2)
-    replay(lake2, ledger2, ev, num_files=2, mor=True, mor_compact_factor=1)
+    replay(lake2, ledger2, ev, num_files=2, mor_compact_factor=1)
     kept = (
         lake2.snapshot(include_tombstones=True)
         .filter((F.col("op") == "delete") & (F.col("seq") <= wm))
@@ -186,7 +189,7 @@ def test_tombstone_gc_watermark_drops_dead_keys_and_blocks_stragglers(spark, tmp
     )
     late = _one_event(ev, dead.repo, dead.path, max(dead.seq - 1, 0), "upsert",
                       "resurrect attempt", "zlate", lang=dead.lang)
-    res = replay(lake, ledger, late, num_files=2, mor=True)
+    res = replay(lake, ledger, late, num_files=2)
     assert res[0].rows_rejected == 1
     live = lake.snapshot().filter(
         (F.col("repo") == dead.repo) & (F.col("path") == dead.path)
@@ -198,7 +201,7 @@ def test_tombstone_gc_watermark_drops_dead_keys_and_blocks_stragglers(spark, tmp
     # an event ABOVE the watermark for the same key merges normally
     fresh = _one_event(ev, dead.repo, dead.path, wm + 10_000, "upsert",
                        "legit recreate", "zfresh", lang=dead.lang)
-    replay(lake, ledger, fresh, num_files=2, mor=True)
+    replay(lake, ledger, fresh, num_files=2)
     assert lake.snapshot().filter(
         (F.col("repo") == dead.repo) & (F.col("path") == dead.path)
     ).count() == 1
@@ -238,7 +241,7 @@ def test_partial_compaction_rewrites_only_hot_groups(spark, tmp_path):
     root = str(tmp_path / "t")
     lake, ledger = LakeTable(spark, root), BatchLedger(spark, root)
     ev = change_events(spark, 4_000, batch_size=4_000)
-    replay(lake, ledger, ev, num_files=8, mor=True)  # base at 8 buckets
+    replay(lake, ledger, ev, num_files=8)  # base at 8 buckets
     m0 = lake.manifest()
     sig_full = _sig(lake.snapshot())
 
@@ -248,7 +251,7 @@ def test_partial_compaction_rewrites_only_hot_groups(spark, tmp_path):
 
     apply_batch(lake, ledger, _one_event(ev, one.repo, one.path, 10_000_000,
                                          "upsert", "hot!", "zhot", lang=one.lang),
-                "zhot", mor=True)
+                "zhot")
     m1 = lake.manifest()
     delta_files = [f for f in m1.files if f.get("delta")]
     assert delta_files
@@ -294,13 +297,13 @@ def test_partial_compaction_noop_below_bounds(spark, tmp_path):
     root = str(tmp_path / "t")
     lake, ledger = LakeTable(spark, root), BatchLedger(spark, root)
     ev = change_events(spark, 4_000, batch_size=4_000)
-    replay(lake, ledger, ev, num_files=8, mor=True)
+    replay(lake, ledger, ev, num_files=8)
     one = lake.snapshot().orderBy("repo", "path").limit(1).collect()[0]
     from pyorchdb_spark.ingest import apply_batch
 
     apply_batch(lake, ledger, _one_event(ev, one.repo, one.path, 10_000_000,
                                          "upsert", "tiny", "ztiny", lang=one.lang),
-                "ztiny", mor=True)
+                "ztiny")
     v = lake.manifest().version
     # fraction bound huge, file bound high -> nothing exceeds
     m = lake.compact_partial(delta_fraction=0.99, max_delta_files_per_group=100)
@@ -352,7 +355,7 @@ def test_compact_partial_default_retains_tombstones(spark, tmp_path):
     victim = lake.snapshot().orderBy("repo", "path").limit(1).collect()[0]
     delete = _one_event(ev, victim.repo, victim.path, 10_000_000, "delete",
                         "", "zdel", lang=victim.lang)
-    lake.merge(delete, batch_id="zdel", mor=True)
+    lake.merge(delete, batch_id="zdel")
     n_tomb = lake.snapshot(include_tombstones=True).filter(F.col("op") == "delete").count()
     assert n_tomb >= 1
 
@@ -380,7 +383,7 @@ def test_changes_since_guards_watermark_on_empty_table(spark, tmp_path):
     for i, r in enumerate(live):
         d = _one_event(ev, r.repo, r.path, 20_000_000 + i, "delete", "", "zkill", lang=r.lang)
         deletes = d if deletes is None else deletes.unionByName(d)
-    lake.merge(deletes, batch_id="zkill", mor=True)
+    lake.merge(deletes, batch_id="zkill")
     m = lake.compact(tombstone_watermark_seq=30_000_000)
     assert not m.files  # all keys dead and GC'd -> zero data files
     assert m.tombstone_watermark == 30_000_000

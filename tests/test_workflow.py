@@ -189,8 +189,8 @@ def test_standalone_upload_without_build(spark, tmp_path):
 
 def test_upload_row_count_falls_back_on_foreign_deltas(spark, tmp_path):
     """ADVICE r3 #3: upload()'s zero-scan manifest row count is exact
-    only for pure-upsert CoW tables; when a foreign writer lands MoR
-    delta commits, the physical sum counts superseded versions — the
+    only for pure-upsert tables without delta files; when a foreign
+    writer lands MoR delta commits, the physical sum counts superseded versions — the
     count must fall back to the LWW-resolved snapshot count."""
     from pyspark.sql import functions as F
 
@@ -210,7 +210,7 @@ def test_upload_row_count_falls_back_on_foreign_deltas(spark, tmp_path):
     foreign = one.withColumn("seq", F.lit(10**15).cast("long")).withColumn(
         "op", F.lit("upsert")
     )
-    m = lake.merge(foreign, batch_id="foreign-delta", mor=True)
+    m = lake.merge(foreign, batch_id="foreign-delta")
     assert any(f.get("delta") for f in m.files)
     physical = sum(f["rows"] for f in m.files)
     assert physical == n_live + 1  # superseded version double-counted
