@@ -27,12 +27,12 @@ TABLES = ["events", "documents", "embeddings"]
 
 # Spark simpleString -> DuckDB Arrow type names that hash identically in
 # the driver's compare. Calibrated against driver evidence, not theory:
-# CORRECTNESS_r04 hash-PASSED q8/q9 (Spark int vs DuckDB int64) and
-# q18/asof_latest_click (timestamp_ntz vs timestamp[us]), while q12
-# hash-FAILED on Spark bigint vs DuckDB HUGEINT — i.e. the compare is
-# value-based across integer widths, but a DuckDB type that round-trips
-# through pandas as FLOAT (hugeint, wide decimals) diverges from an
-# integral/decimal Spark value representationally.
+# CORRECTNESS_r04 hash-PASSED Spark int vs DuckDB int64 and
+# timestamp_ntz vs timestamp[us] (on queries since deleted from the
+# board), while Spark bigint vs DuckDB HUGEINT hash-FAILED — i.e. the
+# compare is value-based across integer widths, but a DuckDB type that
+# round-trips through pandas as FLOAT (hugeint, wide decimals) diverges
+# from an integral/decimal Spark value representationally.
 INTS = {"int8", "int16", "int32", "int64"}
 COMPAT = {
     "bigint": INTS,

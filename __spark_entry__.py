@@ -307,22 +307,10 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# event analytics: top-k, event-time windows, funnel, cohorts, ranking,
-# as-of / interval / range joins.  Not CDC queries, so they stay out of
-# queries(); tests/test_entry.py checks them against analytics_oracle_sql().
+# event analytics: event-time windows, funnel, cohorts.  Not CDC queries,
+# so they stay out of queries(); tests/test_entry.py checks them against
+# analytics_oracle_sql().
 # --------------------------------------------------------------------------
-
-def q_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O1 — deterministic global sort + limit (top-10 users by value)."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy("user_id")
-        .agg(F.sum("value").alias("total_value"), F.count(F.lit(1)).alias("n_events"))
-        .orderBy(F.desc("n_events"), F.asc("user_id"))
-        .limit(10)
-        .select("user_id", "n_events")
-    )
-
 
 def q_events_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-day event-time windows per event_type (F.window)."""
@@ -359,162 +347,6 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _t(spark, sf_dir, "events")
     return cohort_retention(ev, "ts")
-
-
-def q_rolling_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-based analytic window: 3-event rolling average of value per
-    user (ROWS 2 PRECEDING..CURRENT).  Exact decimal accumulation inside
-    the frame so Spark's rotating add/remove sliding-sum and DuckDB's
-    segment tree cannot drift on float ordering; one user-keyed shuffle,
-    frame state is O(frame) per task."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("event_id").rowsBetween(-2, Window.currentRow)
-    return ev.select(
-        "user_id",
-        "event_id",
-        (
-            F.sum(F.col("value").cast("decimal(18,4)")).over(w)
-            .cast("decimal(28,4)").cast("double")
-            / F.count(F.lit(1)).over(w)
-        ).alias("rolling_avg"),
-    )
-
-
-def q_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global NTILE(10) over per-user totals WITHOUT a single-task
-    window: operators/ranking.py two-phase range-partitioned ranking —
-    bit-identical to the SQL NTILE oracle."""
-    from pyorchdb_spark.operators.ranking import global_ntile
-
-    ev = _t(spark, sf_dir, "events")
-    totals = ev.groupBy("user_id").agg(
-        F.sum(F.col("value").cast("decimal(18,4)"))
-        .cast("decimal(28,4)").cast("double")
-        .alias("total_value")
-    )
-    tiles = global_ntile(
-        totals, [F.desc("total_value"), F.asc("user_id")], k=10, tile_col="decile"
-    )
-    return tiles.groupBy("decile").agg(
-        F.count(F.lit(1)).alias("n_users"),
-        F.max("total_value").alias("top_value"),
-        F.min("total_value").alias("bottom_value"),
-    )
-
-
-def q_asof_latest_click(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join (operators/asof.py): for every error event, the user's
-    latest click at-or-before it — union-sort formulation, ONE shuffle,
-    no pair blowup; oracle = DuckDB native ASOF LEFT JOIN."""
-    from pyorchdb_spark.operators.asof import asof_join
-
-    ev = _t(spark, sf_dir, "events")
-    err = ev.filter(F.col("event_type") == "error").select("user_id", "ts", "event_id")
-    clk = ev.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", F.col("value").alias("click_value")
-    )
-    out = asof_join(err, clk, by=["user_id"], left_ts="ts", right_ts="ts")
-    return out.select(
-        "user_id", "event_id", F.col("ts_right").alias("click_ts"), "click_value"
-    )
-
-
-def q_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream watermarked interval join, batch twin
-    (streaming/join.py — the same code path runs on live streams with
-    watermark-bounded state): every click by the same user within the
-    30 minutes before a signup."""
-    from pyorchdb_spark.streaming.join import interval_stream_join
-
-    ev = _t(spark, sf_dir, "events")
-    signups = ev.filter(F.col("event_type") == "signup").select("user_id", "event_id", "ts")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", "event_id", "ts", "value"
-    )
-    out = interval_stream_join(signups, clicks, by="user_id", lookback="30 minutes")
-    return out.select(
-        "user_id",
-        F.col("event_id").alias("signup_event_id"),
-        F.col("event_id_r").alias("click_event_id"),
-        F.col("ts_r").alias("click_ts"),
-        F.col("value_r").alias("click_value"),
-    )
-
-
-def q_range_join_incidents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bucketized range join (operators/rangejoin.interval_join):
-    purchases falling inside each day's error-incident window
-    [first error, last error] — a plain BETWEEN join would plan as a
-    BroadcastNestedLoopJoin; the bucketized form is two hash shuffles."""
-    from pyorchdb_spark.operators.rangejoin import interval_join
-
-    ev = _t(spark, sf_dir, "events")
-    incidents = (
-        ev.filter(F.col("event_type") == "error")
-        .groupBy(F.date_trunc("day", "ts").alias("incident_day"))
-        .agg(F.min("ts").alias("start"), F.max("ts").alias("end"))
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select("event_id", "ts", "value")
-    return (
-        interval_join(purchases, incidents, bucket="1 hour")
-        .groupBy("incident_day")
-        .agg(
-            F.count(F.lit(1)).alias("n_purchases"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-    )
-
-
-def q_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact interpolated quantiles per group (F.percentile, JVM-side).
-    Interpolation fractions are quarters and inputs are 2-decimal values,
-    so the true quartiles are exact 4-decimal decimals — round(4) makes
-    the double representation hash-stable against the oracle."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.round(F.expr("percentile(value, 0.25)"), 4).alias("q25"),
-        F.round(F.expr("percentile(value, 0.5)"), 4).alias("q50"),
-        F.round(F.expr("percentile(value, 0.75)"), 4).alias("q75"),
-    )
-
-
-def q_events_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot: event_type categories to columns, one row per user (the
-    explicit values list keeps the plan single-pass — no distinct scan)."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy("user_id")
-        .pivot("event_type", ["click", "view", "purchase", "error"])
-        .agg(F.round(F.sum("value"), 2))
-        .select(
-            "user_id",
-            F.col("click").alias("click_value"),
-            F.col("view").alias("view_value"),
-            F.col("purchase").alias("purchase_value"),
-            F.col("error").alias("error_value"),
-        )
-    )
-
-
-def q_events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OLAP rollup: (event_type, day) -> (event_type) -> grand total in
-    one pass (F.rollup); oracle = SQL GROUP BY ROLLUP."""
-    ev = _t(spark, sf_dir, "events")
-    day = F.date_trunc("day", "ts").alias("day")
-    return ev.rollup("event_type", day).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum("value"), 2).alias("total_value"),
-    )
-
-
-def q_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON property extraction (get_json_object, JVM-side) + aggregate."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.select(F.get_json_object("props", "$.k").cast("long").alias("k"), "value")
-        .groupBy("k")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1739,34 +1571,17 @@ def oracle_sql() -> dict[str, str]:
     }
 
 
-
 def analytics_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
-        "topk_users": q_topk_users,
         "events_windowed": q_events_windowed,
         "events_sliding": q_events_sliding,
         "funnel_steps": q_funnel_steps,
         "cohort_retention": q_cohort_retention,
-        "rolling_value": q_rolling_value,
-        "value_deciles": q_value_deciles,
-        "asof_latest_click": q_asof_latest_click,
-        "click_attribution": q_click_attribution,
-        "range_join_incidents": q_range_join_incidents,
-        "value_quantiles": q_value_quantiles,
-        "events_pivot": q_events_pivot,
-        "events_rollup": q_events_rollup,
-        "json_props": q_json_props,
     }
 
 
 def analytics_oracle_sql() -> dict[str, str]:
     return {
-        "topk_users": """
-            SELECT user_id, n_events FROM (
-              SELECT user_id, count(*) AS n_events
-              FROM events GROUP BY user_id
-            ) ORDER BY n_events DESC, user_id ASC LIMIT 10
-        """,
         "events_windowed": """
             SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS window_start,
                    CAST(date_trunc('day', ts) AS TIMESTAMP) + INTERVAL 1 DAY AS window_end,
@@ -1817,90 +1632,5 @@ def analytics_oracle_sql() -> dict[str, str]:
                    count(*) AS n_users
             FROM act JOIN fu USING (user_id)
             GROUP BY 1, 2
-        """,
-        "rolling_value": """
-            SELECT user_id, event_id,
-                   CAST(CAST(sum(CAST(value AS DECIMAL(18,4))) OVER w
-                             AS DECIMAL(28,4)) AS DOUBLE)
-                   / count(*) OVER w AS rolling_avg
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY event_id
-                         ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-        """,
-        "value_deciles": """
-            WITH totals AS (
-              SELECT user_id,
-                     CAST(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DECIMAL(28,4)) AS DOUBLE) AS total_value
-              FROM events GROUP BY 1
-            ), tiles AS (
-              SELECT total_value,
-                     CAST(NTILE(10) OVER (ORDER BY total_value DESC, user_id ASC) AS INTEGER) AS decile
-              FROM totals
-            )
-            SELECT decile, count(*) AS n_users,
-                   max(total_value) AS top_value,
-                   min(total_value) AS bottom_value
-            FROM tiles GROUP BY 1
-        """,
-        "asof_latest_click": """
-            SELECT e.user_id, e.event_id, c.ts AS click_ts, c.value AS click_value
-            FROM (SELECT user_id, ts, event_id FROM events WHERE event_type = 'error') e
-            ASOF LEFT JOIN
-                 (SELECT user_id, ts, value FROM events WHERE event_type = 'click') c
-              ON e.user_id = c.user_id AND e.ts >= c.ts
-        """,
-        "click_attribution": """
-            SELECT s.user_id,
-                   s.event_id AS signup_event_id,
-                   c.event_id AS click_event_id,
-                   c.ts AS click_ts,
-                   c.value AS click_value
-            FROM events s JOIN events c
-              ON s.user_id = c.user_id
-             AND c.ts <= s.ts
-             AND c.ts >= s.ts - INTERVAL 30 MINUTE
-            WHERE s.event_type = 'signup' AND c.event_type = 'click'
-        """,
-        "range_join_incidents": """
-            WITH incidents AS (
-              SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS incident_day,
-                     min(ts) AS s, max(ts) AS e
-              FROM events WHERE event_type = 'error' GROUP BY 1
-            )
-            SELECT incident_day,
-                   count(*) AS n_purchases,
-                   round(sum(value), 2) AS total_value
-            FROM events p JOIN incidents i ON p.ts BETWEEN i.s AND i.e
-            WHERE p.event_type = 'purchase'
-            GROUP BY incident_day
-        """,
-        "value_quantiles": """
-            SELECT event_type,
-                   round(quantile_cont(value, 0.25), 4) AS q25,
-                   round(quantile_cont(value, 0.50), 4) AS q50,
-                   round(quantile_cont(value, 0.75), 4) AS q75
-            FROM events GROUP BY event_type
-        """,
-        "events_pivot": """
-            SELECT user_id,
-                   round(sum(value) FILTER (event_type = 'click'), 2) AS click_value,
-                   round(sum(value) FILTER (event_type = 'view'), 2) AS view_value,
-                   round(sum(value) FILTER (event_type = 'purchase'), 2) AS purchase_value,
-                   round(sum(value) FILTER (event_type = 'error'), 2) AS error_value
-            FROM events GROUP BY user_id
-        """,
-        "events_rollup": """
-            SELECT event_type,
-                   CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-                   count(*) AS n_events,
-                   round(sum(value), 2) AS total_value
-            FROM events
-            GROUP BY ROLLUP (event_type, CAST(date_trunc('day', ts) AS TIMESTAMP))
-        """,
-        "json_props": """
-            SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
-                   count(*) AS n,
-                   round(sum(value), 2) AS total_value
-            FROM events GROUP BY 1
         """,
     }

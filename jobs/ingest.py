@@ -153,13 +153,6 @@ def cmd_replay(args) -> dict:
     spark = _spark(args.master, args.shuffle_partitions)
     _size_scan_splits(spark, args.events)
     events = spark.read.parquet(args.events)
-    if args.coalesce_batches:
-        # one logical batch: the throughput-measurement shape (single
-        # MERGE over the whole log; per-batch incrementality is exercised
-        # by the default path and the streaming tail)
-        from pyspark.sql import functions as F
-
-        events = events.withColumn("batch_id", F.lit("all"))
     lake = LakeTable(spark, args.table)
     ledger = BatchLedger(spark, args.table)
 
@@ -545,7 +538,6 @@ def main(argv=None) -> None:
     r.add_argument("--max-files-per-trigger", type=int, default=None,
                    help="stream mode: bound each micro-batch to this many "
                         "source files (availableNow splits the backlog)")
-    r.add_argument("--coalesce-batches", action="store_true")
     r.add_argument("--warmup", action=argparse.BooleanOptionalAction, default=True)
     r.add_argument("--shuffle-partitions", type=int, default=None,
                    help="hold shuffle width constant across parallelism levels "

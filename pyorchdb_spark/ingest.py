@@ -38,7 +38,6 @@ class ApplyResult:
     skipped: bool
     version: int | None
     rows_in: int
-    table_rows_after: int
     rows_rejected: int = 0
 
 
@@ -137,7 +136,7 @@ def apply_batch(
     batch_id, so the watermark derivation is unchanged.
     """
     if ledger.is_committed(batch_id):
-        return ApplyResult(batch_id, skipped=True, version=None, rows_in=0, table_rows_after=0)
+        return ApplyResult(batch_id, skipped=True, version=None, rows_in=0)
 
     # AQE off for the span of one batch apply (saved/restored): a merge
     # plan is fixed-shape — one user-specified repartition(n_buckets) and
@@ -214,8 +213,7 @@ def apply_batch(
                     F.col("reject_reason").isNotNull()
                 ),
             )
-        table_rows = sum(f["rows"] for f in manifest.files)
-        rows_in = ledger.record_lineage(batch_id, metrics, table_rows_after=table_rows)
+        rows_in = ledger.record_lineage(batch_id, metrics)
         ledger.commit_marker(batch_id, manifest.version, rows_in)
     finally:
         conf.set("spark.sql.adaptive.enabled", aqe_prev)
@@ -224,7 +222,6 @@ def apply_batch(
         skipped=False,
         version=manifest.version,
         rows_in=rows_in,
-        table_rows_after=table_rows,
         rows_rejected=rejected,
     )
 

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 MARKER_SCHEMA = "batch_id string, version long, rows_in long, committed_at double"
 LINEAGE_SCHEMA = (
     "batch_id string, partition_id int, rows_in long, tombstones long, "
-    "max_seq long, table_rows_after long, min_seq long, committed_at double"
+    "max_seq long, min_seq long, committed_at double"
 )
 
 
@@ -119,7 +119,7 @@ class BatchLedger:
             .collect()
         )
 
-    def record_lineage(self, batch_id: str, metrics_rows: list, table_rows_after: int) -> int:
+    def record_lineage(self, batch_id: str, metrics_rows: list) -> int:
         """Append per-partition ingest metrics (from collect_partition_metrics).
 
         Written driver-side with pyarrow — the rows are already collected
@@ -147,9 +147,6 @@ class BatchLedger:
                 "max_seq": pa.array(
                     [None if r["max_seq"] is None else int(r["max_seq"]) for r in metrics_rows],
                     pa.int64(),
-                ),
-                "table_rows_after": pa.array(
-                    [int(table_rows_after)] * len(metrics_rows), pa.int64()
                 ),
                 "min_seq": pa.array(
                     [None if r["min_seq"] is None else int(r["min_seq"]) for r in metrics_rows],

@@ -77,3 +77,7 @@ def test_board_contract():
     assert set(entrymod.oracle_sql()) == set(entrymod.queries())
     assert set(entrymod.analytics_oracle_sql()) == set(entrymod.analytics_queries())
     assert not set(entrymod.analytics_queries()) & set(entrymod.queries())
+    # the analytics side keeps only the timeseries operator family
+    assert set(entrymod.analytics_queries()) == {
+        "events_windowed", "events_sliding", "funnel_steps", "cohort_retention",
+    }

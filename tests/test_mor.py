@@ -324,7 +324,6 @@ def test_low_watermark_orders_by_commit_time_not_batch_id(spark, tmp_path):
             batch_id,
             [{"partition_id": 0, "rows_in": mx - mn + 1, "tombstones": 0,
               "max_seq": mx, "min_seq": mn}],
-            table_rows_after=0,
         )
 
     # COMMIT order (time): stream, stream, replay, replay — seqs increase
