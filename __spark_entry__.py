@@ -307,10 +307,22 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# event analytics: event-time windows, funnel, cohorts.  Not CDC queries,
-# so they stay out of queries(); tests/test_entry.py checks them against
-# analytics_oracle_sql().
+# event analytics: top-k, event-time windows, funnel, cohorts.  Not CDC
+# queries, so they stay out of queries(); tests/test_entry.py checks them
+# against analytics_oracle_sql().
 # --------------------------------------------------------------------------
+
+def q_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """O1 — deterministic global sort + limit (top-10 users by value)."""
+    ev = _t(spark, sf_dir, "events")
+    return (
+        ev.groupBy("user_id")
+        .agg(F.sum("value").alias("total_value"), F.count(F.lit(1)).alias("n_events"))
+        .orderBy(F.desc("n_events"), F.asc("user_id"))
+        .limit(10)
+        .select("user_id", "n_events")
+    )
+
 
 def q_events_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-day event-time windows per event_type (F.window)."""
@@ -1573,6 +1585,7 @@ def oracle_sql() -> dict[str, str]:
 
 def analytics_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
+        "topk_users": q_topk_users,
         "events_windowed": q_events_windowed,
         "events_sliding": q_events_sliding,
         "funnel_steps": q_funnel_steps,
@@ -1582,6 +1595,12 @@ def analytics_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def analytics_oracle_sql() -> dict[str, str]:
     return {
+        "topk_users": """
+            SELECT user_id, n_events FROM (
+              SELECT user_id, count(*) AS n_events
+              FROM events GROUP BY user_id
+            ) ORDER BY n_events DESC, user_id ASC LIMIT 10
+        """,
         "events_windowed": """
             SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS window_start,
                    CAST(date_trunc('day', ts) AS TIMESTAMP) + INTERVAL 1 DAY AS window_end,

@@ -77,7 +77,8 @@ def test_board_contract():
     assert set(entrymod.oracle_sql()) == set(entrymod.queries())
     assert set(entrymod.analytics_oracle_sql()) == set(entrymod.analytics_queries())
     assert not set(entrymod.analytics_queries()) & set(entrymod.queries())
-    # the analytics side keeps only the timeseries operator family
+    # the analytics side keeps only top-k and the timeseries operator family
     assert set(entrymod.analytics_queries()) == {
+        "topk_users",
         "events_windowed", "events_sliding", "funnel_steps", "cohort_retention",
     }
