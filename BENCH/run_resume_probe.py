@@ -13,26 +13,26 @@ Protocol (all via spark-submit --py-files, the north-rule job surface):
    schema evolution happens INSIDE the streamed replay.
 2. phase 1: start the streaming tail (``replay --mode stream``)
    as a subprocess and SIGKILL the whole process group (no JVM shutdown
-   hooks, no stop(), a real crash) once K batch markers exist.
+   hooks, no stop(), a real crash) once K batches are committed (batch
+   records in the table's manifests, ``BatchLedger.markers()``).
 3. phase 2: rerun the identical command, same checkpoint; it must
    resume from committed offsets and drain the rest.
-4. accounting, from durable state only (markers + lineage + checkpoint
-   commit log + the table itself):
+4. accounting, from durable state only (the manifests' batch records +
+   checkpoint commit log + the table itself):
    - ``verify`` CLI: independent global-LWW plan vs the resumed table,
      per-row content sha256 equality (the north-rule invariant);
-   - lineage batch_ids are UNIQUE and their rows_in sums to exactly the
-     event count -> no micro-batch was applied twice (exactly-once
-     across the kill);
-   - marker count == checkpoint commit count (every delivered epoch
-     committed exactly once, whether delivered before or after the
-     kill); any epoch re-delivered after the kill is visible as
-     phase-2 markers that predate phase-2's first checkpoint commit;
+   - every batch id has ONE record and the records' rows_in sums to
+     exactly the event count -> no micro-batch was applied twice
+     (exactly-once across the kill);
+   - committed batch count == checkpoint commit count (every delivered
+     epoch committed exactly once, whether delivered before or after
+     the kill);
    - evolution: winners whose LWW event predates batch 8 carry NULL
      lang_variant, later winners carry the value — compared
      winner-by-winner against an independent LWW over the raw log.
 
 Run: python BENCH/run_resume_probe.py [--n-events 16000000]
-     [--kill-after-markers 4] [--out BENCH/r5d/resume_probe.json]
+     [--kill-after-commits 4] [--out BENCH/r5d/resume_probe.json]
 """
 
 from __future__ import annotations
@@ -52,17 +52,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPARK_SUBMIT = os.path.join(os.environ.get("SPARK_HOME", "/opt/spark"), "bin", "spark-submit")
 
 
-def _markers_dir(table: str) -> str:
-    return os.path.join(table, "_markers")
-
-
-def _marker_files(table: str) -> list[str]:
-    d = _markers_dir(table)
-    if not os.path.isdir(d):
-        return []
-    return sorted(f for f in os.listdir(d) if f.endswith(".json"))
-
-
 def _submit_cmd(zpath: str, args: list[str], master: str) -> list[str]:
     return [
         SPARK_SUBMIT,
@@ -80,13 +69,28 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--n-events", type=int, default=16_000_000)
     ap.add_argument("--batch-size", type=int, default=1_000_000)
-    ap.add_argument("--kill-after-markers", type=int, default=4)
+    ap.add_argument("--kill-after-commits", type=int, default=4)
     ap.add_argument("--max-files-per-trigger", type=int, default=8)
     ap.add_argument("--master", default="local[32]")
     ap.add_argument("--out", default=None)
     args = ap.parse_args()
 
     zpath = build_zip()
+    # local pyspark in-process: counts committed batches while the tail
+    # runs, then does the accounting below; reads only durable state
+    from pyspark.sql import SparkSession, functions as F
+
+    sys.path.insert(0, REPO)
+    spark = (SparkSession.builder.master("local[32]")
+             .config("spark.sql.shuffle.partitions", "32")
+             .config("spark.driver.memory", "24g")
+             .config("spark.local.dir", os.path.join(SCRATCH, "tmp"))
+             .getOrCreate())
+    from pyorchdb_spark.sources.catalog import BatchLedger
+
+    def committed() -> int:
+        return BatchLedger(spark, table).markers().count()
+
     n_batches = args.n_events // args.batch_size
     evolution_batch = n_batches // 2
     ev = os.path.join(SCRATCH, f"events_{args.n_events}_evo{evolution_batch}")
@@ -115,10 +119,10 @@ def main() -> None:
         stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
         start_new_session=True,  # own process group: kill driver+executors
     )
-    kill_at = args.kill_after_markers
+    kill_at = args.kill_after_commits
     killed_after_s = None
     while proc.poll() is None:
-        if len(_marker_files(table)) >= kill_at:
+        if committed() >= kill_at:
             killed_after_s = round(time.time() - t0, 2)
             os.killpg(proc.pid, signal.SIGKILL)
             break
@@ -126,11 +130,11 @@ def main() -> None:
     proc.wait()
     if killed_after_s is None:
         raise RuntimeError(
-            f"stream finished before {kill_at} markers appeared — lower "
-            "--kill-after-markers or --max-files-per-trigger")
-    phase1_markers = _marker_files(table)
+            f"stream finished before {kill_at} batches committed — lower "
+            "--kill-after-commits or --max-files-per-trigger")
+    phase1_committed = committed()
     print(f"phase 1: SIGKILL after {killed_after_s}s, "
-          f"{len(phase1_markers)} markers committed", file=sys.stderr)
+          f"{phase1_committed} batches committed", file=sys.stderr)
 
     # ---- phase 2: identical command, same checkpoint; run to completion ----
     t1 = time.time()
@@ -142,12 +146,8 @@ def main() -> None:
     phase2_sec = round(time.time() - t1, 2)
     replay_res = json.loads(
         [l for l in out.stdout.strip().splitlines() if l.startswith("{")][-1])
-    all_markers = _marker_files(table)
+    all_committed = committed()
 
-    # epochs the restarted stream re-delivered (marker already present ->
-    # apply skipped): phase-1 markers whose epoch id >= the checkpoint's
-    # resume point. Conservative observable: markers present at phase-2
-    # start that the phase-2 stream offered again are exactly-once hits.
     ckpt_commits = []
     commits_dir = os.path.join(table, "_checkpoint", "commits")
     if os.path.isdir(commits_dir):
@@ -157,33 +157,19 @@ def main() -> None:
     verify = run_submit(zpath, ["verify", "--events", ev, "--table", table],
                         master=args.master)
 
-    # ---- lineage exactly-once accounting + evolution winner equality ----
-    # (local pyspark in-process; reads only durable state)
-    from pyspark.sql import SparkSession, functions as F
-
-    sys.path.insert(0, REPO)
-    spark = (SparkSession.builder.master("local[32]")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.driver.memory", "24g")
-             .config("spark.local.dir", os.path.join(SCRATCH, "tmp"))
-             .getOrCreate())
+    # ---- exactly-once accounting + evolution winner equality ----
     from pyorchdb_spark.operators.dedup import lww_dedup
     from pyorchdb_spark.ingest import prepare_events, invalid_reason
-    from pyorchdb_spark.sources.catalog import BatchLedger
-    from pyorchdb_spark.sources.lake import LakeTable
+    from pyorchdb_spark.sources.lake import LakeTable, read_batch_records
 
-    ledger = BatchLedger(spark, table)
-    lin = ledger.lineage().groupBy("batch_id").agg(
+    lin = BatchLedger(spark, table).lineage().groupBy("batch_id").agg(
         F.sum("rows_in").alias("rows_in")).collect()
     lineage_batches = [r.batch_id for r in lin]
     lineage_rows_total = sum(r.rows_in for r in lin)
-    # a re-applied epoch (kill between lineage write and marker write)
-    # leaves TWO lineage entries for the same (batch_id, partition_id) —
-    # invisible to a per-batch_id distinct count
-    dup_entries = (
-        ledger.lineage().groupBy("batch_id", "partition_id").count()
-        .filter(F.col("count") > 1).count()
-    )
+    # the ledger view keeps a batch's first record; a re-applied epoch
+    # would show as a second record for its batch id in the manifests
+    records, _ = read_batch_records(table)
+    dup_entries = len(records) - len({r["batch_id"] for r in records})
 
     raw = spark.read.parquet(ev)
     expected = (
@@ -203,17 +189,16 @@ def main() -> None:
     ).collect()[0]
     spark.stop()
 
-    # commit order is table-commit -> lineage -> marker (ingest.py:259-263),
-    # so a kill landing INSIDE that window makes the re-delivered epoch
-    # re-apply (state stays correct by LWW idempotence; lineage shows the
-    # duplicate). Report both strengths honestly: clean exactly-once
-    # (no re-apply observed at all) vs idempotent-under-redelivery (the
-    # actual guarantee: final state sha-equal no matter where the kill
-    # landed).
+    # a batch's record rides the manifest link that commits its data
+    # (ingest.apply_batch), so there is no window between the table
+    # commit and the ledger: wherever the kill lands, a re-delivered
+    # epoch is either uncommitted (applied once in phase 2) or committed
+    # (skipped). exactly_once must hold on every run; the state check
+    # (idempotent_under_redelivery) is reported beside it.
     exactly_once = (
         dup_entries == 0
         and lineage_rows_total == replay_res["events"]
-        and len(all_markers) == len(ckpt_commits)
+        and all_committed == len(ckpt_commits)
     )
     result = {
         "probe": "resume+evolution",
@@ -222,13 +207,13 @@ def main() -> None:
         "evolution_batch": evolution_batch,
         "max_files_per_trigger": args.max_files_per_trigger,
         "phase1_kill_after_s": killed_after_s,
-        "phase1_markers": len(phase1_markers),
+        "phase1_committed": phase1_committed,
         "phase2_sec": phase2_sec,
         "phase2_events_per_sec_overall": replay_res.get("events_per_sec"),
-        "markers_total": len(all_markers),
+        "committed_total": all_committed,
         "checkpoint_commits": len(ckpt_commits),
         "lineage_distinct_batches": len(set(lineage_batches)),
-        "lineage_duplicate_entries": dup_entries,
+        "duplicate_batch_records": dup_entries,
         "lineage_rows_in_total": lineage_rows_total,
         "re_applied_rows": lineage_rows_total - replay_res["events"],
         "actual_events": replay_res["events"],

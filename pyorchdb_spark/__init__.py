@@ -5,7 +5,7 @@ Re-expresses the capabilities of the reference ETL orchestrator
 
 - the reference's "new files since last run" catalog diff
   (PyOrchDB/utilities/catalog.py:96-105) becomes a binlog/WAL-shaped
-  change-event tail applied with exactly-once batch markers;
+  change-event tail applied with exactly-once batch records;
 - its pandas clean/infer/merge phases (PyOrchDB/main.py:106-238) become
   declarative DataFrame transforms + vectorized Arrow/pandas UDFs;
 - its append/override SQL load (PyOrchDB/utilities/tools.py:103-133)

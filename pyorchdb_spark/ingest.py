@@ -5,12 +5,12 @@ build→curate→load→upload flow (PyOrchDB/main.py:106-265), collapsed into
 a single declarative Catalyst plan per batch:
 
     raw events
-      → marker gate (skip committed batch_ids — one marker-file check)
+      → ledger gate (skip committed batch_ids — driver-side, no job)
       → prepare: ICU NFC + path rules, sha256 (built-in expressions, no Python)
       → C3 quarantine predicate (invalid rows never merge)
       → LWW dedup (salted two-stage when skew expected)
-      → MERGE INTO lake table
-      → rejects + lineage + marker commit
+      → MERGE INTO lake table: data files, then rejects, then ONE manifest
+        link that carries the batch record (the only commit point)
 
 There is one apply path, ``apply_batch``. The merge is merge-on-read
 (MoR): a table's first commit writes its base files, every later commit
@@ -132,8 +132,13 @@ def apply_batch(
     Lineage granularity is one row per batch (partition_id = -1): the
     observation yields global aggregates, and per-file granularity for
     the batch is already durable in the manifest (rows + footer seq
-    ranges per bucket file). ``low_watermark`` groups lineage by
-    batch_id, so the watermark derivation is unchanged.
+    ranges per bucket file).
+
+    The batch record (lineage, reject counts, the rejects directory) is
+    built after the data files are written and published by the same
+    manifest link as the data (``LakeTable.merge(record=)``): a failure
+    anywhere before the link leaves the batch uncommitted, and a retry
+    applies it once.
     """
     if ledger.is_committed(batch_id):
         return ApplyResult(batch_id, skipped=True, version=None, rows_in=0)
@@ -172,6 +177,28 @@ def apply_batch(
 
             w = winner_tuples(prepared.filter(reason.isNull()), keys=lake.keys)
             src = prune_to_winners(src, keys=lake.keys, winners=w)
+
+        def record() -> dict:
+            try:
+                metrics = [{"partition_id": -1, **obs.get}]
+            except Exception:
+                # The observation can come back EMPTY (pyspark's conversion
+                # then raises): when every row of a literal-sourced batch
+                # folds away at optimization time (e.g. a single straggler
+                # quarantined by the below-watermark predicate), Catalyst
+                # collapses the plan to an empty LocalRelation and the
+                # CollectMetrics node never executes. Such batches are
+                # degenerate by construction, so pay one explicit (tiny)
+                # metrics job for them; clean batches stay at one job.
+                metrics = ledger.collect_partition_metrics(prepared, reason)
+            rejected = sum(r["n_invalid"] or 0 for r in metrics)
+            rejects = None
+            if rejected:  # the rare reject path pays one extra job; clean batches never do
+                rejects = ledger.record_rejects(
+                    batch_id, prepared.withColumn("reject_reason", reason).filter(reason.isNotNull())
+                )
+            return ledger.record_lineage(batch_id, metrics, rows_rejected=rejected, rejects=rejects)
+
         manifest = lake.merge(
             src,
             batch_id=batch_id,
@@ -180,50 +207,12 @@ def apply_batch(
             num_files=num_files,
             rows_hint=rows_hint,
             manifest=m,
+            record=record,
         )
-        try:
-            got = obs.get
-            metrics = [
-                {
-                    "partition_id": -1,
-                    "rows_in": int(got["rows_in"] or 0),
-                    "tombstones": got["tombstones"],
-                    "max_seq": got["max_seq"],
-                    "min_seq": got["min_seq"],
-                }
-            ]
-            rejected = int(got["n_invalid"] or 0)
-        except Exception:
-            # The observation can come back EMPTY (pyspark's conversion
-            # then raises): when every row of a literal-sourced batch folds
-            # away at optimization time (e.g. a single straggler
-            # quarantined by the below-watermark predicate), Catalyst
-            # collapses the plan to an empty LocalRelation and the
-            # CollectMetrics node never executes. Such batches are
-            # degenerate by construction, so pay one explicit (tiny)
-            # metrics job for them; clean batches stay at one job.
-            metrics = ledger.collect_partition_metrics(prepared, invalid_reason=reason)
-            rejected = int(sum(r["n_invalid"] for r in metrics))
-        if rejected:
-            # divert invalid rows to _rejects: the rare reject path pays
-            # one extra job to materialize them; clean batches never do
-            ledger.record_rejects(
-                batch_id,
-                prepared.withColumn("reject_reason", reason).filter(
-                    F.col("reject_reason").isNotNull()
-                ),
-            )
-        rows_in = ledger.record_lineage(batch_id, metrics)
-        ledger.commit_marker(batch_id, manifest.version, rows_in)
     finally:
         conf.set("spark.sql.adaptive.enabled", aqe_prev)
-    return ApplyResult(
-        batch_id,
-        skipped=False,
-        version=manifest.version,
-        rows_in=rows_in,
-        rows_rejected=rejected,
-    )
+    rec = manifest.batch
+    return ApplyResult(batch_id, False, manifest.version, rec["rows_in"], rec["rows_rejected"])
 
 
 def maybe_compact(
@@ -236,13 +225,13 @@ def maybe_compact(
     """The compaction trigger, shared by batch replay and the
     streaming tail; call it after each ``apply_batch`` returns.
 
-    Two gates, both driver-only arithmetic: at least ``compact_factor``
-    delta commits accumulated AND some bucket group actually exceeds the
-    fold bounds — otherwise stale cold-group delta dirs would keep the
-    commit count high and re-trigger the (Spark-job) watermark derivation
-    after every batch for nothing. The compaction is partial: only bucket
-    groups whose delta backlog exceeds the bounds are rewritten; cold
-    buckets keep their base files.
+    Two gates, both driver-only arithmetic over one parse of the head
+    manifest: at least ``compact_factor`` delta commits accumulated AND
+    some bucket group actually exceeds the fold bounds — otherwise stale
+    cold-group delta dirs would keep the commit count high and re-run the
+    watermark derivation and fold planning after every batch for nothing.
+    The compaction is partial: only bucket groups whose delta backlog
+    exceeds the bounds are rewritten; cold buckets keep their base files.
 
     ``tombstone_lag_batches``: None retains ALL tombstones (arbitrarily
     late events may still arrive — no disorder contract declared);
@@ -253,7 +242,7 @@ def maybe_compact(
         return
     delta_commits = len({f["path"].split("/")[1] for f in m.files if f.get("delta")})
     if delta_commits < compact_factor or not lake.partial_compaction_due(
-        max_delta_files_per_group=compact_factor
+        max_delta_files_per_group=compact_factor, manifest=m
     ):
         return
     wm = None

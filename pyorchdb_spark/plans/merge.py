@@ -18,8 +18,8 @@ one algebraic form:
 which Catalyst executes as one hash-partitioned aggregate — no join at
 all, and it is *idempotent*: re-applying an already-applied batch is a
 no-op (the ``s.seq > t.seq`` guard falls out of the LWW ordering). That
-is what makes a crash between data commit and marker write safe
-(SURVEY.md section 7, hard part 1).
+is what makes re-applying a batch safe when no ledger record says it
+was applied (SURVEY.md section 7, hard part 1).
 
 **Tombstones are retained in stored state** (op='delete' rows survive the
 merge; they are filtered out of user-facing reads). This is load-bearing

@@ -38,7 +38,7 @@ from __future__ import annotations
 import glob
 import json
 import os
-import tempfile
+import shutil
 import uuid
 from collections.abc import Sequence
 
@@ -51,7 +51,7 @@ from pyorchdb_spark.operators.ivm import (
     group_contributions,
     lake_scoped_state,
 )
-from pyorchdb_spark.sources.lake import ConcurrentCommitError
+from pyorchdb_spark.sources.lake import ConcurrentCommitError, link_publish
 
 
 class MaintainedAggregate:
@@ -99,22 +99,13 @@ class MaintainedAggregate:
             for p in glob.glob(os.path.join(out_dir, "*.parquet"))
         ]
         m = {"version": version, "base_version": base_version, "files": files}
-        target = os.path.join(self._manifest_dir(), f"v{version:08d}.json")
-        fd, tmp = tempfile.mkstemp(dir=self._manifest_dir(), suffix=".tmp")
         try:
-            with os.fdopen(fd, "w") as fh:
-                json.dump(m, fh)
-            try:
-                os.link(tmp, target)
-            except FileExistsError:
-                # lost a concurrent-refresh race: remove THIS attempt's
-                # data files (same contract as LakeTable._remove_orphans)
-                import shutil
-
-                shutil.rmtree(out_dir, ignore_errors=True)
-                raise ConcurrentCommitError(target) from None
-        finally:
-            os.unlink(tmp)
+            link_publish(self._manifest_dir(), f"v{version:08d}.json", json.dumps(m))
+        except ConcurrentCommitError:
+            # lost a concurrent-refresh race: remove THIS attempt's
+            # data files (same contract as LakeTable._remove_orphans)
+            shutil.rmtree(out_dir, ignore_errors=True)
+            raise
         return m
 
     def _stored_agg(self, m: dict) -> DataFrame:

@@ -10,15 +10,17 @@ Iceberg means replacing this module only.
 
 Layout (all under one table root):
 
-    _manifests/v{N:08d}.json    -- one per commit; atomic link publish
+    _manifests/v{N:08d}.json          -- one per commit; atomic link publish
+    _manifests/batches-v{N:08d}.json  -- batch records of versions <= N
+                                         that vacuum deleted
     data/commit-{N:08d}-{uid}/_bucket={b}/*.parquet
-    _markers/{batch_id}.json    -- exactly-once ledger (see catalog.py)
-    _lineage/                   -- per-batch per-partition metrics parquet
+    _rejects/{uid}/*.parquet          -- one batch's quarantined rows
 
 Manifest = {version, parent, batch_id, schema(json), n_buckets,
-files:[{path, bucket, nb, rows}]} where bucket identity is explicit per
-file: ``bucket = pmod(xxhash64(*keys), nb)`` with ``nb`` the bucket-count
-generation the file was written under.
+files:[{path, bucket, nb, rows}], batch} where bucket identity is
+explicit per file: ``bucket = pmod(xxhash64(*keys), nb)`` with ``nb`` the
+bucket-count generation the file was written under. ``batch`` records the
+ingest batch the commit applied; the ledger (catalog.py) reads it.
 
 Scale notes (why this survives 100 TB):
 - MERGE is merge-on-read: a commit appends the batch's LWW winners as
@@ -54,12 +56,14 @@ Scale notes (why this survives 100 TB):
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import re
+import shutil
 import tempfile
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -74,6 +78,9 @@ from pyorchdb_spark.operators.dedup import DEFAULT_KEYS
 RETAIN_ALL_TOMBSTONES = -(1 << 62)
 
 KEY_SEP = "\x00"
+
+_VERSION_RE = re.compile(r"v(\d{8})\.json")
+_ARCHIVE_RE = re.compile(r"batches-v(\d{8})\.json")
 
 
 def composite_key(keys: Sequence[str] = DEFAULT_KEYS):
@@ -128,6 +135,9 @@ class Manifest:
     # checkpointed beyond a rolled-back head. None = unknowable
     # (stats-less/foreign files or pre-upgrade manifests) — guards skip.
     head_seq: int | None = None
+    # the record of the batch this commit applied (merge/overwrite with a
+    # batch id); compaction and rollback commits carry none
+    batch: dict | None = None
 
     def schema(self) -> StructType:
         return StructType.fromJson(json.loads(self.schema_json))
@@ -143,6 +153,7 @@ class Manifest:
                 "tombstone_watermark": self.tombstone_watermark,
                 "head_seq": self.head_seq,
                 "files": self.files,
+                "batch": self.batch,
             }
         )
 
@@ -158,11 +169,62 @@ class Manifest:
             n_buckets=d.get("n_buckets"),
             tombstone_watermark=d.get("tombstone_watermark"),
             head_seq=d.get("head_seq"),
+            batch=d.get("batch"),
         )
+
+
+def read_batch_records(root: str, after: int = 0) -> tuple[list[dict], int]:
+    """Batch records of the versions above ``after``, oldest first, each
+    tagged with its ``version``, and the newest version read. Versions a
+    vacuum deleted are read from its newest archive; a version without a
+    record (compaction, rollback) contributes none. Driver-only file reads."""
+    mdir = os.path.join(root, "_manifests")
+    try:
+        names = os.listdir(mdir)
+    except FileNotFoundError:
+        return [], after
+    versions = sorted(int(m.group(1)) for f in names if (m := _VERSION_RE.fullmatch(f)))
+    archived = max((int(m.group(1)) for f in names if (m := _ARCHIVE_RE.fullmatch(f))), default=0)
+    records: list[dict] = []
+    if archived > after:
+        with open(os.path.join(mdir, f"batches-v{archived:08d}.json")) as fh:
+            records = [r for r in json.load(fh) if r["version"] > after]
+        after = archived
+    for v in versions:
+        if v > after:
+            with open(os.path.join(mdir, f"v{v:08d}.json")) as fh:
+                batch = json.load(fh).get("batch")
+            if batch is not None:
+                records.append({**batch, "version": v})
+            after = v
+    return records, after
+
+
+def bare_record(batch_id: str | None) -> Callable[[], dict] | None:
+    """The record of a commit that names a batch but measures nothing
+    (``workflow.upload``, SCD2 folds, direct merges)."""
+    return None if batch_id is None else (lambda: {"batch_id": batch_id})
 
 
 class ConcurrentCommitError(RuntimeError):
     """Another writer published this manifest version first."""
+
+
+def link_publish(directory: str, name: str, text: str) -> None:
+    """Atomic commit: os.link(tmp, target) either creates ``name`` or
+    raises — there is no exists-then-rename window, and a loser can never
+    clobber the winner's manifest (ADVICE round 1)."""
+    target = os.path.join(directory, name)
+    fd, tmp = tempfile.mkstemp(dir=directory, suffix=".tmp")
+    try:
+        with os.fdopen(fd, "w") as fh:
+            fh.write(text)
+        try:
+            os.link(tmp, target)
+        except FileExistsError:
+            raise ConcurrentCommitError(target) from None
+    finally:
+        os.unlink(tmp)
 
 
 class LakeTable:
@@ -199,7 +261,7 @@ class LakeTable:
         versions = [
             int(m.group(1))
             for f in os.listdir(self._manifest_dir())
-            if (m := re.fullmatch(r"v(\d{8})\.json", f))
+            if (m := _VERSION_RE.fullmatch(f))
         ]
         return max(versions) if versions else None
 
@@ -211,20 +273,22 @@ class LakeTable:
             return Manifest.from_json(fh.read())
 
     def _publish(self, manifest: Manifest) -> None:
-        """Atomic commit: os.link(tmp, target) either creates the version
-        or raises — there is no exists-then-rename window, and a loser can
-        never clobber the winner's manifest (ADVICE round 1)."""
-        target = os.path.join(self._manifest_dir(), f"v{manifest.version:08d}.json")
-        fd, tmp = tempfile.mkstemp(dir=self._manifest_dir(), suffix=".tmp")
+        link_publish(self._manifest_dir(), f"v{manifest.version:08d}.json", manifest.to_json())
+
+    def _commit(
+        self, manifest: Manifest, new_files: list[dict], record: Callable[[], dict] | None = None
+    ) -> Manifest:
+        """Publish ``manifest``; ``record`` builds its batch record after the
+        data files are written (an ``Observation`` is ready only then) and
+        before the link. A losing writer removes its own data files."""
+        if record is not None:
+            manifest.batch = record()
         try:
-            with os.fdopen(fd, "w") as fh:
-                fh.write(manifest.to_json())
-            try:
-                os.link(tmp, target)
-            except FileExistsError:
-                raise ConcurrentCommitError(target) from None
-        finally:
-            os.unlink(tmp)
+            self._publish(manifest)
+        except ConcurrentCommitError:
+            self._remove_orphans(new_files)
+            raise
+        return manifest
 
     def _remove_orphans(self, files: list[dict]) -> None:
         """Delete data files written by a commit attempt that lost the race."""
@@ -646,6 +710,7 @@ class LakeTable:
         num_files: int | None = None,
         rows_hint: int | None = None,
         manifest: Manifest | None = None,
+        record: Callable[[], dict] | None = None,
     ) -> Manifest:
         """MERGE INTO this table: upsert/delete with LWW-by-seq semantics,
         merge-on-read (the Hudi-MOR / Iceberg-v2 commit shape).
@@ -663,6 +728,9 @@ class LakeTable:
 
         ``manifest``: the caller's already-parsed head (ingest.apply_batch),
         so MERGE re-parses no manifest JSON.
+
+        ``record``: builds the batch record this commit publishes (see
+        ``_commit``); without one, a ``batch_id`` is recorded bare.
 
         The delta's bucket GENERATION is sized from the batch volume
         (``rows_hint``; the fused apply path knows the previous batch's
@@ -740,12 +808,7 @@ class LakeTable:
             tombstone_watermark=m.tombstone_watermark if m is not None else None,
             head_seq=self._derive_head_seq(m, old_files + new_files),
         )
-        try:
-            self._publish(manifest)
-        except ConcurrentCommitError:
-            self._remove_orphans(new_files)
-            raise
-        return manifest
+        return self._commit(manifest, new_files, record or bare_record(batch_id))
 
     def overwrite(
         self,
@@ -753,6 +816,7 @@ class LakeTable:
         batch_id: str | None = None,
         num_files: int | None = None,
         rows_hint: int | None = None,
+        record: Callable[[], dict] | None = None,
     ) -> Manifest:
         """Replace the whole table state (initial load / test setup)."""
         m = self.manifest()
@@ -774,12 +838,7 @@ class LakeTable:
             tombstone_watermark=m.tombstone_watermark if m else None,
             head_seq=self._derive_head_seq(m, new_files),
         )
-        try:
-            self._publish(manifest)
-        except ConcurrentCommitError:
-            self._remove_orphans(new_files)
-            raise
-        return manifest
+        return self._commit(manifest, new_files, record or bare_record(batch_id))
 
     # ---------- maintenance ----------
 
@@ -826,12 +885,7 @@ class LakeTable:
             tombstone_watermark=new_wm,
             head_seq=self._derive_head_seq(m, new_files),
         )
-        try:
-            self._publish(manifest)
-        except ConcurrentCommitError:
-            self._remove_orphans(new_files)
-            raise
-        return manifest
+        return self._commit(manifest, new_files)
 
     @staticmethod
     def _partial_selection(
@@ -860,13 +914,14 @@ class LakeTable:
         self,
         delta_fraction: float = 0.125,
         max_delta_files_per_group: int = 8,
+        manifest: Manifest | None = None,
     ) -> bool:
         """True when compact_partial would rewrite something — callers
-        use this cheap (driver-only) check to avoid paying for the
-        low-watermark derivation (a Spark job over lineage) on every
+        use this cheap (driver-only) check to avoid rewriting on every
         micro-batch once old delta commit dirs keep the commit COUNT
-        high while no group actually exceeds the bounds."""
-        m = self.manifest()
+        high while no group actually exceeds the bounds. ``manifest``:
+        the caller's already-parsed head (``ingest.maybe_compact``)."""
+        m = manifest if manifest is not None else self.manifest()
         if m is None or not any(f.get("delta") for f in m.files):
             return False
         if any(f.get("bucket") is None or not f.get("nb") for f in m.files):
@@ -1004,22 +1059,21 @@ class LakeTable:
             tombstone_watermark=new_wm,
             head_seq=self._derive_head_seq(m, untouched + new_files),
         )
-        try:
-            self._publish(manifest)
-        except ConcurrentCommitError:
-            self._remove_orphans(new_files)
-            raise
-        return manifest
+        return self._commit(manifest, new_files)
 
     def vacuum(self, keep_versions: int = 1) -> list[str]:
         """Delete data files unreferenced by the newest ``keep_versions``
-        manifests (time-travel GC). Returns deleted relative paths."""
+        manifests (time-travel GC) and reject directories no batch record
+        names. Returns deleted relative paths. The deleted manifests' batch
+        records are first archived in ONE link-published
+        ``batches-v{N}.json`` that subsumes older archives (the Delta
+        checkpoint shape), so batch history survives."""
         cur = self.current_version()
         if cur is None:
             return []
+        first = max(1, cur - keep_versions + 1)
         keep = set()
-        kept_versions = range(max(1, cur - keep_versions + 1), cur + 1)
-        for v in kept_versions:
+        for v in range(first, cur + 1):
             mf = self.manifest(v)
             if mf:
                 keep.update(f["path"] for f in mf.files)
@@ -1036,8 +1090,25 @@ class LakeTable:
                     os.rmdir(commit_dir)
                 except OSError:
                     pass
-        # drop manifests older than the keep window
-        for f in os.listdir(self._manifest_dir()):
-            if (mm := re.fullmatch(r"v(\d{8})\.json", f)) and int(mm.group(1)) < min(kept_versions):
-                os.unlink(os.path.join(self._manifest_dir(), f))
+        records, _ = read_batch_records(self.root)
+        named = {r["rejects"] for r in records if r.get("rejects")}
+        for p in glob.glob(os.path.join(self.root, "_rejects", "*", "")):  # directories only
+            rel = os.path.relpath(p, self.root)
+            if rel not in named:
+                shutil.rmtree(p)
+                deleted.append(rel)
+        mdir = self._manifest_dir()
+        gone = [
+            f for f in os.listdir(mdir)
+            if (mm := _VERSION_RE.fullmatch(f)) and int(mm.group(1)) < first
+        ]
+        archive = f"batches-v{first - 1:08d}.json"
+        if gone and not os.path.exists(os.path.join(mdir, archive)):
+            link_publish(mdir, archive, json.dumps([r for r in records if r["version"] < first]))
+            gone += [
+                f for f in os.listdir(mdir)
+                if (mm := _ARCHIVE_RE.fullmatch(f)) and int(mm.group(1)) < first - 1
+            ]
+        for f in gone:
+            os.unlink(os.path.join(mdir, f))
         return deleted

@@ -32,7 +32,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from pyorchdb_spark.operators.scd import scd2_apply_batch, scd2_history
-from pyorchdb_spark.sources.lake import ConcurrentCommitError, LakeTable, Manifest
+from pyorchdb_spark.sources.lake import LakeTable, Manifest, bare_record
 
 
 class Scd2Table:
@@ -119,9 +119,4 @@ class Scd2Table:
             tombstone_watermark=m.tombstone_watermark,
             head_seq=None,  # history files carry no raw `seq` footer stats
         )
-        try:
-            self.lake._publish(manifest)
-        except ConcurrentCommitError:
-            self.lake._remove_orphans(new_files)
-            raise
-        return manifest
+        return self.lake._commit(manifest, new_files, bare_record(batch_id))

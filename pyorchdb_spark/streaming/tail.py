@@ -10,9 +10,9 @@ Exactly-once is layered twice:
 1. Spark's checkpoint guarantees each source file is delivered to
    ``foreachBatch`` once (resume-after-kill = continue from offsets —
    maps the reference's catalog persistence, catalog.py:107-109).
-2. Our own batch markers make the apply idempotent even if a micro-batch
-   is re-delivered after a crash *inside* foreachBatch (markers keyed by
-   the stream's epoch id).
+2. Our own batch records (committed in the lake manifest, keyed by the
+   stream's epoch id) make the apply idempotent even if a micro-batch is
+   re-delivered after a crash *inside* foreachBatch.
 
 ``availableNow`` trigger = bounded replay of everything currently in the
 log, in bounded micro-batches — the batch/stream unification point.
@@ -79,10 +79,10 @@ def tail_events(
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     stream = reader.parquet(events_path)
 
-    # Markers are namespaced by the checkpoint identity, not just the
+    # Batch ids are namespaced by the checkpoint identity, not just the
     # epoch id: epoch ids restart at 0 if the checkpoint dir is deleted or
     # a second stream (different checkpoint) feeds the same table, and a
-    # bare "stream-{epoch}" marker would silently skip those batches.
+    # bare "stream-{epoch}" id would silently skip those batches.
     stream_ns = hashlib.sha256(os.path.abspath(checkpoint_dir).encode()).hexdigest()[:12]
 
     # previous batch's row count sizes the next delta generation (the

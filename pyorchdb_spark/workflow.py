@@ -301,13 +301,11 @@ class ETLWorkflow:
             ev = df.withColumn(
                 "seq", F.xxhash64(*[F.col(c) for c in df.columns])
             ).withColumn("op", F.lit("upsert"))
+            # the manifest this merge publishes records batch_id: the
+            # next upload's is_committed gate reads it
             manifest = lake.merge(ev, batch_id=batch_id)
             # table rows from the manifest (footer-derived) — the old
             # snapshot().count() + df.count() pair cost two extra table
-            # scans per table in the facade path (VERDICT r2, minor #4);
-            # NB the marker's rows_in records TABLE rows here (idempotent
-            # re-upload has no distinct "input rows" notion)
-            table_rows = _table_rows(lake, manifest)
-            ledger.commit_marker(batch_id, manifest.version, rows_in=table_rows)
-            rows[name] = table_rows
+            # scans per table in the facade path (VERDICT r2, minor #4)
+            rows[name] = _table_rows(lake, manifest)
         return rows

@@ -48,12 +48,27 @@ def test_merge_is_idempotent_and_exactly_once(spark, tmp_path):
     assert lake.current_version() == v1
     assert _sig(lake.snapshot()) == sig1
 
-    # simulated crash between manifest commit and marker write: force
-    # re-merge of the last batch despite its data being in → still a no-op
+    # simulated crash inside the last batch's commit, before the manifest
+    # link: the batch stays uncommitted, and the retry applies it once
+    import pytest
+
     last_batch = r1[-1].batch_id
-    os.unlink(os.path.join(ledger.markers_dir, f"{last_batch}.json"))
-    replay(lake, ledger, ev.filter(F.col("batch_id") == last_batch), num_files=2)
-    assert _sig(lake.snapshot()) == sig1
+    root2 = str(tmp_path / "t2")
+    lake2, ledger2 = LakeTable(spark, root2), BatchLedger(spark, root2)
+    replay(lake2, ledger2, ev.filter(F.col("batch_id") != last_batch), num_files=2)
+
+    def crash(self, manifest):
+        raise RuntimeError("crash before the link")
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(LakeTable, "_publish", crash)
+        with pytest.raises(RuntimeError, match="crash before the link"):
+            replay(lake2, ledger2, ev.filter(F.col("batch_id") == last_batch), num_files=2)
+    assert not ledger2.is_committed(last_batch)
+    r3 = replay(LakeTable(spark, root2), BatchLedger(spark, root2), ev, num_files=2)
+    assert [r.skipped for r in r3] == [r.batch_id != last_batch for r in r3]
+    assert lake2.current_version() == v1
+    assert _sig(lake2.snapshot()) == sig1
 
 
 def test_salted_merge_equals_plain(spark, tmp_path):

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from pyorchdb_spark.generator import change_events
@@ -73,18 +74,31 @@ def test_mor_delta_write_proportional_to_batch(spark, tmp_path):
     assert sum(f["rows"] for f in delta) <= 2_200  # one 2k-event batch (incl. dups)
 
 
-def test_mor_idempotent_and_out_of_order_delete(spark, tmp_path):
+def test_mor_idempotent_and_out_of_order_delete(spark, tmp_path, monkeypatch):
     root = str(tmp_path / "t")
     lake, ledger = LakeTable(spark, root), BatchLedger(spark, root)
     ev = change_events(spark, 2_000, batch_size=1_000)
-    replay(lake, ledger, ev, num_files=2)
-    sig1 = _sig(lake.snapshot())
-
-    # crash between manifest publish and marker write → re-apply appends a
-    # duplicate delta; LWW resolution makes it a logical no-op
     last = "b000001"
-    os.unlink(os.path.join(ledger.markers_dir, f"{last}.json"))
-    replay(lake, ledger, ev.filter(F.col("batch_id") == last), num_files=2)
+    replay(lake, ledger, ev.filter(F.col("batch_id") != last), num_files=2)
+
+    # crash inside the last batch's delta commit, before the manifest
+    # link: its delta files are orphans no version names, and the retry
+    # applies the batch once
+    def crash(self, manifest):
+        raise RuntimeError("crash before the link")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(LakeTable, "_publish", crash)
+        with pytest.raises(RuntimeError, match="crash before the link"):
+            replay(lake, ledger, ev.filter(F.col("batch_id") == last), num_files=2)
+    res = replay(lake, ledger, ev, num_files=2)
+    assert [r.skipped for r in res] == [True, False]
+    sig1 = _sig(lake.snapshot())
+    assert sig1 == _oracle_sig(ev)
+    # a batch merged twice (a table whose batches predate the manifest
+    # record re-applies them) appends a duplicate delta; LWW resolution
+    # makes it a logical no-op
+    lake.merge(prepare_events(ev.filter(F.col("batch_id") == last)))
     assert _sig(lake.snapshot()) == sig1
 
     # out-of-order late upsert below an applied delete's seq stays dead.
@@ -314,16 +328,24 @@ def test_partial_compaction_noop_below_bounds(spark, tmp_path):
 def test_low_watermark_orders_by_commit_time_not_batch_id(spark, tmp_path):
     """ADVICE r3 #1: batches from heterogeneous feeders ('b%06d' replay +
     'stream-<sha>-<epoch>' tails) do NOT sort in time order
-    lexicographically; low_watermark must order them by the durable
-    committed_at ordinal recorded in lineage."""
+    lexicographically; low_watermark must order them by commit order —
+    the manifest version that recorded each batch."""
+    from pyorchdb_spark.ingest import apply_batch
+
     root = str(tmp_path / "t")
-    ledger = BatchLedger(spark, root)
+    lake, ledger = LakeTable(spark, root), BatchLedger(spark, root)
 
     def rec(batch_id, mn, mx):
-        ledger.record_lineage(
-            batch_id,
-            [{"partition_id": 0, "rows_in": mx - mn + 1, "tombstones": 0,
-              "max_seq": mx, "min_seq": mn}],
+        # two events spanning [mn, mx]: the batch's lineage min/max seq
+        apply_batch(
+            lake, ledger,
+            spark.createDataFrame(
+                [("r", f"{batch_id}-lo.py", "c", mn, "upsert", "py", "x", batch_id),
+                 ("r", f"{batch_id}-hi.py", "c", mx, "upsert", "py", "x", batch_id)],
+                "repo string, path string, commit string, seq long, op string, "
+                "lang string, content string, batch_id string",
+            ),
+            batch_id, num_files=1,
         )
 
     # COMMIT order (time): stream, stream, replay, replay — seqs increase
