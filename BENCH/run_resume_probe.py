@@ -14,7 +14,7 @@ Protocol (all via spark-submit --py-files, the north-rule job surface):
 2. phase 1: start the streaming tail (``replay --mode stream``)
    as a subprocess and SIGKILL the whole process group (no JVM shutdown
    hooks, no stop(), a real crash) once K batches are committed (batch
-   records in the table's manifests, ``BatchLedger.markers()``).
+   records in the table's manifests, read without Spark).
 3. phase 2: rerun the identical command, same checkpoint; it must
    resume from committed offsets and drain the rest.
 4. accounting, from durable state only (the manifests' batch records +
@@ -76,20 +76,12 @@ def main() -> None:
     args = ap.parse_args()
 
     zpath = build_zip()
-    # local pyspark in-process: counts committed batches while the tail
-    # runs, then does the accounting below; reads only durable state
-    from pyspark.sql import SparkSession, functions as F
-
     sys.path.insert(0, REPO)
-    spark = (SparkSession.builder.master("local[32]")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.driver.memory", "24g")
-             .config("spark.local.dir", os.path.join(SCRATCH, "tmp"))
-             .getOrCreate())
-    from pyorchdb_spark.sources.catalog import BatchLedger
+    from pyorchdb_spark.sources.lake import read_batch_records
 
     def committed() -> int:
-        return BatchLedger(spark, table).markers().count()
+        # driver-side file reads of the manifests: no Spark while the tail runs
+        return len({r["batch_id"] for r in read_batch_records(table)[0]})
 
     n_batches = args.n_events // args.batch_size
     evolution_batch = n_batches // 2
@@ -158,9 +150,18 @@ def main() -> None:
                         master=args.master)
 
     # ---- exactly-once accounting + evolution winner equality ----
+    # local pyspark in-process, started after phase 2 so it never runs
+    # beside the timed tail; reads only durable state
+    from pyspark.sql import SparkSession, functions as F
+    spark = (SparkSession.builder.master("local[32]")
+             .config("spark.sql.shuffle.partitions", "32")
+             .config("spark.driver.memory", "24g")
+             .config("spark.local.dir", os.path.join(SCRATCH, "tmp"))
+             .getOrCreate())
     from pyorchdb_spark.operators.dedup import lww_dedup
     from pyorchdb_spark.ingest import prepare_events, invalid_reason
-    from pyorchdb_spark.sources.lake import LakeTable, read_batch_records
+    from pyorchdb_spark.sources.catalog import BatchLedger
+    from pyorchdb_spark.sources.lake import LakeTable
 
     lin = BatchLedger(spark, table).lineage().groupBy("batch_id").agg(
         F.sum("rows_in").alias("rows_in")).collect()

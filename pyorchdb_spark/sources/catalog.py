@@ -106,9 +106,7 @@ class BatchLedger:
             .collect()
         )
 
-    def record_lineage(
-        self, batch_id: str, metrics_rows: list, *, rows_rejected: int = 0, rejects: str | None = None
-    ) -> dict:
+    def record_lineage(self, batch_id: str, metrics_rows: list, rows_rejected: int, rejects: str | None) -> dict:
         """The batch record for the manifest (``LakeTable.merge(record=)``)
         from the collected per-partition metrics (``collect_partition_metrics``
         or the apply's ``Observation``). Pure: writes nothing."""
@@ -152,23 +150,13 @@ class BatchLedger:
         ('b%06d' replay vs 'stream-<sha12>-<epoch>' tails) do not sort in
         time order, and a misidentified head derives a watermark too high
         (ADVICE r3 #1). Driver-side arithmetic over the records."""
-        rows = []
-        for r in self._refresh():
-            lin = r.get("lineage")
-            if lin:
-                mx = [p["max_seq"] for p in lin if p["max_seq"] is not None]
-                mn = [p["min_seq"] for p in lin if p["min_seq"] is not None]
-                rows.append((max(mx, default=None), min(mn, default=None)))
-        if len(rows) <= lag_batches:
+        batches = [r["lineage"] for r in self._refresh() if r.get("lineage")]
+        cut = len(batches) - lag_batches
+        maxes = [p["max_seq"] for lin in batches[:cut] for p in lin if p["max_seq"] is not None]
+        if cut <= 0 or not maxes:
             return None
-        maxes = [mx for mx, _ in rows[: len(rows) - lag_batches] if mx is not None]
-        if not maxes:
-            return None
-        w = max(maxes)
-        lag_mins = [mn for _, mn in rows[len(rows) - lag_batches:] if mn is not None]
-        if lag_mins:
-            w = min(w, min(lag_mins) - 1)
-        return int(w)
+        lag_mins = [p["min_seq"] - 1 for lin in batches[cut:] for p in lin if p["min_seq"] is not None]
+        return int(min([max(maxes), *lag_mins]))
 
     # ---------- quarantine (C3: error-row removal, reborn) ----------
     # The reference silently drops whole tables that fail processing

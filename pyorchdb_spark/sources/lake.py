@@ -175,34 +175,44 @@ class Manifest:
 
 def read_batch_records(root: str, after: int = 0) -> tuple[list[dict], int]:
     """Batch records of the versions above ``after``, oldest first, each
-    tagged with its ``version``, and the newest version read. Versions a
-    vacuum deleted are read from its newest archive; a version without a
-    record (compaction, rollback) contributes none. Driver-only file reads."""
+    tagged with its ``version``, and the newest version read. A version
+    without a record (compaction, rollback) contributes none.
+
+    The versions above ``after`` are probed in turn, so a call costs in
+    proportion to the new versions. vacuum deletes versions oldest first:
+    while the last version read still exists, the first missing one was
+    never published. Otherwise (a vacuum moved the window, or nothing was
+    read) the probe restarts from the newest archive. Driver-only reads."""
     mdir = os.path.join(root, "_manifests")
-    try:
-        names = os.listdir(mdir)
-    except FileNotFoundError:
-        return [], after
-    versions = sorted(int(m.group(1)) for f in names if (m := _VERSION_RE.fullmatch(f)))
-    archived = max((int(m.group(1)) for f in names if (m := _ARCHIVE_RE.fullmatch(f))), default=0)
     records: list[dict] = []
-    if archived > after:
-        with open(os.path.join(mdir, f"batches-v{archived:08d}.json")) as fh:
-            records = [r for r in json.load(fh) if r["version"] > after]
-        after = archived
-    for v in versions:
-        if v > after:
-            with open(os.path.join(mdir, f"v{v:08d}.json")) as fh:
-                batch = json.load(fh).get("batch")
+
+    def probe(v: int) -> int:
+        while True:
+            try:
+                with open(os.path.join(mdir, f"v{v + 1:08d}.json")) as fh:
+                    batch = json.load(fh).get("batch")
+            except FileNotFoundError:
+                return v
+            v += 1
             if batch is not None:
                 records.append({**batch, "version": v})
-            after = v
-    return records, after
+
+    v = probe(after)
+    if v and os.path.exists(os.path.join(mdir, f"v{v:08d}.json")):
+        return records, v
+    records.clear()
+    names = os.listdir(mdir) if os.path.isdir(mdir) else []
+    archived = max((int(m.group(1)) for f in names if (m := _ARCHIVE_RE.fullmatch(f))), default=0)
+    if archived > after:
+        with open(os.path.join(mdir, f"batches-v{archived:08d}.json")) as fh:
+            records += [r for r in json.load(fh) if r["version"] > after]
+        after = archived
+    return records, probe(after)
 
 
 def bare_record(batch_id: str | None) -> Callable[[], dict] | None:
-    """The record of a commit that names a batch but measures nothing
-    (``workflow.upload``, SCD2 folds, direct merges)."""
+    """The record of a merge or overwrite that names a batch but measures
+    nothing (``workflow.upload``, direct merges)."""
     return None if batch_id is None else (lambda: {"batch_id": batch_id})
 
 
@@ -280,13 +290,16 @@ class LakeTable:
     ) -> Manifest:
         """Publish ``manifest``; ``record`` builds its batch record after the
         data files are written (an ``Observation`` is ready only then) and
-        before the link. A losing writer removes its own data files."""
+        before the link. A losing writer removes its own data files and
+        the rejects directory its record names."""
         if record is not None:
             manifest.batch = record()
         try:
             self._publish(manifest)
         except ConcurrentCommitError:
             self._remove_orphans(new_files)
+            if (manifest.batch or {}).get("rejects"):
+                shutil.rmtree(os.path.join(self.root, manifest.batch["rejects"]), ignore_errors=True)
             raise
         return manifest
 
@@ -816,7 +829,6 @@ class LakeTable:
         batch_id: str | None = None,
         num_files: int | None = None,
         rows_hint: int | None = None,
-        record: Callable[[], dict] | None = None,
     ) -> Manifest:
         """Replace the whole table state (initial load / test setup)."""
         m = self.manifest()
@@ -838,7 +850,7 @@ class LakeTable:
             tombstone_watermark=m.tombstone_watermark if m else None,
             head_seq=self._derive_head_seq(m, new_files),
         )
-        return self._commit(manifest, new_files, record or bare_record(batch_id))
+        return self._commit(manifest, new_files, bare_record(batch_id))
 
     # ---------- maintenance ----------
 
@@ -1109,6 +1121,6 @@ class LakeTable:
                 f for f in os.listdir(mdir)
                 if (mm := _ARCHIVE_RE.fullmatch(f)) and int(mm.group(1)) < first - 1
             ]
-        for f in gone:
+        for f in sorted(gone):  # oldest first: read_batch_records relies on it
             os.unlink(os.path.join(mdir, f))
         return deleted

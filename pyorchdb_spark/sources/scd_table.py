@@ -32,7 +32,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from pyorchdb_spark.operators.scd import scd2_apply_batch, scd2_history
-from pyorchdb_spark.sources.lake import LakeTable, Manifest, bare_record
+from pyorchdb_spark.sources.lake import LakeTable, Manifest
 
 
 class Scd2Table:
@@ -119,4 +119,4 @@ class Scd2Table:
             tombstone_watermark=m.tombstone_watermark,
             head_seq=None,  # history files carry no raw `seq` footer stats
         )
-        return self.lake._commit(manifest, new_files, bare_record(batch_id))
+        return self.lake._commit(manifest, new_files)

@@ -8,6 +8,7 @@ and that batch history survives ``vacuum``.
 
 from __future__ import annotations
 
+import dataclasses
 import os
 
 import pytest
@@ -17,7 +18,7 @@ from pyorchdb_spark.generator import change_events
 from pyorchdb_spark.ingest import prepare_events, replay
 from pyorchdb_spark.oracle import expected_final_state, state_signature
 from pyorchdb_spark.sources.catalog import BatchLedger
-from pyorchdb_spark.sources.lake import LakeTable, read_batch_records
+from pyorchdb_spark.sources.lake import ConcurrentCommitError, LakeTable, read_batch_records
 from pyorchdb_spark.streaming.tail import EVENT_SCHEMA_DDL
 
 BATCHES = ["b000000", "b000001", "b000002"]
@@ -126,7 +127,34 @@ def test_crash_at_every_commit_step_applies_each_batch_once(spark, tmp_path, mon
     assert sorted(r["reject_reason"] for r in ledger.rejects().collect()) == REASONS
 
 
-def test_ledger_reads_run_no_spark_job_and_create_no_directories(spark, tmp_path):
+def test_losing_writer_removes_its_data_files_and_rejects(spark, tmp_path, monkeypatch):
+    log, _, oracle = _log(spark)
+    root = str(tmp_path / "t")
+    lake, ledger = LakeTable(spark, root), BatchLedger(spark, root)
+    replay(lake, ledger, log.filter(F.col("batch_id") == "b000000"), num_files=2)
+    publish = LakeTable._publish
+
+    def lose_race(self, manifest):
+        # another writer links this version first: an empty commit over the head
+        head = self.manifest()
+        rival = dataclasses.replace(head, version=head.version + 1, parent=head.version, batch_id=None, batch=None)
+        publish(self, rival)
+        publish(self, manifest)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(LakeTable, "_publish", lose_race)
+        with pytest.raises(ConcurrentCommitError):
+            replay(lake, ledger, log.filter(F.col("batch_id") == "b000001"), num_files=2)
+    assert not _orphans(lake)
+    assert os.listdir(os.path.join(root, "_rejects")) == []
+
+    res = replay(LakeTable(spark, root), BatchLedger(spark, root), log, num_files=2)
+    assert [r.skipped for r in res] == [True, False, False]
+    assert _sig(lake.snapshot()) == oracle
+    assert sorted(r["reject_reason"] for r in ledger.rejects().collect()) == REASONS
+
+
+def test_ledger_reads_run_no_spark_job_and_create_no_directories(spark, tmp_path, monkeypatch):
     root = str(tmp_path / "t")
     lake, ledger = LakeTable(spark, root), BatchLedger(spark, root)
     replay(lake, ledger, change_events(spark, 1_500, batch_size=500), num_files=2)
@@ -142,6 +170,9 @@ def test_ledger_reads_run_no_spark_job_and_create_no_directories(spark, tmp_path
         led.lineage()
         led.markers()
         assert job_counter() == before
+    with monkeypatch.context() as mp:
+        mp.setattr(os, "listdir", _crash)  # a warm gate probes new versions, it lists nothing
+        assert ledger.is_committed("b000002") and not ledger.is_committed("b000003")
 
 
 def test_vacuum_keeps_batch_history(spark, tmp_path):
