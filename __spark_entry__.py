@@ -307,61 +307,6 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# event analytics: top-k, event-time windows, funnel, cohorts.  Not CDC
-# queries, so they stay out of queries(); tests/test_entry.py checks them
-# against analytics_oracle_sql().
-# --------------------------------------------------------------------------
-
-def q_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O1 — deterministic global sort + limit (top-10 users by value)."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy("user_id")
-        .agg(F.sum("value").alias("total_value"), F.count(F.lit(1)).alias("n_events"))
-        .orderBy(F.desc("n_events"), F.asc("user_id"))
-        .limit(10)
-        .select("user_id", "n_events")
-    )
-
-
-def q_events_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-day event-time windows per event_type (F.window)."""
-    from pyorchdb_spark.operators.timeseries import windowed_agg
-
-    ev = _t(spark, sf_dir, "events")
-    return windowed_agg(ev, "ts", "1 day", keys=("event_type",))
-
-
-def q_events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hopping windows (2-day length, 1-day slide): each event lands in
-    exactly 2 windows — Catalyst expands this as a generator, so shuffle
-    volume grows by exactly the windows-per-event factor."""
-    from pyorchdb_spark.operators.timeseries import windowed_agg
-
-    ev = _t(spark, sf_dir, "events")
-    return windowed_agg(ev, "ts", "2 days", slide="1 day")
-
-
-def q_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered conversion funnel view -> click -> purchase (one user
-    shuffle; stage chain as codegen'd array expressions — the oracle is
-    the equivalent chain of min-aggregate CTEs)."""
-    from pyorchdb_spark.operators.timeseries import funnel
-
-    ev = _t(spark, sf_dir, "events")
-    return funnel(ev, "ts", stages=("view", "click", "purchase"))
-
-
-def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Day-granularity cohort retention triangle over the events table
-    (single user-keyed shuffle; see operators/timeseries.py)."""
-    from pyorchdb_spark.operators.timeseries import cohort_retention
-
-    ev = _t(spark, sf_dir, "events")
-    return cohort_retention(ev, "ts")
-
-
-# --------------------------------------------------------------------------
 # CDC history projections (SCD2 / transitions)
 # --------------------------------------------------------------------------
 
@@ -1582,74 +1527,3 @@ def oracle_sql() -> dict[str, str]:
         """,
     }
 
-
-def analytics_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "topk_users": q_topk_users,
-        "events_windowed": q_events_windowed,
-        "events_sliding": q_events_sliding,
-        "funnel_steps": q_funnel_steps,
-        "cohort_retention": q_cohort_retention,
-    }
-
-
-def analytics_oracle_sql() -> dict[str, str]:
-    return {
-        "topk_users": """
-            SELECT user_id, n_events FROM (
-              SELECT user_id, count(*) AS n_events
-              FROM events GROUP BY user_id
-            ) ORDER BY n_events DESC, user_id ASC LIMIT 10
-        """,
-        "events_windowed": """
-            SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS window_start,
-                   CAST(date_trunc('day', ts) AS TIMESTAMP) + INTERVAL 1 DAY AS window_end,
-                   event_type,
-                   count(*) AS n_events,
-                   round(sum(value), 2) AS total_value
-            FROM events GROUP BY 1, 2, 3
-        """,
-        "events_sliding": """
-            WITH w AS (
-              SELECT CAST(date_trunc('day', ts) AS TIMESTAMP)
-                       - x * INTERVAL 1 DAY AS window_start, value
-              FROM events, (VALUES (0), (1)) t(x)
-            )
-            SELECT window_start,
-                   window_start + INTERVAL 2 DAY AS window_end,
-                   count(*) AS n_events,
-                   round(sum(value), 2) AS total_value
-            FROM w GROUP BY 1, 2
-        """,
-        "funnel_steps": """
-            WITH s1 AS (
-              SELECT user_id, min(ts) AS t FROM events
-              WHERE event_type = 'view' GROUP BY 1
-            ), s2 AS (
-              SELECT e.user_id, min(e.ts) AS t
-              FROM events e JOIN s1 ON e.user_id = s1.user_id AND e.ts >= s1.t
-              WHERE e.event_type = 'click' GROUP BY 1
-            ), s3 AS (
-              SELECT e.user_id, min(e.ts) AS t
-              FROM events e JOIN s2 ON e.user_id = s2.user_id AND e.ts >= s2.t
-              WHERE e.event_type = 'purchase' GROUP BY 1
-            )
-            SELECT 'view' AS stage, 1 AS stage_idx,
-                   (SELECT count(*) FROM s1) AS n_users
-            UNION ALL SELECT 'click', 2, (SELECT count(*) FROM s2)
-            UNION ALL SELECT 'purchase', 3, (SELECT count(*) FROM s3)
-        """,
-        "cohort_retention": """
-            WITH fu AS (
-              SELECT user_id, min(CAST(ts AS DATE)) AS cohort_date
-              FROM events GROUP BY 1
-            ), act AS (
-              SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events
-            )
-            SELECT cohort_date,
-                   CAST(date_diff('day', cohort_date, d) AS INTEGER) AS day_offset,
-                   count(*) AS n_users
-            FROM act JOIN fu USING (user_id)
-            GROUP BY 1, 2
-        """,
-    }

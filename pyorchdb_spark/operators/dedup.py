@@ -9,23 +9,17 @@ wins, ties broken deterministically by ``commit`` then ``op``
 
 Three equivalent implementations, chosen for scale behavior:
 
-- ``strategy="window"`` (default) — ``row_number() over (partition by
-  keys order by seq desc)``: one shuffle + one sort of the rows. Measured
-  fastest on realistic fat rows (~1 KiB content): 8M events dedup in
-  15.3s at local[32] vs 46.4s for max_by — the sort-agg's per-row struct
-  materialization is memory-bandwidth-bound and stops scaling with cores.
-- ``strategy="max_by"`` — ``groupBy(keys).agg(max_by(row, order))``: a
-  hash aggregate with **map-side partial combine**. Each map task emits at
-  most one candidate per key before the shuffle, so the shuffle carries
-  ~|keys| rows, not |events| — the right trade when shuffle IO (network)
-  is the bottleneck, i.e. on a real multi-node cluster with narrow rows;
-  on this single box the extra struct copying dominates.
+- ``lww_dedup`` — ``row_number() over (partition by keys order by seq
+  desc)``: one shuffle + one sort of the rows. Measured fastest on
+  realistic fat rows (~1 KiB content): 8M events dedup in 15.3s at
+  local[32] vs 46.4s for a ``max_by`` hash aggregate — the sort-agg's
+  per-row struct materialization is memory-bandwidth-bound and stops
+  scaling with cores.
 - ``lww_dedup_salted`` — explicit two-stage dedup (SURVEY.md section 4
   item 1) for the window path: stage 1 dedups within (key, salt) so a hot
   key arrives at the final per-key shuffle as at most ``n_salts`` rows.
   The salt derives from ``seq`` (never from the key), so downstream MERGE
-  join keys are untouched. Required by the north rule; benched A/B
-  against max_by in bench.py.
+  join keys are untouched. Required by the north rule.
 - ``lww_dedup_bucketed`` — the fused merge+write plan: shuffle once by
   the STORAGE bucket (a function of the keys), sort in-partition by
   (bucket, keys, order), pick each key-run's first row with a null-safe
@@ -33,8 +27,8 @@ Three equivalent implementations, chosen for scale behavior:
   LakeTable.merge runs on this (1 full-row exchange vs 2, verified in
   the physical plan).
 
-All three produce identical results for any input (verified
-property-style in tests/test_dedup.py).
+All three produce identical results for any input (verified in
+tests/test_dedup.py and property-style in tests/test_properties.py).
 """
 
 from __future__ import annotations
@@ -131,10 +125,6 @@ def subsplit_index(keys: Sequence[str], sub_splits: int, bucket_col: str = "_buc
     return F.col(bucket_col) * sub_splits + sub
 
 
-def _order_struct(seq_col: str, tiebreakers: Sequence[str]):
-    return F.struct(F.col(seq_col), *[F.col(c) for c in tiebreakers])
-
-
 def _order_cols(seq_col: str, tiebreakers: Sequence[str]):
     return [F.col(seq_col).desc()] + [F.col(c).desc() for c in tiebreakers]
 
@@ -144,26 +134,15 @@ def lww_dedup(
     keys: Sequence[str] = DEFAULT_KEYS,
     seq_col: str = "seq",
     tiebreakers: Sequence[str] = DEFAULT_TIEBREAKERS,
-    strategy: str = "window",
 ) -> DataFrame:
     """One row per key: the last writer."""
     tiebreakers = [c for c in tiebreakers if c in events.columns]
-    if strategy == "max_by":
-        payload = F.struct(*[F.col(c) for c in events.columns])
-        order = _order_struct(seq_col, tiebreakers)
-        return (
-            events.groupBy(*keys)
-            .agg(F.max_by(payload, order).alias("_row"))
-            .select("_row.*")
-        )
-    if strategy == "window":
-        w = Window.partitionBy(*keys).orderBy(*_order_cols(seq_col, tiebreakers))
-        return (
-            events.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-    raise ValueError(f"unknown strategy {strategy!r}")
+    w = Window.partitionBy(*keys).orderBy(*_order_cols(seq_col, tiebreakers))
+    return (
+        events.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
 
 
 def lww_salt_prestage(
@@ -202,7 +181,7 @@ def lww_dedup_salted(
     wins stage 2.
     """
     pre = lww_salt_prestage(events, keys, seq_col, tiebreakers, n_salts)
-    return lww_dedup(pre, keys, seq_col, tiebreakers, strategy="window")
+    return lww_dedup(pre, keys, seq_col, tiebreakers)
 
 
 def lww_dedup_bucketed(
@@ -542,7 +521,6 @@ def final_state(
     seq_col: str = "seq",
     salted: bool = False,
     n_salts: int = 16,
-    strategy: str = "window",
 ) -> DataFrame:
     """Replay semantics: LWW winners minus tombstones.
 
@@ -553,6 +531,6 @@ def final_state(
     dedup = (
         lww_dedup_salted(events, keys, seq_col, n_salts=n_salts)
         if salted
-        else lww_dedup(events, keys, seq_col, strategy=strategy)
+        else lww_dedup(events, keys, seq_col)
     )
     return dedup.filter(F.col("op") != "delete")

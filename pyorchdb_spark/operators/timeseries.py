@@ -1,24 +1,15 @@
-"""Event-time window operators: tumbling / sliding aggregation and
-gap-based sessionization.
+"""Gap-based sessionization over event time.
 
 The reference pipeline stamps a wall-clock period onto every batch
 (PyOrchDB/utilities/tools.py:183-207 ``insert_period_columns``) and all
-of its time reasoning stops there; a Spark-native engine can aggregate
-on event time directly.  These operators are the batch halves of the
-engine's time surface — ``streaming/stateful.py`` holds the streaming
-halves (watermarked windowed aggregation, ``applyInPandasWithState``
-sessions) that are asserted equal to these on the same input.
+of its time reasoning stops there; a Spark-native engine can reason on
+event time directly.  ``sessionize`` is the batch half of the engine's
+session surface: ``streaming/stateful.py::sessionize_stream``
+(``applyInPandasWithState``) is asserted equal to it on the same input.
 
-Scale notes (100 TB):
-- tumbling/sliding aggregation is ONE hash shuffle on
-  ``(window, *keys)`` with map-side partial aggregation — per-executor
-  state is bounded by the number of open groups, not event volume;
-- ``F.window`` is evaluated JVM-side inside whole-stage codegen (a
-  sliding window becomes a deterministic generator expression — no
-  Python, no explode of per-event arrays beyond windows-per-event);
-- sessionization shuffles once on the session keys; the in-partition
-  pass is two window functions (lag + running sum) over a sort that
-  feeds straight from the shuffle's sorted output.
+Scale notes (100 TB): sessionization shuffles once on the session keys;
+the in-partition pass is two window functions (lag + running sum) over
+a sort that feeds straight from the shuffle's sorted output.
 """
 
 from __future__ import annotations
@@ -36,35 +27,6 @@ def _agg_or_default(aggs: Sequence[Column] | None) -> list[Column]:
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 2).alias("total_value"),
     ]
-
-
-def windowed_agg(
-    df: DataFrame,
-    ts_col: str,
-    duration: str,
-    keys: Sequence[str] = (),
-    aggs: Sequence[Column] | None = None,
-    slide: str | None = None,
-) -> DataFrame:
-    """Tumbling (or, with ``slide``, sliding/hopping) event-time window
-    aggregation.
-
-    Returns one row per ``(window_start, *keys)`` group with
-    ``window_start``/``window_end`` surfaced as plain timestamp columns
-    (stable names for the oracle contract).  With ``slide`` < ``duration``
-    an event contributes to ``duration/slide`` windows — Catalyst expands
-    this as a generator expression, so shuffle volume grows by exactly
-    that factor and nothing else.
-    """
-    win = F.window(F.col(ts_col), duration, slide) if slide else F.window(F.col(ts_col), duration)
-    out = df.groupBy(win.alias("w"), *keys).agg(*_agg_or_default(aggs))
-    agg_names = [c for c in out.columns if c not in ("w", *keys)]
-    return out.select(
-        F.col("w.start").alias("window_start"),
-        F.col("w.end").alias("window_end"),
-        *keys,
-        *agg_names,
-    )
 
 
 def sessionize(
@@ -106,101 +68,3 @@ def sessionize(
         .drop("session_no")
     )
 
-
-def funnel(
-    df: DataFrame,
-    ts_col: str,
-    stages: Sequence[str],
-    type_col: str = "event_type",
-    user_col: str = "user_id",
-) -> DataFrame:
-    """Ordered conversion funnel: a user reaches stage ``i`` at the
-    earliest stage-``i`` event whose timestamp is >= the time they
-    reached stage ``i-1`` (ties on the raw timestamp count — the same
-    closed-interval rule ``sessionize`` uses, expressible verbatim as a
-    chain of min-aggregate SQL CTEs).
-
-    One hash shuffle on ``user_col``: events are pre-filtered to the
-    stage types, collected per user, and the whole stage chain is
-    evaluated as nested ``filter``/``array_min`` expressions inside
-    whole-stage codegen — no Python, no per-stage join.  The aggregation
-    buffer holds only a user's stage-type events; for corpora with
-    pathological per-user volume (bots with millions of stage events)
-    the same semantics decompose into ``len(stages)`` chained
-    conditional-min aggregations on the same key (k co-partitioned
-    shuffles, O(1) state) — this form optimizes for the common case.
-
-    Output: one row per stage — ``(stage, stage_idx, n_users)`` with
-    ``stage_idx`` 1-based in the given order.
-    """
-    stages = list(stages)
-    ev = df.filter(F.col(type_col).isin(stages)).select(
-        F.col(user_col).alias("_u"),
-        F.col(ts_col).alias("_ts"),
-        F.col(type_col).alias("_tp"),
-    )
-    per_user = ev.groupBy("_u").agg(F.collect_list(F.struct("_ts", "_tp")).alias("_evs"))
-
-    def _keep(stage: str, prev: Column | None):
-        # single-positional-arg lambda (PySpark reads higher-order lambda
-        # arity off the Python signature — no default-arg closures here);
-        # _ts >= NULL is NULL -> filtered: unreachable without the
-        # previous stage, exactly the SQL join-chain semantics
-        if prev is None:
-            return lambda x: x["_tp"] == stage
-        return lambda x: (x["_tp"] == stage) & (x["_ts"] >= prev)
-
-    for i, s in enumerate(stages):
-        prev = F.col(f"_t{i - 1}") if i else None
-        per_user = per_user.withColumn(
-            f"_t{i}",
-            F.array_min(F.transform(F.filter("_evs", _keep(s, prev)), lambda x: x["_ts"])),
-        )
-    counts = per_user.agg(
-        *[
-            F.coalesce(F.sum(F.col(f"_t{i}").isNotNull().cast("long")), F.lit(0)).alias(f"_n{i}")
-            for i in range(len(stages))
-        ]
-    )
-    rows = F.array(
-        *[
-            F.struct(
-                F.lit(s).alias("stage"),
-                F.lit(i + 1).alias("stage_idx"),
-                F.col(f"_n{i}").alias("n_users"),
-            )
-            for i, s in enumerate(stages)
-        ]
-    )
-    return counts.select(F.explode(rows).alias("r")).select("r.stage", "r.stage_idx", "r.n_users")
-
-
-def cohort_retention(
-    df: DataFrame,
-    ts_col: str,
-    user_col: str = "user_id",
-) -> DataFrame:
-    """Day-granularity cohort retention: cohort = the date of a user's
-    first event; for every later active day the user counts toward
-    ``(cohort_date, day_offset)``.
-
-    ONE shuffle on ``user_col``: active days are collapsed to a per-user
-    ``collect_set`` (bounded by the calendar span, not event volume —
-    map-side partial aggregation dedups within each task first), the
-    cohort date is ``array_min`` of that set, and offsets explode from
-    the same array; the final thin-row ``(cohort, offset)`` count is the
-    only other exchange.
-    """
-    d = F.to_date(F.col(ts_col))
-    per_user = df.select(F.col(user_col).alias("_u"), d.alias("_d")).groupBy("_u").agg(
-        F.collect_set("_d").alias("_days")
-    )
-    return (
-        per_user.withColumn("_cohort", F.array_min("_days"))
-        .select("_cohort", F.explode("_days").alias("_day"))
-        .groupBy(
-            F.col("_cohort").alias("cohort_date"),
-            F.datediff("_day", "_cohort").alias("day_offset"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_users"))
-    )

@@ -63,7 +63,7 @@ import re
 import shutil
 import tempfile
 import uuid
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterator, Sequence
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -173,6 +173,32 @@ class Manifest:
         )
 
 
+def _published_after(mdir: str, after: int) -> Iterator[tuple[int, str]]:
+    """``(version, manifest text)`` of each version above ``after``, oldest
+    first, up to the first version not published. Versions are published
+    contiguously, so this reads only what is new."""
+    v = after
+    while True:
+        try:
+            with open(os.path.join(mdir, f"v{v + 1:08d}.json")) as fh:
+                text = fh.read()
+        except FileNotFoundError:
+            return
+        v += 1
+        yield v, text
+
+
+def _unlink_data_file(path: str) -> None:
+    """Delete a data file and the ``.<name>.crc`` checksum Spark's local
+    file system writes beside it."""
+    os.unlink(path)
+    d, name = os.path.split(path)
+    try:
+        os.unlink(os.path.join(d, f".{name}.crc"))
+    except FileNotFoundError:
+        pass
+
+
 def read_batch_records(root: str, after: int = 0) -> tuple[list[dict], int]:
     """Batch records of the versions above ``after``, oldest first, each
     tagged with its ``version``, and the newest version read. A version
@@ -187,15 +213,11 @@ def read_batch_records(root: str, after: int = 0) -> tuple[list[dict], int]:
     records: list[dict] = []
 
     def probe(v: int) -> int:
-        while True:
-            try:
-                with open(os.path.join(mdir, f"v{v + 1:08d}.json")) as fh:
-                    batch = json.load(fh).get("batch")
-            except FileNotFoundError:
-                return v
-            v += 1
+        for v, text in _published_after(mdir, v):
+            batch = json.loads(text).get("batch")
             if batch is not None:
                 records.append({**batch, "version": v})
+        return v
 
     v = probe(after)
     if v and os.path.exists(os.path.join(mdir, f"v{v:08d}.json")):
@@ -261,6 +283,8 @@ class LakeTable:
         self.max_rows_per_file = max_rows_per_file
         os.makedirs(os.path.join(self.root, "_manifests"), exist_ok=True)
         os.makedirs(os.path.join(self.root, "data"), exist_ok=True)
+        # last head current_version saw; only a hint, lookups probe forward from it
+        self._head: int | None = None
 
     # ---------- manifest plumbing ----------
 
@@ -268,12 +292,20 @@ class LakeTable:
         return os.path.join(self.root, "_manifests")
 
     def current_version(self) -> int | None:
-        versions = [
-            int(m.group(1))
-            for f in os.listdir(self._manifest_dir())
-            if (m := _VERSION_RE.fullmatch(f))
-        ]
-        return max(versions) if versions else None
+        """The head version. Probes forward from the last head seen, so a
+        lookup costs in proportion to the new versions; ``_manifests/`` is
+        listed only on the first lookup or after vacuum deleted that head."""
+        mdir = self._manifest_dir()
+        head = self._head
+        if head is None or not os.path.exists(os.path.join(mdir, f"v{head:08d}.json")):
+            head = max(
+                (int(m.group(1)) for f in os.listdir(mdir) if (m := _VERSION_RE.fullmatch(f))),
+                default=None,
+            )
+            if head is None:
+                return None
+        self._head = max((v for v, _ in _published_after(mdir, head)), default=head)
+        return self._head
 
     def manifest(self, version: int | None = None) -> Manifest | None:
         version = version if version is not None else self.current_version()
@@ -304,22 +336,11 @@ class LakeTable:
         return manifest
 
     def _remove_orphans(self, files: list[dict]) -> None:
-        """Delete data files written by a commit attempt that lost the race."""
-        data_root = os.path.join(self.root, "data")
-        dirs = set()
-        for f in files:
-            p = os.path.join(self.root, f["path"])
-            if os.path.exists(p):
-                os.unlink(p)
-            d = os.path.dirname(p)
-            while d != data_root and d.startswith(data_root):
-                dirs.add(d)
-                d = os.path.dirname(d)
-        for d in sorted(dirs, key=len, reverse=True):  # leaves first, never data/
-            try:
-                os.rmdir(d)
-            except OSError:
-                pass
+        """Delete the data written by a commit attempt that lost the race:
+        every attempt writes into its own ``data/commit-*`` directories,
+        so they go whole, checksums and markers included."""
+        for d in {f["path"].split("/")[1] for f in files}:
+            shutil.rmtree(os.path.join(self.root, "data", d), ignore_errors=True)
 
     # ---------- read path ----------
 
@@ -518,7 +539,7 @@ class LakeTable:
                     os.path.join(self.root, big["path"])
                 )
                 out.extend(self._write_bucketed(part, version, big["nb"] * 2))
-                os.unlink(os.path.join(self.root, big["path"]))
+                _unlink_data_file(os.path.join(self.root, big["path"]))
 
     def _write_bucketed(
         self, df: DataFrame, version: int, n_buckets: int, pre_bucketed: bool = False,
@@ -574,7 +595,7 @@ class LakeTable:
                 md = pq.ParquetFile(full).metadata
                 rows = md.num_rows
                 if rows == 0:
-                    os.unlink(full)
+                    _unlink_data_file(full)
                     continue
                 entry = {
                     "path": os.path.join(out_rel, d, fname),
@@ -1074,12 +1095,15 @@ class LakeTable:
         return self._commit(manifest, new_files)
 
     def vacuum(self, keep_versions: int = 1) -> list[str]:
-        """Delete data files unreferenced by the newest ``keep_versions``
-        manifests (time-travel GC) and reject directories no batch record
-        names. Returns deleted relative paths. The deleted manifests' batch
-        records are first archived in ONE link-published
-        ``batches-v{N}.json`` that subsumes older archives (the Delta
-        checkpoint shape), so batch history survives."""
+        """Delete data unreferenced by the newest ``keep_versions`` manifests
+        (time-travel GC) and reject directories no batch record names.
+        A directory under ``data/`` that holds no referenced file goes
+        whole; in one that does, each unreferenced file goes with its
+        checksum. Returns the deleted data files' and reject directories'
+        relative paths. The deleted manifests' batch records are first
+        archived in ONE link-published ``batches-v{N}.json`` that subsumes
+        older archives (the Delta checkpoint shape), so batch history
+        survives."""
         cur = self.current_version()
         if cur is None:
             return []
@@ -1089,19 +1113,24 @@ class LakeTable:
             mf = self.manifest(v)
             if mf:
                 keep.update(f["path"] for f in mf.files)
+        live = {os.path.dirname(p) for p in keep}  # data/commit-*/_bucket=*
+        live |= {os.path.dirname(d) for d in live}  # data/commit-*
         deleted = []
-        data_root = os.path.join(self.root, "data")
-        for commit_dir, _dirs, files in os.walk(data_root, topdown=False):
+        for d, dirs, files in os.walk(os.path.join(self.root, "data")):
+            rel_d = os.path.relpath(d, self.root)
+            for sub in [c for c in dirs if os.path.join(rel_d, c) not in live]:
+                dirs.remove(sub)
+                dead = os.path.join(d, sub)
+                deleted += [
+                    os.path.relpath(p, self.root)
+                    for p in glob.glob(os.path.join(dead, "**", "*.parquet"), recursive=True)
+                ]
+                shutil.rmtree(dead)
             for fname in files:
-                rel = os.path.relpath(os.path.join(commit_dir, fname), self.root)
-                if rel not in keep and fname.endswith(".parquet"):
-                    os.unlink(os.path.join(commit_dir, fname))
+                rel = os.path.join(rel_d, fname)
+                if fname.endswith(".parquet") and rel not in keep:
+                    _unlink_data_file(os.path.join(d, fname))
                     deleted.append(rel)
-            if commit_dir != data_root:
-                try:
-                    os.rmdir(commit_dir)
-                except OSError:
-                    pass
         records, _ = read_batch_records(self.root)
         named = {r["rejects"] for r in records if r.get("rejects")}
         for p in glob.glob(os.path.join(self.root, "_rejects", "*", "")):  # directories only

@@ -1,18 +1,15 @@
-"""Structured Streaming stateful operators: watermarked windowed
-aggregation and ``applyInPandasWithState`` gap sessions.
+"""Structured Streaming stateful operators: ``applyInPandasWithState``
+gap sessions and SCD2 history.
 
-These are the streaming halves of ``operators/timeseries.py`` — the
-batch and stream variants share one semantics (strictly-greater-than-gap
-starts a new session; tumbling windows are epoch-aligned) and
+These are the streaming halves of ``operators/timeseries.py::sessionize``
+and ``operators/scd.py::scd2_history``: each stream variant shares its
+batch twin's semantics (strictly-greater-than-gap starts a new session;
+no-op state changes collapse into one version) and
 ``tests/test_stateful_streaming.py`` asserts they produce identical
-results on the same input.
+results on the same input.  The CDC engine's exactly-once comes from
+the manifest ledger (``sources/catalog.py``), not from these operators.
 
 Scale notes (100 TB/day of events):
-- ``windowed_stream`` keeps one state row per open ``(window, *keys)``
-  group per partition; the watermark bounds how long a window stays open,
-  so state is O(keys x windows-in-flight), independent of event volume.
-  Late rows older than the watermark are dropped by the state store, not
-  by user code.
 - ``sessionize_stream`` shuffles each micro-batch once on the session
   keys; per-group state is a single 4-field tuple (the open session), and
   the per-batch work is vectorized pandas (diff/cumsum segmentation), not
@@ -30,6 +27,9 @@ Scale notes (100 TB/day of events):
   was ALREADY closed and emitted in an earlier batch; exact parity with
   batch for arbitrarily-late data needs the order-free LWW merge path
   (``ingest.replay``) instead.
+- ``scd2_stream`` keeps one 3-field tuple per key (the open version and
+  the last applied sequence), so state is O(keys), independent of
+  stream length.
 """
 
 from __future__ import annotations
@@ -39,7 +39,6 @@ from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -51,51 +50,6 @@ from pyspark.sql.types import (
 )
 
 US_PER_SECOND = 1_000_000
-
-
-def windowed_stream(
-    events: DataFrame,
-    ts_col: str = "ts",
-    duration: str = "1 hour",
-    watermark: str = "1 hour",
-    keys: Sequence[str] = (),
-) -> DataFrame:
-    """Watermarked tumbling-window aggregation over a streaming DataFrame.
-
-    Append/update sinks both work: the watermark lets the state store
-    finalize (append) or evict (update) windows older than
-    ``max(event time) - watermark``; rows arriving later than that are
-    dropped — the late-data contract the batch oracle can't express.
-    """
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), duration).alias("w"), *keys)
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            *keys,
-            "n_events",
-            "total_value",
-        )
-    )
-
-
-def dedup_stream(
-    events: DataFrame,
-    keys: Sequence[str] = ("event_id",),
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming exact dedup: drop re-deliveries of the same key arriving
-    within the watermark (``dropDuplicatesWithinWatermark`` — state per
-    key is evicted once the watermark passes, so state size is bounded by
-    the key arrival rate x watermark, not by stream history; plain
-    ``dropDuplicates`` on a stream would grow state forever)."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(list(keys))
 
 
 def _session_output_schema(key_fields: list[StructField]) -> StructType:

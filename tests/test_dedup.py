@@ -25,13 +25,6 @@ def test_salted_equals_unsalted(spark):
         assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
 
 
-def test_window_strategy_equals_max_by(spark):
-    ev = change_events(spark, 3_000)
-    a = lww_dedup(ev, strategy="max_by").select("repo", "path", "seq", "commit", "op")
-    b = lww_dedup(ev, strategy="window").select("repo", "path", "seq", "commit", "op")
-    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
-
-
 def test_final_state_matches_pandas_oracle(spark):
     ev = change_events(spark, 4_000)
     got = (

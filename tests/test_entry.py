@@ -39,8 +39,8 @@ def _norm(rows, cols):
     return sorted((tuple(fix(r[i]) for i in order) for r in rows), key=repr)
 
 
-_QUERIES = {**entrymod.queries(), **entrymod.analytics_queries()}
-_ORACLES = {**entrymod.oracle_sql(), **entrymod.analytics_oracle_sql()}
+_QUERIES = entrymod.queries()
+_ORACLES = entrymod.oracle_sql()
 
 
 @pytest.mark.parametrize("name", sorted(_ORACLES))
@@ -75,10 +75,3 @@ def test_board_contract():
     # The correctness board records only the first 50 queries() entries.
     assert len(entrymod.queries()) <= 50
     assert set(entrymod.oracle_sql()) == set(entrymod.queries())
-    assert set(entrymod.analytics_oracle_sql()) == set(entrymod.analytics_queries())
-    assert not set(entrymod.analytics_queries()) & set(entrymod.queries())
-    # the analytics side keeps only top-k and the timeseries operator family
-    assert set(entrymod.analytics_queries()) == {
-        "topk_users",
-        "events_windowed", "events_sliding", "funnel_steps", "cohort_retention",
-    }

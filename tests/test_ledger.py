@@ -133,12 +133,14 @@ def test_losing_writer_removes_its_data_files_and_rejects(spark, tmp_path, monke
     lake, ledger = LakeTable(spark, root), BatchLedger(spark, root)
     replay(lake, ledger, log.filter(F.col("batch_id") == "b000000"), num_files=2)
     publish = LakeTable._publish
+    lost = []
 
     def lose_race(self, manifest):
         # another writer links this version first: an empty commit over the head
         head = self.manifest()
         rival = dataclasses.replace(head, version=head.version + 1, parent=head.version, batch_id=None, batch=None)
         publish(self, rival)
+        lost.extend(f["path"] for f in manifest.files if f not in head.files)
         publish(self, manifest)
 
     with monkeypatch.context() as mp:
@@ -147,6 +149,9 @@ def test_losing_writer_removes_its_data_files_and_rejects(spark, tmp_path, monke
             replay(lake, ledger, log.filter(F.col("batch_id") == "b000001"), num_files=2)
     assert not _orphans(lake)
     assert os.listdir(os.path.join(root, "_rejects")) == []
+    # the loser's attempt directories go whole, checksums and markers included
+    loser_dirs = {p.split("/")[1] for p in lost}
+    assert loser_dirs and not loser_dirs & set(os.listdir(os.path.join(root, "data")))
 
     res = replay(LakeTable(spark, root), BatchLedger(spark, root), log, num_files=2)
     assert [r.skipped for r in res] == [True, False, False]
@@ -214,3 +219,44 @@ def test_vacuum_keeps_batch_history(spark, tmp_path):
     assert [r["batch_id"] for r in BatchLedger(spark, root).markers().orderBy("version").collect()] == [
         *BATCHES, "b000003"
     ]
+
+
+def test_vacuum_leaves_no_orphan_directories_or_checksums(spark, tmp_path):
+    root = str(tmp_path / "t")
+    lake, ledger = LakeTable(spark, root), BatchLedger(spark, root)
+    replay(lake, ledger, change_events(spark, 2_000, batch_size=500), num_files=2, mor_compact_factor=2)
+    assert any(
+        str(lake.manifest(v).batch_id).startswith("compact") for v in range(1, lake.current_version() + 1)
+    )
+    before = lake.snapshot().count()
+    lake.vacuum(keep_versions=1)
+
+    head = [f["path"] for f in lake.manifest().files]
+    for d, dirs, files in os.walk(os.path.join(root, "data")):
+        for sub in dirs:
+            rel = os.path.relpath(os.path.join(d, sub), root)
+            assert any(p.startswith(rel + "/") for p in head), rel
+        for f in files:
+            if f.endswith(".crc"):
+                assert os.path.exists(os.path.join(d, f[1:-len(".crc")])), os.path.join(d, f)
+    assert lake.snapshot().count() == before
+
+
+def test_head_lookup_probes_instead_of_listing_manifests(spark, tmp_path, monkeypatch):
+    root = str(tmp_path / "t")
+    lake, ledger = LakeTable(spark, root), BatchLedger(spark, root)
+    ev = change_events(spark, 1_500, batch_size=500)
+    replay(lake, ledger, ev.filter(F.col("batch_id") == "b000000"), num_files=2)
+    mdir = os.path.join(lake.root, "_manifests")
+    listed = []
+    listdir = os.listdir
+
+    def counting_listdir(path="."):
+        if os.path.abspath(os.fspath(path)) == mdir:
+            listed.append(path)
+        return listdir(path)
+
+    monkeypatch.setattr(os, "listdir", counting_listdir)
+    replay(lake, ledger, ev, num_files=2, mor_compact_factor=2)
+    assert lake.manifest().batch_id.startswith("compact")
+    assert listed == []

@@ -1,5 +1,5 @@
-"""Property-based checks (hypothesis): the three LWW implementations and
-the pandas oracle agree on arbitrary small event logs — including
+"""Property-based checks (hypothesis): plain LWW, salted LWW and the
+pandas oracle agree on arbitrary small event logs — including
 adversarial ties, duplicate deliveries, all-delete keys and empty logs."""
 
 from __future__ import annotations
@@ -36,8 +36,7 @@ def test_lww_strategies_and_oracle_agree(spark, rows):
     ev = spark.createDataFrame(rows, DDL)
     outs = []
     for df in (
-        final_state(ev, strategy="window"),
-        final_state(ev, strategy="max_by"),
+        final_state(ev),
         final_state(ev, salted=True, n_salts=4),
     ):
         outs.append(
@@ -46,7 +45,7 @@ def test_lww_strategies_and_oracle_agree(spark, rows):
                 for r in df.select("repo", "path", "seq", "commit", "op", "content").collect()
             )
         )
-    assert outs[0] == outs[1] == outs[2]
+    assert outs[0] == outs[1]
 
     exp = expected_final_state(ev.toPandas())
     got_keys = {(r[0], r[1], r[5]) for r in outs[0]}

@@ -3,8 +3,7 @@
 - sessionize_stream (applyInPandasWithState) must equal batch
   timeseries.sessionize on the same input delivered over several
   micro-batches with state carried across batch (and session) boundaries;
-- windowed_stream must drop events older than the watermark — the
-  late-data contract — and keep them when the watermark allows.
+- scd2_stream must equal batch scd.scd2_history the same way.
 """
 
 from __future__ import annotations
@@ -18,7 +17,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from pyorchdb_spark.operators.timeseries import sessionize
-from pyorchdb_spark.streaming.stateful import sessionize_stream, windowed_stream
+from pyorchdb_spark.streaming.stateful import sessionize_stream
 
 TS = dt.datetime
 EVENT_DDL = "user_id long, ts timestamp, value double"
@@ -111,93 +110,6 @@ def test_sessionize_stream_matches_batch(spark, sf_dir, tmp_path):
     # at least one (user, session_start) appears in more than one snapshot
     multi = mem.groupBy("user_id", "session_start").count().filter("count > 1").count()
     assert multi > 0
-
-
-def _late_data_counts(spark, tmp_path, watermark: str) -> dict:
-    """4 time-pinned micro-batch files; the late 10:45 row arrives two
-    batches after the 12:05 event that advanced the watermark (Spark
-    applies the watermark computed from batch N's data starting at batch
-    N+2: it is persisted at N's commit and read back at N+1's planning,
-    so the first batch it filters is N+2 — empirically verified)."""
-    tag = watermark.replace(" ", "_")
-    log_dir = tmp_path / f"log_{tag}"
-    log_dir.mkdir()
-    batches = [
-        [
-            (1, TS(2024, 1, 1, 10, 0, 0), 1.0),
-            (1, TS(2024, 1, 1, 10, 30, 0), 1.0),
-            (1, TS(2024, 1, 1, 12, 5, 0), 1.0),  # advances the watermark
-        ],
-        [(1, TS(2024, 1, 1, 12, 10, 0), 1.0)],  # propagation batch
-        [
-            (1, TS(2024, 1, 1, 10, 45, 0), 1.0),  # LATE for the 10:00 window
-            (1, TS(2024, 1, 1, 12, 15, 0), 1.0),
-        ],
-        [(1, TS(2024, 1, 2, 9, 0, 0), 1.0)],  # far future: flush everything
-    ]
-    for i, rows in enumerate(batches):
-        _write_file(str(log_dir / f"b{i}.parquet"), rows, mtime=1_700_000_000 + i * 100)
-    stream = (
-        spark.readStream.schema(EVENT_DDL)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(log_dir))
-    )
-    win = windowed_stream(stream, ts_col="ts", duration="1 hour", watermark=watermark)
-    name = f"t_{uuid.uuid4().hex[:8]}"
-    q = (
-        win.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")  # append: only watermark-finalized windows
-        .option("checkpointLocation", str(tmp_path / f"ckpt_{tag}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.table(name).collect()
-    return {r["window_start"]: r["n_events"] for r in rows}
-
-
-def test_windowed_stream_drops_late_beyond_watermark(spark, tmp_path):
-    """With a 1-hour watermark the 10:00 window (end 11:00) is already
-    below the 11:05 watermark when the 10:45 straggler arrives — the row
-    is dropped and the finalized window holds 2 events."""
-    counts = _late_data_counts(spark, tmp_path, watermark="1 hour")
-    assert counts[TS(2024, 1, 1, 10, 0, 0)] == 2  # late event not counted
-    assert counts[TS(2024, 1, 1, 12, 0, 0)] == 3
-
-
-def test_windowed_stream_keeps_late_within_watermark(spark, tmp_path):
-    """A 3-hour watermark (9:05 < the 11:00 window end) keeps the window
-    open; the same straggler is absorbed before finalization."""
-    counts = _late_data_counts(spark, tmp_path, watermark="3 hours")
-    assert counts[TS(2024, 1, 1, 10, 0, 0)] == 3  # late event counted
-    assert counts[TS(2024, 1, 1, 12, 0, 0)] == 3
-
-
-def test_dedup_stream_drops_redelivery_within_watermark(spark, tmp_path):
-    """The same event_id re-delivered in a later micro-batch (within the
-    watermark) is dropped; new ids pass."""
-    from pyorchdb_spark.streaming.stateful import dedup_stream
-
-    log_dir = tmp_path / "log"
-    log_dir.mkdir()
-    # reuse the 3-col writer: user_id doubles as the event id here
-    _write_file(str(log_dir / "b0.parquet"),
-                [(1, TS(2024, 1, 1, 10, 0), 1.0), (2, TS(2024, 1, 1, 10, 1), 1.0)],
-                mtime=1_700_000_000)
-    _write_file(str(log_dir / "b1.parquet"),
-                [(1, TS(2024, 1, 1, 10, 2), 99.0),   # re-delivery of id 1
-                 (3, TS(2024, 1, 1, 10, 3), 1.0)],
-                mtime=1_700_000_100)
-    stream = (
-        spark.readStream.schema(EVENT_DDL)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(log_dir))
-    )
-    out = dedup_stream(stream, keys=("user_id",), ts_col="ts", watermark="1 hour")
-    mem = _run_stream(spark, out, str(tmp_path / "ckpt"))
-    rows = {(r["user_id"], r["value"]) for r in mem.collect()}
-    assert rows == {(1, 1.0), (2, 1.0), (3, 1.0)}  # the 99.0 re-delivery dropped
 
 
 def test_session_fn_rejects_bad_gap():

@@ -3,9 +3,8 @@ from __future__ import annotations
 import datetime as dt
 
 import pandas as pd
-from pyspark.sql import functions as F
 
-from pyorchdb_spark.operators.timeseries import sessionize, windowed_agg
+from pyorchdb_spark.operators.timeseries import sessionize
 
 TS = dt.datetime
 
@@ -52,87 +51,3 @@ def test_sessionize_matches_pandas_oracle(spark, sf_dir):
             exp.add((uid, s["ts"].min().to_pydatetime(), s["ts"].max().to_pydatetime(), len(s)))
     assert got == exp
 
-
-def test_windowed_agg_tumbling_matches_date_trunc(spark, sf_dir):
-    """1-day tumbling windows align to date_trunc; counts must agree with
-    an independent formulation (groupBy date_trunc, no F.window)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    win = windowed_agg(ev, "ts", "1 day", keys=("event_type",))
-    got = {
-        (r["window_start"], r["event_type"], r["n_events"]) for r in win.collect()
-    }
-    ind = (
-        ev.groupBy(F.date_trunc("day", "ts").alias("d"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    assert got == {(r["d"], r["event_type"], r["n"]) for r in ind}
-    # window_end is exactly start + 1 day
-    assert win.filter(
-        F.col("window_end") != F.col("window_start") + F.expr("INTERVAL 1 DAY")
-    ).count() == 0
-
-
-def test_windowed_agg_sliding_double_counts(spark, sf_dir):
-    """2-day windows sliding by 1 day: every event lands in exactly 2
-    windows, so total n_events doubles vs the tumbling count."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    sliding = windowed_agg(ev, "ts", "2 days", slide="1 day")
-    total = sliding.agg(F.sum("n_events")).collect()[0][0]
-    assert total == 2 * ev.count()
-
-
-def test_funnel_ordering_and_missing_stages(spark):
-    from pyorchdb_spark.operators.timeseries import funnel
-
-    rows = [
-        # user 1: full ordered progression
-        (1, TS(2024, 1, 1, 9, 0), "view"),
-        (1, TS(2024, 1, 1, 10, 0), "click"),
-        (1, TS(2024, 1, 1, 11, 0), "purchase"),
-        # user 2: click BEFORE first view only -> stalls at stage 1
-        (2, TS(2024, 1, 1, 8, 0), "click"),
-        (2, TS(2024, 1, 1, 9, 0), "view"),
-        (2, TS(2024, 1, 1, 10, 0), "purchase"),  # no qualifying click
-        # user 3: click at the EXACT view timestamp counts (>= rule)
-        (3, TS(2024, 1, 1, 9, 0), "view"),
-        (3, TS(2024, 1, 1, 9, 0), "click"),
-        # user 4: never viewed -> not in the funnel at all
-        (4, TS(2024, 1, 1, 9, 0), "purchase"),
-    ]
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp, event_type string")
-    got = {r["stage"]: (r["stage_idx"], r["n_users"]) for r in
-           funnel(df, "ts", stages=("view", "click", "purchase")).collect()}
-    assert got == {"view": (1, 3), "click": (2, 2), "purchase": (3, 1)}
-
-
-def test_funnel_empty_input(spark):
-    from pyorchdb_spark.operators.timeseries import funnel
-
-    df = spark.createDataFrame([], "user_id long, ts timestamp, event_type string")
-    got = {r["stage"]: r["n_users"] for r in funnel(df, "ts", stages=("view", "click")).collect()}
-    assert got == {"view": 0, "click": 0}
-
-
-def test_cohort_retention_offsets(spark):
-    from pyorchdb_spark.operators.timeseries import cohort_retention
-
-    rows = [
-        # user 1: cohort Jan 1, active again day 2 (two events same day
-        # collapse) and day 3
-        (1, TS(2024, 1, 1, 9, 0)),
-        (1, TS(2024, 1, 3, 9, 0)),
-        (1, TS(2024, 1, 3, 18, 0)),
-        (1, TS(2024, 1, 4, 9, 0)),
-        # user 2: cohort Jan 3, single day
-        (2, TS(2024, 1, 3, 12, 0)),
-    ]
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp")
-    got = {(str(r["cohort_date"]), r["day_offset"]): r["n_users"]
-           for r in cohort_retention(df, "ts").collect()}
-    assert got == {
-        ("2024-01-01", 0): 1,
-        ("2024-01-01", 2): 1,
-        ("2024-01-01", 3): 1,
-        ("2024-01-03", 0): 1,
-    }
