@@ -24,10 +24,12 @@ after each ``apply_batch``.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from pyorchdb_spark.session import aqe_off
 from pyorchdb_spark.sources.catalog import BatchLedger
 from pyorchdb_spark.sources.lake import RETAIN_ALL_TOMBSTONES, LakeTable
 
@@ -68,6 +70,24 @@ def invalid_reason(keys=("repo", "path"), watermark_seq: int | None = None):
     return r
 
 
+def prepare_columns() -> dict[str, Column]:
+    """The prepare step's column expressions (see ``prepare_events``)."""
+    icu_nfc = F.java_method(F.lit("com.ibm.icu.text.Normalizer"), F.lit("compose"), "path", F.lit(False))
+    nfc = F.when(F.col("path").isNotNull(), icu_nfc)
+    norm = F.regexp_replace(
+        F.regexp_replace(F.regexp_replace(nfc, r"^(\./)+", ""), r"/{2,}", "/"),
+        # (?s) and \z: a newline in a path is just a character, as in _norm_one
+        r"(?s)(.)/\z",
+        "$1",
+    )
+    return {
+        "path": norm,
+        "content_sha256": F.when(F.col("op") == "delete", F.lit(None).cast("string")).otherwise(
+            F.sha2("content", 256)
+        ),
+    }
+
+
 def prepare_events(events: DataFrame, jvm_only: bool = False) -> DataFrame:
     """Curation: normalize paths, stamp content sha256 (engine columns).
 
@@ -79,17 +99,31 @@ def prepare_events(events: DataFrame, jvm_only: bool = False) -> DataFrame:
     on the null that ``java_method`` passes through, hence the guard.
     """
     # jvm_only is ignored: perfbench's udf_probes is its only caller
-    icu_nfc = F.java_method(F.lit("com.ibm.icu.text.Normalizer"), F.lit("compose"), "path", F.lit(False))
-    nfc = F.when(F.col("path").isNotNull(), icu_nfc)
-    norm = F.regexp_replace(
-        F.regexp_replace(F.regexp_replace(nfc, r"^(\./)+", ""), r"/{2,}", "/"),
-        # (?s) and \z: a newline in a path is just a character, as in _norm_one
-        r"(?s)(.)/\z",
-        "$1",
-    )
-    return events.withColumn("path", norm).withColumn(
-        "content_sha256",
-        F.when(F.col("op") == "delete", F.lit(None).cast("string")).otherwise(F.sha2("content", 256)),
+    return events.withColumns(prepare_columns())
+
+
+class _Quarantine(NamedTuple):
+    """``apply_batch``'s quarantine expressions under one watermark."""
+
+    reason: Column
+    valid: Column
+    observed: list[Column]  # the batch record's Observation aggregates
+
+
+def _quarantine(keys, watermark_seq: int | None) -> _Quarantine:
+    reason = invalid_reason(keys, watermark_seq=watermark_seq)
+    valid = reason.isNull()
+    seq_valid = F.when(valid, F.col("seq"))
+    return _Quarantine(
+        reason,
+        valid,
+        [
+            F.count(F.lit(1)).alias("rows_in"),
+            F.sum(reason.isNotNull().cast("long")).alias("n_invalid"),
+            F.sum((valid & (F.col("op") == "delete")).cast("long")).alias("tombstones"),
+            F.max(seq_valid).alias("max_seq"),
+            F.min(seq_valid).alias("min_seq"),
+        ],
     )
 
 
@@ -143,39 +177,24 @@ def apply_batch(
     if ledger.is_committed(batch_id):
         return ApplyResult(batch_id, skipped=True, version=None, rows_in=0)
 
-    # AQE off for the span of one batch apply (saved/restored): a merge
-    # plan is fixed-shape — one user-specified repartition(n_buckets) and
-    # no joins — so AQE cannot improve it, but it MATERIALIZES the
-    # exchange as its own stage-job, doubling the per-batch job count
-    # (measured: 2 jobs/clean batch with AQE, 1 without). At the
-    # 10^4-micro-batch design point that second job IS the dominant fixed
-    # cost this path exists to remove (VERDICT r4 next #3). Session-scoped
-    # conf: the engine assumes no concurrent queries inside one apply
-    # (same single-writer contract the ledger already imposes).
-    conf = events.sparkSession.conf
-    aqe_prev = conf.get("spark.sql.adaptive.enabled", "true")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        prepared = prepare_events(events)
+    # AQE off for the span of one batch apply: a merge plan is
+    # fixed-shape, and AQE would run its exchange as a second job (2
+    # jobs/clean batch with AQE, 1 without). At the 10^4-micro-batch
+    # design point that second job IS the dominant fixed cost this path
+    # exists to remove (VERDICT r4 next #3).
+    # The expressions come from the table's cache (LakeTable.plan_columns):
+    # a commit rebuilds only what its head changed.
+    with aqe_off(events.sparkSession):
         m = lake.manifest()
-        reason = invalid_reason(
-            lake.keys, watermark_seq=m.tombstone_watermark if m is not None else None
-        )
-        seq_valid = F.when(reason.isNull(), F.col("seq"))
+        wm = m.tombstone_watermark if m is not None else None
+        q = lake.plan_columns("quarantine", wm, lambda: _quarantine(lake.keys, wm))
+        prepared = events.withColumns(lake.plan_columns("prepare", None, prepare_columns))
         obs = Observation()
-        observed = prepared.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows_in"),
-            F.sum(reason.isNotNull().cast("long")).alias("n_invalid"),
-            F.sum((reason.isNull() & (F.col("op") == "delete")).cast("long")).alias("tombstones"),
-            F.max(seq_valid).alias("max_seq"),
-            F.min(seq_valid).alias("min_seq"),
-        )
-        src = observed.filter(reason.isNull())
+        src = prepared.observe(obs, *q.observed).filter(q.valid)
         if thin_shuffle:
             from pyorchdb_spark.operators.dedup import prune_to_winners, winner_tuples
 
-            w = winner_tuples(prepared.filter(reason.isNull()), keys=lake.keys)
+            w = winner_tuples(prepared.filter(q.valid), keys=lake.keys)
             src = prune_to_winners(src, keys=lake.keys, winners=w)
 
         def record() -> dict:
@@ -190,12 +209,12 @@ def apply_batch(
                 # CollectMetrics node never executes. Such batches are
                 # degenerate by construction, so pay one explicit (tiny)
                 # metrics job for them; clean batches stay at one job.
-                metrics = ledger.collect_partition_metrics(prepared, reason)
+                metrics = ledger.collect_partition_metrics(prepared, q.reason)
             rejected = sum(r["n_invalid"] or 0 for r in metrics)
             rejects = None
             if rejected:  # the rare reject path pays one extra job; clean batches never do
                 rejects = ledger.record_rejects(
-                    batch_id, prepared.withColumn("reject_reason", reason).filter(reason.isNotNull())
+                    batch_id, prepared.withColumn("reject_reason", q.reason).filter(~q.valid)
                 )
             return ledger.record_lineage(batch_id, metrics, rows_rejected=rejected, rejects=rejects)
 
@@ -209,8 +228,6 @@ def apply_batch(
             manifest=m,
             record=record,
         )
-    finally:
-        conf.set("spark.sql.adaptive.enabled", aqe_prev)
     rec = manifest.batch
     return ApplyResult(batch_id, False, manifest.version, rec["rows_in"], rec["rows_rejected"])
 
@@ -225,13 +242,15 @@ def maybe_compact(
     """The compaction trigger, shared by batch replay and the
     streaming tail; call it after each ``apply_batch`` returns.
 
-    Two gates, both driver-only arithmetic over one parse of the head
-    manifest: at least ``compact_factor`` delta commits accumulated AND
-    some bucket group actually exceeds the fold bounds — otherwise stale
-    cold-group delta dirs would keep the commit count high and re-run the
-    watermark derivation and fold planning after every batch for nothing.
-    The compaction is partial: only bucket groups whose delta backlog
-    exceeds the bounds are rewritten; cold buckets keep their base files.
+    Two gates, both driver-only arithmetic over the head manifest that
+    ``apply_batch`` published (``LakeTable.manifest`` parses a head once,
+    so this re-parses nothing): at least ``compact_factor`` delta commits
+    accumulated AND some bucket group actually exceeds the fold bounds —
+    otherwise stale cold-group delta dirs would keep the commit count high
+    and re-run the watermark derivation and fold planning after every
+    batch for nothing. The compaction is partial: only bucket groups
+    whose delta backlog exceeds the bounds are rewritten, in one Spark
+    job; cold buckets keep their base files.
 
     ``tombstone_lag_batches``: None retains ALL tombstones (arbitrarily
     late events may still arrive — no disorder contract declared);
@@ -325,7 +344,10 @@ def replay(
         strategy_out.update(
             salted=bool(salted), n_salts=n_salts, thin=bool(thin_shuffle)
         )
-    batch_ids = [r[0] for r in events.select("batch_id").distinct().orderBy("batch_id").collect()]
+    # one job: AQE would add a job per exchange, and a distributed sort a
+    # sampling job, for a list of a few thousand ids at most
+    with aqe_off(events.sparkSession):
+        batch_ids = sorted(r[0] for r in events.select("batch_id").distinct().collect())
     results = []
     prev_rows: int | None = None
     for b in batch_ids:

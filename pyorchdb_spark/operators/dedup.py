@@ -35,8 +35,9 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 from functools import lru_cache
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 DEFAULT_KEYS = ("repo", "path")
@@ -94,18 +95,20 @@ def identity_shuffle_tokens(n_buckets: int) -> tuple[int, ...]:
     return tuple(toks)  # type: ignore[arg-type]
 
 
-def bucket_partition_token(n_buckets: int, bucket_col: str = "_bucket"):
-    """Column expr mapping ``bucket_col`` (0..n-1) to its identity-shuffle
-    token (IntegerType — Spark hashes int and long differently), or None
-    when n_buckets is over the gate and plain bucket hashing is fine."""
+def bucket_partition_token(n_buckets: int, bucket_col: str | Column = "_bucket"):
+    """Column expr mapping ``bucket_col`` (0..n-1; a name or an expression)
+    to its identity-shuffle token (IntegerType — Spark hashes int and long
+    differently), or None when n_buckets is over the gate and plain
+    bucket hashing is fine."""
     if n_buckets > IDENTITY_SHUFFLE_MAX_BUCKETS:
         return None
     toks = identity_shuffle_tokens(n_buckets)
     arr = F.lit(list(toks)).cast("array<int>")
-    return F.element_at(arr, (F.col(bucket_col) + 1).cast("int"))
+    idx = F.col(bucket_col) if isinstance(bucket_col, str) else bucket_col
+    return F.element_at(arr, (idx + 1).cast("int"))
 
 
-def subsplit_index(keys: Sequence[str], sub_splits: int, bucket_col: str = "_bucket"):
+def subsplit_index(keys: Sequence[str], sub_splits: int, bucket: Column):
     """Partition index combining the storage bucket with a key-hash
     sub-split: ``bucket * s + pmod(xxhash64('_sub', keys), s)``.
 
@@ -122,7 +125,41 @@ def subsplit_index(keys: Sequence[str], sub_splits: int, bucket_col: str = "_buc
     key sets, so read-side LWW resolution never orders rows between them.
     """
     sub = F.pmod(F.xxhash64(F.lit("_sub"), *[F.col(k) for k in keys]), F.lit(sub_splits))
-    return F.col(bucket_col) * sub_splits + sub
+    return bucket * sub_splits + sub
+
+
+class BucketExchange(NamedTuple):
+    """The exchange that places each storage bucket (or bucket sub-split)
+    in its own shuffle partition: add ``columns``, repartition into
+    ``n_parts`` by ``part``, drop ``helpers`` after the exchange."""
+
+    columns: dict[str, Column]
+    part: Column
+    n_parts: int
+    helpers: tuple[str, ...]
+
+
+def bucket_exchange(
+    n_buckets: int, keys: Sequence[str], bucket_col: str = "_bucket", sub_splits: int = 1
+) -> BucketExchange:
+    """The storage bucket ``pmod(xxhash64(keys), n)`` as ``bucket_col``,
+    partitioned by its identity-shuffle token (``bucket_partition_token``)
+    or, with ``sub_splits`` > 1, by the token of ``subsplit_index``. The
+    columns are independent expressions of the input, so one
+    ``withColumns`` adds them all."""
+    s = max(1, int(sub_splits))
+    bucket = F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets))
+    idx = subsplit_index(keys, s, bucket) if s > 1 else bucket
+    token = bucket_partition_token(n_buckets * s, idx)
+    helpers = {}
+    if token is not None:
+        helpers["_ibp"] = token
+    elif s > 1:
+        helpers["_pidx"] = idx
+    part_col = next(iter(helpers), bucket_col)
+    return BucketExchange(
+        {bucket_col: bucket, **helpers}, F.col(part_col), n_buckets * s, tuple(helpers)
+    )
 
 
 def _order_cols(seq_col: str, tiebreakers: Sequence[str]):
@@ -184,6 +221,37 @@ def lww_dedup_salted(
     return lww_dedup(pre, keys, seq_col, tiebreakers)
 
 
+class BucketedLww(NamedTuple):
+    """``lww_dedup_bucketed``'s expressions for one (n_buckets, keys,
+    order, sub_splits): the bucket exchange and the key-run start flag."""
+
+    exchange: BucketExchange
+    first_of_key: Column
+
+
+def bucketed_lww_plan(
+    n_buckets: int,
+    keys: Sequence[str] = DEFAULT_KEYS,
+    seq_col: str = "seq",
+    tiebreakers: Sequence[str] = DEFAULT_TIEBREAKERS,
+    bucket_col: str = "_bucket",
+    sub_splits: int = 1,
+) -> BucketedLww:
+    """Build ``lww_dedup_bucketed``'s expressions; ``tiebreakers`` must
+    all be columns of the input. A caller that dedups many batches into
+    one layout builds this once (``LakeTable`` caches it) and passes it
+    as ``plan``."""
+    from functools import reduce
+    from operator import or_
+
+    x = bucket_exchange(n_buckets, keys, bucket_col, sub_splits)
+    w = Window.partitionBy(x.part).orderBy(
+        *[F.col(k).asc() for k in keys], *_order_cols(seq_col, tiebreakers)
+    )
+    first = reduce(or_, [~F.lag(F.col(k)).over(w).eqNullSafe(F.col(k)) for k in keys])
+    return BucketedLww(x, first)
+
+
 def lww_dedup_bucketed(
     events: DataFrame,
     n_buckets: int,
@@ -192,6 +260,7 @@ def lww_dedup_bucketed(
     tiebreakers: Sequence[str] = DEFAULT_TIEBREAKERS,
     bucket_col: str = "_bucket",
     sub_splits: int = 1,
+    plan: BucketedLww | None = None,
 ) -> DataFrame:
     """LWW winners, shuffled by STORAGE BUCKET instead of by key — the
     fused merge+write plan (one full-row shuffle total).
@@ -222,35 +291,20 @@ def lww_dedup_bucketed(
     decoupled from the storage layout when the table is narrower than the
     cluster. Winner selection is unchanged: the sub-split is a function of
     the keys, so a key's rows never straddle partitions.
-    """
-    from functools import reduce
-    from operator import or_
 
-    tiebreakers = [c for c in tiebreakers if c in events.columns]
-    s = max(1, int(sub_splits))
-    bucket = F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets))
-    out = events.withColumn(bucket_col, bucket)
-    if s > 1:
-        idx_col, n_parts = "_pidx", n_buckets * s
-        out = out.withColumn(idx_col, subsplit_index(keys, s, bucket_col))
-    else:
-        idx_col, n_parts = bucket_col, n_buckets
-    token = bucket_partition_token(n_parts, idx_col)
-    part_col = idx_col if token is None else "_ibp"
-    w = Window.partitionBy(part_col).orderBy(
-        *[F.col(k).asc() for k in keys], *_order_cols(seq_col, tiebreakers)
-    )
-    new_key = reduce(
-        or_, [~F.lag(F.col(k)).over(w).eqNullSafe(F.col(k)) for k in keys]
-    )
-    if token is not None:
-        out = out.withColumn(part_col, token)
-    helper_cols = [c for c in ("_pidx", "_ibp") if c in (part_col, idx_col) and c != bucket_col]
+    ``plan``: a prebuilt ``bucketed_lww_plan`` of these arguments, which
+    then are not read again.
+    """
+    if plan is None:
+        tiebreakers = [c for c in tiebreakers if c in events.columns]
+        plan = bucketed_lww_plan(n_buckets, keys, seq_col, tiebreakers, bucket_col, sub_splits)
+    x = plan.exchange
     return (
-        out.repartition(n_parts, F.col(part_col))
-        .withColumn("_win", new_key)
-        .filter(F.col("_win"))
-        .drop("_win", *helper_cols)
+        events.withColumns(x.columns)
+        .repartition(x.n_parts, x.part)
+        .withColumn("_win", plan.first_of_key)
+        .filter("_win")
+        .drop("_win", *x.helpers)
     )
 
 

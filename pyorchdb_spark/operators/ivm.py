@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from pyorchdb_spark.operators.dedup import DEFAULT_KEYS
 from pyorchdb_spark.plans.merge import resolve_merge
+from pyorchdb_spark.session import aqe_off
 
 # exact accumulator types: input values quantized to 4 decimal places,
 # group sums wide enough for 10^10 rows of 10^14-scale values
@@ -245,10 +246,7 @@ def maintain_on_lake_merge(
       and nothing depends on pre-merge files staying on disk.
     """
     spark = lake.spark
-    conf = spark.conf
-    aqe_prev = conf.get("spark.sql.adaptive.enabled", "true")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with aqe_off(spark):
         m_before = lake.manifest()
         m_after = lake.merge(batch_events, batch_id=batch_id)
         if m_before is None or not m_before.files:
@@ -293,5 +291,3 @@ def maintain_on_lake_merge(
             )
         # ONE maintenance action inside the AQE-off window; |groups| rows
         return plan.localCheckpoint(eager=True)
-    finally:
-        conf.set("spark.sql.adaptive.enabled", aqe_prev)

@@ -4,11 +4,25 @@ Local mode stands in for a multi-executor cluster in this sandbox; every
 knob below is chosen so the *same* code runs unchanged on a 1000-executor
 cluster (AQE, adaptive skew join, Arrow batches sized for wide ``content``
 strings).
+
+PySpark's per-call origin capture is off: with
+``spark.python.sql.dataFrameDebugging.enabled`` at its default, every
+``pyspark.sql.functions`` call and DataFrame method walks the Python
+stack and makes extra py4j round trips to record its call site: two
+thirds of the round trips a commit made to build its plan (1,232 → 412
+per clean commit, counted on the committing thread). The cost:
+an analysis error no longer names the Python line that built the failing
+expression. To get that back while debugging, pass
+``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+to the first ``build_session`` of the process (PySpark reads the setting
+once, at the first call it wraps).
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -57,6 +71,8 @@ def build_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
+        # no Python call-site capture per API call (module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # off by default (headless sandbox); SPARK_GRAFT_UI=true enables
         # the REST status API for shuffle-byte accounting in bench runs
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
@@ -71,3 +87,20 @@ def build_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def aqe_off(spark: SparkSession) -> Iterator[None]:
+    """Run the block with adaptive query execution off, then restore the
+    session's setting. For fixed-shape plans (one user-specified
+    repartition, no joins) AQE cannot improve the plan, but it runs each
+    exchange as its own job: a clean commit is 2 jobs under AQE and 1
+    without. Session-scoped conf: the engine runs no concurrent queries
+    inside one such block (the ledger's single-writer contract)."""
+    conf = spark.conf
+    prev = conf.get("spark.sql.adaptive.enabled", "true")
+    conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        yield
+    finally:
+        conf.set("spark.sql.adaptive.enabled", prev)

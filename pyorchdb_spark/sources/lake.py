@@ -70,21 +70,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from pyorchdb_spark.operators.dedup import DEFAULT_KEYS
+from pyorchdb_spark.operators.dedup import (
+    DEFAULT_KEYS,
+    DEFAULT_TIEBREAKERS,
+    bucket_exchange,
+    bucketed_lww_plan,
+    lww_dedup,
+    lww_dedup_bucketed,
+    lww_salt_prestage,
+)
+from pyorchdb_spark.session import aqe_off
 
 # compact(tombstone_watermark_seq=RETAIN_ALL_TOMBSTONES) folds MoR deltas
 # into base files while keeping every tombstone (no ingest low-watermark
 # yet -> arbitrarily late events may still arrive)
 RETAIN_ALL_TOMBSTONES = -(1 << 62)
 
-KEY_SEP = "\x00"
-
 _VERSION_RE = re.compile(r"v(\d{8})\.json")
 _ARCHIVE_RE = re.compile(r"batches-v(\d{8})\.json")
-
-
-def composite_key(keys: Sequence[str] = DEFAULT_KEYS):
-    return F.concat_ws(KEY_SEP, *[F.col(k) for k in keys])
 
 
 def bucket_expr(keys: Sequence[str], n_buckets: int):
@@ -285,6 +288,24 @@ class LakeTable:
         os.makedirs(os.path.join(self.root, "data"), exist_ok=True)
         # last head current_version saw; only a hint, lookups probe forward from it
         self._head: int | None = None
+        # the parsed head manifest: a published version never changes, so
+        # it stays valid for as long as no newer version exists
+        self._head_manifest: Manifest | None = None
+        # {name: (spec, Columns)} of plan_columns; per table, so no cached
+        # Column outlives the session it was built for
+        self._plan_columns: dict[str, tuple[object, object]] = {}
+
+    def plan_columns(self, name: str, spec: object, build: Callable[[], object]):
+        """``build()``'s Column expressions for this table's commit plans,
+        built once and rebuilt only when ``spec`` (what they depend on)
+        changes; one slot per ``name``. Each PySpark call that spells an
+        expression is a py4j round trip, so a commit built from cached
+        expressions spends its driver time on the plan, not on spelling
+        it."""
+        hit = self._plan_columns.get(name)
+        if hit is None or hit[0] != spec:
+            hit = self._plan_columns[name] = (spec, build())
+        return hit[1]
 
     # ---------- manifest plumbing ----------
 
@@ -308,14 +329,24 @@ class LakeTable:
         return self._head
 
     def manifest(self, version: int | None = None) -> Manifest | None:
+        """The manifest of ``version`` (default: the head). The head is
+        parsed once: a commit's apply, its compaction check and the next
+        commit's apply share the manifest it published, unless another
+        writer published after it. Callers must not mutate the result."""
         version = version if version is not None else self.current_version()
         if version is None:
             return None
+        if self._head_manifest is not None and self._head_manifest.version == version:
+            return self._head_manifest
         with open(os.path.join(self._manifest_dir(), f"v{version:08d}.json")) as fh:
-            return Manifest.from_json(fh.read())
+            m = Manifest.from_json(fh.read())
+        if version == self._head:
+            self._head_manifest = m
+        return m
 
     def _publish(self, manifest: Manifest) -> None:
         link_publish(self._manifest_dir(), f"v{manifest.version:08d}.json", manifest.to_json())
+        self._head, self._head_manifest = manifest.version, manifest
 
     def _commit(
         self, manifest: Manifest, new_files: list[dict], record: Callable[[], dict] | None = None
@@ -365,8 +396,6 @@ class LakeTable:
             paths = [os.path.join(self.root, f["path"]) for f in m.files]
             df = self.spark.read.schema(m.schema()).parquet(*paths)
         if m is not None and any(f.get("delta") for f in m.files):
-            from pyorchdb_spark.operators.dedup import lww_dedup
-
             df = lww_dedup(df, keys=self.keys)
         if not include_tombstones and "op" in df.columns:
             df = df.filter(F.col("op") != "delete").drop("op")
@@ -416,8 +445,6 @@ class LakeTable:
         )
         df = df.join(F.broadcast(keys_df), list(self.keys), "left_semi")
         if any(f.get("delta") for f in files):
-            from pyorchdb_spark.operators.dedup import lww_dedup
-
             df = lww_dedup(df, keys=self.keys)
         if "op" in df.columns:
             df = df.filter(F.col("op") != "delete").drop("op")
@@ -489,8 +516,6 @@ class LakeTable:
         ]
         if not candidates:
             return self.spark.createDataFrame([], m.schema())
-        from pyorchdb_spark.operators.dedup import lww_dedup
-
         df = self.spark.read.schema(m.schema()).parquet(
             *[os.path.join(self.root, f["path"]) for f in candidates]
         )
@@ -525,14 +550,14 @@ class LakeTable:
         out = self._write_bucketed(
             df, version, n_buckets, pre_bucketed=pre_bucketed, sub_splits=sub_splits
         )
-        # data-file schema: the _bucket partition column is encoded in dir
-        # names, never in file contents
-        data_schema = StructType([f for f in df.schema.fields if f.name != "_bucket"])
         # per-bucket splitting until every file is under the threshold
         while True:
             oversized = [f for f in out if f["rows"] > self.max_rows_per_file]
             if not oversized:
                 return sorted(out, key=lambda f: f["path"])
+            # data-file schema: the _bucket partition column is encoded in
+            # dir names, never in file contents
+            data_schema = StructType([f for f in df.schema.fields if f.name != "_bucket"])
             for big in oversized:
                 out.remove(big)
                 part = self.spark.read.schema(data_schema).parquet(
@@ -548,37 +573,22 @@ class LakeTable:
         out_rel = f"data/commit-{version:08d}-{uuid.uuid4().hex[:8]}"
         out_dir = os.path.join(self.root, out_rel)
         if not pre_bucketed:
-            from pyorchdb_spark.operators.dedup import (
-                bucket_partition_token,
-                subsplit_index,
-            )
-
-            key = composite_key(self.keys)
-            df = df.withColumn("_bucket", bucket_expr(self.keys, n_buckets))
             # identity-shuffle token: hashing n bucket ids into n
             # partitions is balls-in-bins (empty tasks + 2-4x loaded
             # ones); the token places bucket b exactly in partition b.
             # sub_splits > 1 widens the write to n_buckets * s partitions
             # on a key-hash sub-split (s disjoint-key files per bucket) so
-            # a narrow table still fills every cluster slot.
-            s = max(1, int(sub_splits))
-            if s > 1:
-                df = df.withColumn("_pidx", subsplit_index(self.keys, s))
-                idx_col, n_parts = "_pidx", n_buckets * s
-            else:
-                idx_col, n_parts = "_bucket", n_buckets
-            token = bucket_partition_token(n_parts, idx_col)
-            if token is not None:
-                df = (
-                    df.withColumn("_ibp", token)
-                    .repartition(n_parts, F.col("_ibp"))
-                    .sortWithinPartitions(key)
-                    .drop("_ibp")
-                )
-            else:
-                df = df.repartition(n_parts, F.col(idx_col)).sortWithinPartitions(key)
-            if s > 1:
-                df = df.drop("_pidx")
+            # a narrow table still fills every cluster slot. The sort leads
+            # with _bucket: the partitioned write requires that order and
+            # would otherwise add its own Sort(_bucket), and the optimizer
+            # then drops a key-only sort beneath it.
+            x = bucket_exchange(n_buckets, self.keys, sub_splits=sub_splits)
+            df = (
+                df.withColumns(x.columns)
+                .repartition(x.n_parts, x.part)
+                .sortWithinPartitions("_bucket", *self.keys)
+                .drop(*x.helpers)
+            )
         df.write.partitionBy("_bucket").mode("error").parquet(out_dir)
         import pyarrow.parquet as pq
 
@@ -734,6 +744,22 @@ class LakeTable:
         s_rows = rows_hint // (n_buckets * 65536)
         return int(max(1, min(s_par, s_rows, 64)))
 
+    def _lww_bucketed(
+        self, name: str, df: DataFrame, columns: Sequence[str], n_buckets: int, sub_splits: int
+    ) -> DataFrame:
+        """``lww_dedup_bucketed`` of ``df`` (whose columns are ``columns``)
+        into this table's layout, from the expressions cached under
+        ``name``."""
+        tiebreakers = tuple(c for c in DEFAULT_TIEBREAKERS if c in columns)
+        plan = self.plan_columns(
+            name,
+            (n_buckets, sub_splits, tiebreakers),
+            lambda: bucketed_lww_plan(
+                n_buckets, self.keys, tiebreakers=tiebreakers, sub_splits=sub_splits
+            ),
+        )
+        return lww_dedup_bucketed(df, n_buckets, plan=plan)
+
     def merge(
         self,
         source_events: DataFrame,
@@ -760,8 +786,10 @@ class LakeTable:
         batch appends identical winners: resolution makes the re-apply a
         logical no-op (state-equal, not byte-identical).
 
-        ``manifest``: the caller's already-parsed head (ingest.apply_batch),
-        so MERGE re-parses no manifest JSON.
+        ``manifest``: the head the caller read (``ingest.apply_batch``
+        derived its quarantine watermark from it). The commit builds on it,
+        so a version published since makes the link fail instead of
+        merging onto a head the batch was not checked against.
 
         ``record``: builds the batch record this commit publishes (see
         ``_commit``); without one, a ``batch_id`` is recorded bare.
@@ -785,8 +813,6 @@ class LakeTable:
         on the stream's cloned session) keeps its session and an
         ``Observation`` on it completes.
         """
-        from pyorchdb_spark.operators.dedup import lww_dedup_bucketed, lww_salt_prestage
-
         m = manifest if manifest is not None else self.manifest()
         old_files = m.files if m is not None else []
         # Bucket generation carries forward from the table (splits may
@@ -805,14 +831,17 @@ class LakeTable:
             new_schema = self._evolve_schema(m.schema(), new_schema)
         # align the batch to the evolved schema (additive evolution: a
         # column the batch lacks is null; older stored files gain it as
-        # null at read via the manifest schema)
-        have = set(source_events.columns)
-        batch = source_events.select(
-            *[
-                F.col(f.name) if f.name in have else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in new_schema.fields
-            ]
-        )
+        # null at read via the manifest schema); a batch already in the
+        # table's column order needs no projection
+        batch = source_events
+        if source_events.columns != new_schema.fieldNames():
+            have = set(source_events.columns)
+            batch = source_events.select(
+                *[
+                    F.col(f.name) if f.name in have else F.lit(None).cast(f.dataType).alias(f.name)
+                    for f in new_schema.fields
+                ]
+            )
         # LWW winners with ONE full-row shuffle keyed by the storage bucket
         # (semantics identical to plans/merge.resolve_merge, asserted in
         # tests/test_lake_merge.py) — the output is already
@@ -821,8 +850,8 @@ class LakeTable:
         # <= n_salts rows first.
         if salted:
             batch = lww_salt_prestage(batch, keys=self.keys, n_salts=n_salts)
-        merged = lww_dedup_bucketed(
-            batch, nb, keys=self.keys, sub_splits=self._sub_splits(nb, rows_hint)
+        merged = self._lww_bucketed(
+            "merge", batch, new_schema.fieldNames(), nb, self._sub_splits(nb, rows_hint)
         )
         version = (m.version if m is not None else 0) + 1
         new_files = self._write_data_files(merged, version, nb, pre_bucketed=True)
@@ -876,7 +905,8 @@ class LakeTable:
     # ---------- maintenance ----------
 
     def compact(self, tombstone_watermark_seq: int | None = None, num_files: int | None = None) -> Manifest:
-        """Rewrite the table dropping GC-able tombstones.
+        """Rewrite the table dropping GC-able tombstones, in one Spark job
+        (``_rewrite``).
 
         A tombstone with ``seq <= tombstone_watermark_seq`` can be dropped
         once the ingest low-watermark guarantees no event with a lower seq
@@ -894,15 +924,48 @@ class LakeTable:
         m = self.manifest()
         if m is None:
             raise ValueError("nothing to compact")
-        df = self.snapshot(include_tombstones=True)
-        if "op" in df.columns:
+        n_buckets = num_files or m.n_buckets or self._initial_buckets(None, None)
+        return self._rewrite(m, m.files, n_buckets, tombstone_watermark_seq, f"compact-{m.version + 1}")
+
+    def _rewrite(
+        self,
+        m: Manifest,
+        selected: list[dict],
+        n_buckets: int,
+        tombstone_watermark_seq: int | None,
+        batch_id: str,
+    ) -> Manifest:
+        """The rewrite ``compact`` and ``compact_partial`` share, as ONE
+        Spark job: read ``selected``, keep each key's LWW winner with the
+        bucket-shuffled ``lww_dedup_bucketed`` (its output is already the
+        write's layout, so the write adds no exchange), drop the
+        tombstones the watermark allows, and publish the survivors, at
+        ``n_buckets``, in place of ``selected``.
+
+        Tombstones with ``seq <= tombstone_watermark_seq`` go (all of
+        them for None, none for ``RETAIN_ALL_TOMBSTONES``); the manifest
+        watermark advances to it (monotone) unless it is None or
+        ``RETAIN_ALL_TOMBSTONES``. Runs under ``aqe_off``, like a merge:
+        the plan is fixed-shape, and AQE would run its exchange as a job
+        of its own."""
+        schema = m.schema()
+        if selected:
+            df = self.spark.read.schema(schema).parquet(
+                *[os.path.join(self.root, f["path"]) for f in selected]
+            )
+        else:
+            df = self.spark.createDataFrame([], schema)
+        df = self._lww_bucketed("compact", df, schema.fieldNames(), n_buckets, 1)
+        if "op" in schema.fieldNames():
             keep = F.col("op") != "delete"
             if tombstone_watermark_seq is not None:
                 keep = keep | (F.col("seq") > tombstone_watermark_seq)
             df = df.filter(keep)
         version = m.version + 1
-        n_buckets = num_files or m.n_buckets or self._initial_buckets(None, None)
-        new_files = self._write_data_files(df, version, n_buckets)
+        with aqe_off(self.spark):
+            new_files = self._write_data_files(df, version, n_buckets, pre_bucketed=True)
+        selected_paths = {f["path"] for f in selected}
+        untouched = [f for f in m.files if f["path"] not in selected_paths]
         prev_wm = m.tombstone_watermark
         if tombstone_watermark_seq is None or tombstone_watermark_seq == RETAIN_ALL_TOMBSTONES:
             new_wm = prev_wm  # retain-all / full-log compaction: no new gate
@@ -911,12 +974,12 @@ class LakeTable:
         manifest = Manifest(
             version=version,
             parent=m.version,
-            batch_id=f"compact-{version}",
+            batch_id=batch_id,
             schema_json=m.schema_json,
-            files=new_files,
+            files=sorted(untouched + new_files, key=lambda f: f["path"]),
             n_buckets=max([n_buckets] + [f["nb"] for f in new_files]),
             tombstone_watermark=new_wm,
-            head_seq=self._derive_head_seq(m, new_files),
+            head_seq=self._derive_head_seq(m, untouched + new_files),
         )
         return self._commit(manifest, new_files)
 
@@ -1037,9 +1100,10 @@ class LakeTable:
         powers of two, so two files can only share keys within one such
         class; at steady state (one generation) a group is exactly one
         bucket. Selected groups are read together, LWW-resolved once, and
-        rewritten at the current top generation (in-commit splitting
-        still applies). Tombstone retention follows ``compact``'s
-        watermark rules, and the manifest watermark advances the same way.
+        rewritten at the current top generation in one Spark job
+        (``_rewrite``; in-commit splitting still applies). Tombstone
+        retention follows ``compact``'s watermark rules, and the manifest
+        watermark advances the same way.
 
         Returns the current manifest unchanged (no new version) when no
         group exceeds the bounds. Falls back to full ``compact`` when the
@@ -1057,42 +1121,10 @@ class LakeTable:
         selected = self._partial_selection(m, delta_fraction, max_delta_files_per_group)
         if not selected:
             return m
-
-        from pyorchdb_spark.operators.dedup import lww_dedup
-
-        df = lww_dedup(
-            self.spark.read.schema(m.schema()).parquet(
-                *[os.path.join(self.root, f["path"]) for f in selected]
-            ),
-            keys=self.keys,
-        )
-        if "op" in df.columns:
-            keep = F.col("op") != "delete"
-            if tombstone_watermark_seq is not None:
-                keep = keep | (F.col("seq") > tombstone_watermark_seq)
-            df = df.filter(keep)
-
-        version = m.version + 1
         n_buckets = m.n_buckets or self._initial_buckets(None, None)
-        new_files = self._write_data_files(df, version, n_buckets)
-        selected_paths = {f["path"] for f in selected}
-        untouched = [f for f in m.files if f["path"] not in selected_paths]
-        prev_wm = m.tombstone_watermark
-        if tombstone_watermark_seq is None or tombstone_watermark_seq == RETAIN_ALL_TOMBSTONES:
-            new_wm = prev_wm
-        else:
-            new_wm = max(prev_wm, tombstone_watermark_seq) if prev_wm is not None else tombstone_watermark_seq
-        manifest = Manifest(
-            version=version,
-            parent=m.version,
-            batch_id=f"compact-{version}-partial",
-            schema_json=m.schema_json,
-            files=sorted(untouched + new_files, key=lambda f: f["path"]),
-            n_buckets=max([n_buckets] + [f["nb"] for f in new_files]),
-            tombstone_watermark=new_wm,
-            head_seq=self._derive_head_seq(m, untouched + new_files),
+        return self._rewrite(
+            m, selected, n_buckets, tombstone_watermark_seq, f"compact-{m.version + 1}-partial"
         )
-        return self._commit(manifest, new_files)
 
     def vacuum(self, keep_versions: int = 1) -> list[str]:
         """Delete data unreferenced by the newest ``keep_versions`` manifests

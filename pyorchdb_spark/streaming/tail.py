@@ -11,8 +11,9 @@ Exactly-once is layered twice:
    ``foreachBatch`` once (resume-after-kill = continue from offsets —
    maps the reference's catalog persistence, catalog.py:107-109).
 2. Our own batch records (committed in the lake manifest, keyed by the
-   stream's epoch id) make the apply idempotent even if a micro-batch is
-   re-delivered after a crash *inside* foreachBatch.
+   checkpoint's query id and the epoch id) make the apply idempotent
+   even if a micro-batch is re-delivered after a crash *inside*
+   foreachBatch.
 
 ``availableNow`` trigger = bounded replay of everything currently in the
 log, in bounded micro-batches — the batch/stream unification point.
@@ -20,7 +21,7 @@ log, in bounded micro-batches — the batch/stream unification point.
 
 from __future__ import annotations
 
-import hashlib
+import json
 import os
 
 from pyspark.sql import SparkSession
@@ -36,6 +37,20 @@ EVENT_SCHEMA_DDL = (
     "repo string, path string, commit string, seq long, op string, "
     "lang string, content string, batch_id string, ts timestamp, lang_variant string"
 )
+
+
+def _stream_id(checkpoint_dir: str) -> str:
+    """The namespace of a tail's batch ids: the query id Spark writes to
+    ``<checkpoint>/metadata`` before the first batch, without dashes.
+
+    Epoch ids restart at 0 when a checkpoint is recreated, or when a
+    second stream feeds the same table, so a bare ``stream-<epoch>`` id
+    would skip those batches as committed. The id is stable across
+    restarts from one checkpoint, and new for a checkpoint recreated at
+    the same path (whose files then re-apply, state-equal under LWW,
+    instead of being skipped)."""
+    with open(os.path.join(checkpoint_dir, "metadata")) as fh:
+        return json.loads(fh.readline())["id"].replace("-", "")
 
 
 def tail_events(
@@ -79,23 +94,19 @@ def tail_events(
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     stream = reader.parquet(events_path)
 
-    # Batch ids are namespaced by the checkpoint identity, not just the
-    # epoch id: epoch ids restart at 0 if the checkpoint dir is deleted or
-    # a second stream (different checkpoint) feeds the same table, and a
-    # bare "stream-{epoch}" id would silently skip those batches.
-    stream_ns = hashlib.sha256(os.path.abspath(checkpoint_dir).encode()).hexdigest()[:12]
-
     # previous batch's row count sizes the next delta generation (the
     # fused path learns the true count only after the write) — same
     # rows_hint chaining as batch-mode replay
-    state = {"prev_rows": None}
+    state = {"prev_rows": None, "ns": None}
 
     def _apply(batch_df, epoch_id: int) -> None:
+        if state["ns"] is None:
+            state["ns"] = _stream_id(checkpoint_dir)
         res = apply_batch(
             lake,
             ledger,
             batch_df,
-            batch_id=f"stream-{stream_ns}-{epoch_id:08d}",
+            batch_id=f"stream-{state['ns']}-{epoch_id:08d}",
             salted=salted,
             n_salts=n_salts,
             num_files=num_files,

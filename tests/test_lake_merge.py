@@ -234,6 +234,45 @@ def test_bucket_splitting_bounds_file_size(spark, tmp_path):
     assert len(carried) >= len(m.files) - 2
 
 
+def test_overwrite_split_and_compaction_write_key_sorted_files(spark, tmp_path):
+    """Every data file is sorted by key, whichever path wrote it: an
+    overwrite (the write scd_table's rebuild uses too), its in-commit
+    split of an oversized file, and both compactions. The partitioned
+    write needs its rows ordered by ``_bucket``: a sort by key alone is
+    replaced by the writer's own ``Sort(_bucket)`` and the files come out
+    in shuffle order."""
+    import pyarrow.parquet as pq
+
+    from pyorchdb_spark.ingest import apply_batch
+
+    root = str(tmp_path / "t")
+    lake = LakeTable(spark, root, max_rows_per_file=600)
+    ledger = BatchLedger(spark, root)
+    ev = prepare_events(change_events(spark, 6_000, batch_size=1_000))
+
+    def unsorted(files):
+        bad = []
+        for f in files:
+            t = pq.read_table(os.path.join(root, f["path"]), columns=["repo", "path"])
+            keys = list(zip(t["repo"].to_pylist(), t["path"].to_pylist()))
+            if keys != sorted(keys):
+                bad.append(f["path"])
+        return bad
+
+    # 4,000 rows into 4 buckets: every file is over 600 rows and splits
+    m = lake.overwrite(ev.filter(F.col("batch_id") < "b000004"), num_files=4)
+    assert max(f["nb"] for f in m.files) > 4  # the split path ran
+    assert unsorted(m.files) == []
+    for b in ("b000004", "b000005"):
+        apply_batch(lake, ledger, ev.filter(F.col("batch_id") == b).drop("content_sha256"), b)
+    before = {f["path"] for f in lake.manifest().files}
+    m = lake.compact_partial(delta_fraction=0.0)
+    rewritten = [f for f in m.files if f["path"] not in before]
+    assert rewritten and unsorted(rewritten) == []
+    m = lake.compact()
+    assert unsorted(m.files) == []
+
+
 def test_concurrent_publish_never_clobbers_and_loser_cleans_up(spark, tmp_path):
     """ADVICE round 1: the losing writer must neither replace the winner's
     manifest nor leave orphan data files behind."""

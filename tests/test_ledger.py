@@ -18,7 +18,7 @@ from pyorchdb_spark.generator import change_events
 from pyorchdb_spark.ingest import prepare_events, replay
 from pyorchdb_spark.oracle import expected_final_state, state_signature
 from pyorchdb_spark.sources.catalog import BatchLedger
-from pyorchdb_spark.sources.lake import ConcurrentCommitError, LakeTable, read_batch_records
+from pyorchdb_spark.sources.lake import ConcurrentCommitError, LakeTable, Manifest, read_batch_records
 from pyorchdb_spark.streaming.tail import EVENT_SCHEMA_DDL
 
 BATCHES = ["b000000", "b000001", "b000002"]
@@ -257,6 +257,12 @@ def test_head_lookup_probes_instead_of_listing_manifests(spark, tmp_path, monkey
         return listdir(path)
 
     monkeypatch.setattr(os, "listdir", counting_listdir)
+    # and the lake parses no head manifest: each one it works on (apply,
+    # compaction check, compaction, the next apply) is one it published
+    parsed = []
+    from_json = Manifest.from_json
+    monkeypatch.setattr(Manifest, "from_json", lambda text: parsed.append(1) or from_json(text))
     replay(lake, ledger, ev, num_files=2, mor_compact_factor=2)
     assert lake.manifest().batch_id.startswith("compact")
     assert listed == []
+    assert parsed == []

@@ -11,8 +11,10 @@ self-compaction policy.
 from __future__ import annotations
 
 import os
+from functools import reduce
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pyorchdb_spark.generator import change_events
@@ -387,6 +389,52 @@ def test_compact_partial_default_retains_tombstones(spark, tmp_path):
         lake.snapshot(include_tombstones=True).filter(F.col("op") == "delete").count() == n_tomb
     )
     assert m.tombstone_watermark is None
+
+    # More inputs for the rewrite both folds share: before each fold, a
+    # delta deletes one key of every base file (so a partial fold
+    # rewrites every group, like a full one), at seqs 50 apart that
+    # straddle the fold's watermark. Each fold must keep exactly the
+    # tombstones above its watermark (all for RETAIN_ALL, none for
+    # None), leave the live state alone, and record the watermark
+    # monotonically (None and RETAIN_ALL record nothing new).
+    import pyarrow.parquet as pq
+
+    def tombstones():
+        rows = lake.snapshot(include_tombstones=True).filter(F.col("op") == "delete").collect()
+        return {(r.repo, r.path, r.seq) for r in rows}
+
+    cases = [  # (fold, seq of the first new delete, watermark, recorded watermark)
+        (lake.compact_partial, 11_000_000, 11_000_060, 11_000_060),
+        (lake.compact, 12_000_000, 10_000_000, 11_000_060),  # lower: not recorded
+        (lake.compact_partial, 13_000_000, None, 11_000_060),
+        (lake.compact, 14_000_000, RETAIN_ALL_TOMBSTONES, 11_000_060),
+        (lake.compact, 15_000_000, 15_000_010, 15_000_010),
+    ]
+    for fold, seq0, wm, recorded in cases:
+        keys = [
+            pq.read_table(os.path.join(root, f["path"]), columns=["repo", "path", "lang"])
+            .slice(0, 1).to_pylist()[0]
+            for f in lake.manifest().files
+        ]
+        dels = [
+            _one_event(ev, k["repo"], k["path"], seq0 + 50 * i, "delete", "", f"zd{seq0}", lang=k["lang"])
+            for i, k in enumerate(keys)
+        ]
+        lake.merge(reduce(DataFrame.unionByName, dels), batch_id=f"zd{seq0}")
+        before, live = tombstones(), _sig(lake.snapshot())
+        if fold == lake.compact_partial:
+            m = fold(delta_fraction=0.0, tombstone_watermark_seq=wm)
+        else:
+            m = fold(tombstone_watermark_seq=wm)
+        assert not any(f.get("delta") for f in m.files)
+        keep = {
+            t for t in before
+            if wm == RETAIN_ALL_TOMBSTONES or (wm is not None and t[2] > wm)
+        }
+        assert tombstones() == keep, (fold.__name__, wm)
+        assert {t[2] for t in before} & {seq0, seq0 + 50}  # the new deletes are there
+        assert _sig(lake.snapshot()) == live
+        assert m.tombstone_watermark == recorded
 
 
 def test_changes_since_guards_watermark_on_empty_table(spark, tmp_path):

@@ -1,8 +1,10 @@
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
-from pyorchdb_spark.generator import change_events, write_events
+from pyorchdb_spark.generator import change_events, split_batches, write_events
 from pyorchdb_spark.ingest import prepare_events
 from pyorchdb_spark.oracle import expected_final_state, state_signature
 from pyorchdb_spark.sources.catalog import BatchLedger
@@ -12,6 +14,16 @@ from pyorchdb_spark.streaming.tail import run_tail_to_completion, tail_events
 
 def _sig(df):
     return {tuple(r) for r in df.select("repo", "path", "content_sha256").fillna("<null>").collect()}
+
+
+def _write_one_file_per_batch(ev, log_dir, first=0):
+    """Each batch of ``ev`` as one file with a pinned mtime, so the file
+    source maps micro-batches onto log batches deterministically."""
+    for i, (b, bdf) in enumerate(split_batches(ev), start=first):
+        out = str(log_dir / f"batch_id={b}")
+        bdf.drop("batch_id").coalesce(1).write.parquet(out)
+        for f in os.listdir(out):
+            os.utime(os.path.join(out, f), (1_700_000_000 + i * 100,) * 2)
 
 
 def test_stream_tail_checkpoint_resume(spark, tmp_path):
@@ -109,17 +121,52 @@ def test_out_of_order_upsert_across_stream_restarts(spark, tmp_path):
     state = {r["path"]: r["content"] for r in lake.snapshot().collect()}
     assert state == {"k1": "v10", "k3": "new"}  # no stale write, no zombie k2
 
-    # phase 3: checkpoint DELETED (new stream identity) — the whole log is
-    # re-delivered under fresh epoch ids; namespaced markers mean the
-    # batches re-apply (not skip) and the LWW merge keeps state identical
+    # phase 3: checkpoint DELETED and recreated at the same path (a new
+    # query id, epochs restarting at 0) — the whole log is re-delivered;
+    # batch ids namespaced by the query id mean the batches re-apply (not
+    # skip) and the LWW merge keeps state identical
     import shutil
 
     shutil.rmtree(ckpt)
-    run_tail_to_completion(spark, log_dir, lake, ledger, str(tmp_path / "ckpt2"), num_files=2)
+    run_tail_to_completion(spark, log_dir, lake, ledger, ckpt, num_files=2)
     state2 = {r["path"]: r["content"] for r in lake.snapshot().collect()}
     assert state2 == state
-    # and the re-delivery actually ran (markers from both stream identities)
+    # and the re-delivery actually ran (records from both stream identities)
     assert ledger.markers().count() >= 3
+
+
+def test_checkpoint_recreated_at_same_path_reapplies_new_files(spark, tmp_path):
+    """A checkpoint deleted and recreated at the same path restarts its
+    epochs at 0. Batch ids namespaced by the checkpoint's query id (not
+    its path) keep the new epochs from being skipped as committed: with
+    the path as namespace, epochs 0-3 of the second run, which carry 8
+    new files, were skipped and the table lost their keys silently."""
+    import shutil
+
+    ev = change_events(spark, 4_000, batch_size=250).cache()
+    try:
+        log_dir = tmp_path / "log"
+        log_dir.mkdir()
+        ckpt = str(tmp_path / "ckpt")
+        root = str(tmp_path / "t")
+        lake, ledger = LakeTable(spark, root), BatchLedger(spark, root)
+        _write_one_file_per_batch(ev.filter(F.col("batch_id") < "b000008"), log_dir)
+        run_tail_to_completion(
+            spark, str(log_dir), lake, ledger, ckpt, num_files=2, max_files_per_trigger=1
+        )
+        _write_one_file_per_batch(ev.filter(F.col("batch_id") >= "b000008"), log_dir, first=8)
+        shutil.rmtree(ckpt)
+        run_tail_to_completion(
+            spark, str(log_dir), lake, ledger, ckpt, num_files=2, max_files_per_trigger=4
+        )
+
+        exp = expected_final_state(prepare_events(ev).drop("content_sha256").toPandas())
+        assert _sig(lake.snapshot()) == state_signature(exp)
+        ids = [r["batch_id"] for r in ledger.markers().collect()]
+        # 8 epochs of the first query, then 4 of the second (16 files at 4)
+        assert len(ids) == 12 and len({i.rsplit("-", 1)[0] for i in ids}) == 2, ids
+    finally:
+        ev.unpersist()
 
 
 def test_stream_tail_compacting_matches_oracle(spark, tmp_path):
@@ -152,11 +199,9 @@ def test_tail_tombstone_gc_watermark(spark, tmp_path):
     multi-file batch dir can interleave epochs arbitrarily, which would
     (correctly!) quarantine events that violate the declared contract and
     make the un-gated comparison below meaningless."""
-    import os as _os
-
     from pyspark.sql import functions as F
 
-    from pyorchdb_spark.generator import change_events, split_batches
+    from pyorchdb_spark.generator import change_events
     from pyorchdb_spark.sources.catalog import BatchLedger
     from pyorchdb_spark.sources.lake import LakeTable
     from pyorchdb_spark.streaming.tail import run_tail_to_completion, tail_events
@@ -164,11 +209,7 @@ def test_tail_tombstone_gc_watermark(spark, tmp_path):
     ev = change_events(spark, 2_000, batch_size=500)
     log_dir = tmp_path / "log"
     log_dir.mkdir()
-    for i, (b, bdf) in enumerate(split_batches(ev)):
-        out = str(log_dir / f"batch_id={b}")
-        bdf.drop("batch_id").coalesce(1).write.parquet(out)
-        for f in _os.listdir(out):
-            _os.utime(_os.path.join(out, f), (1_700_000_000 + i * 100,) * 2)
+    _write_one_file_per_batch(ev, log_dir)
     root = str(tmp_path / "t")
     lake, ledger = LakeTable(spark, root), BatchLedger(spark, root)
     run_tail_to_completion(
@@ -205,23 +246,11 @@ def test_stream_tail_one_job_per_clean_batch(spark, tmp_path):
     cloned session: a merge plan that mixed in a frame built on the
     lake's own session would run under that session and leave the
     Observation pending forever, so a regression here shows as a hang."""
-    import os as _os
-
-    from pyspark.sql import functions as F
-
-    from pyorchdb_spark.generator import split_batches
-
     ev = change_events(spark, 2_000, batch_size=500).cache()
     try:
         log_dir = tmp_path / "log"
         log_dir.mkdir()
-        # one file per batch with pinned mtimes so the file source maps
-        # micro-batches 1:1 onto log batches deterministically
-        for i, (b, bdf) in enumerate(split_batches(ev)):
-            out = str(log_dir / f"batch_id={b}")
-            bdf.drop("batch_id").coalesce(1).write.parquet(out)
-            for f in _os.listdir(out):
-                _os.utime(_os.path.join(out, f), (1_700_000_000 + i * 100,) * 2)
+        _write_one_file_per_batch(ev, log_dir)
         root = str(tmp_path / "t")
         lake, ledger = LakeTable(spark, root), BatchLedger(spark, root)
 
@@ -276,14 +305,44 @@ def test_stream_tail_one_job_per_clean_batch(spark, tmp_path):
         ev.unpersist()
 
 
+def test_stream_tail_compacting_commit_runs_two_jobs(spark, tmp_path):
+    """A micro-batch whose commit triggers a compaction costs exactly TWO
+    Spark jobs: its one-job apply, and a one-job rewrite (bucketed LWW,
+    tombstone filter and write in one plan, with AQE off as in the
+    apply). Window LWW followed by a bucket exchange, with AQE on, was 3
+    jobs. Clean micro-batches stay at one."""
+    ev = change_events(spark, 2_000, batch_size=500)
+    log_dir = tmp_path / "log"
+    log_dir.mkdir()
+    _write_one_file_per_batch(ev, log_dir)
+    root = str(tmp_path / "t")
+    lake, ledger = LakeTable(spark, root), BatchLedger(spark, root)
+
+    def job_counter():
+        return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+    before = job_counter()
+    run_tail_to_completion(
+        spark, str(log_dir), lake, ledger, str(tmp_path / "ckpt"),
+        num_files=2, max_files_per_trigger=1, mor_compact_factor=2,
+    )
+    used = job_counter() - before
+    compactions = [
+        v for v in range(1, lake.current_version() + 1)
+        if lake.manifest(v).batch_id.startswith("compact-")
+    ]
+    assert compactions, "the tail never compacted"
+    # 4 micro-batches at 1 job each, plus 1 job per compaction
+    assert used == 4 + len(compactions), (used, compactions)
+    exp = expected_final_state(prepare_events(ev).drop("content_sha256").toPandas())
+    assert _sig(lake.snapshot()) == state_signature(exp)
+
+
 def test_stream_tail_observation_quarantines_hostile_rows(spark, tmp_path):
     """The fused MoR apply under ``foreachBatch`` takes the reject branch
     and thin-shuffle pruning: hostile rows in a post-bootstrap micro-batch
     are quarantined with their reasons, lineage counts every input row,
     and the table still equals the oracle over the valid rows."""
-    import os as _os
-
-    from pyorchdb_spark.generator import split_batches
     from pyorchdb_spark.streaming.tail import EVENT_SCHEMA_DDL
 
     ev = change_events(spark, 2_000, batch_size=500).cache()
@@ -309,13 +368,9 @@ def test_stream_tail_observation_quarantines_hostile_rows(spark, tmp_path):
         )
         log_dir = tmp_path / "log"
         log_dir.mkdir()
-        # one file per batch with pinned mtimes: micro-batches map 1:1
-        # onto log batches, so the hostile rows land in a fused epoch
-        for i, (b, bdf) in enumerate(split_batches(ev.unionByName(hostile))):
-            out = str(log_dir / f"batch_id={b}")
-            bdf.drop("batch_id").coalesce(1).write.parquet(out)
-            for f in _os.listdir(out):
-                _os.utime(_os.path.join(out, f), (1_700_000_000 + i * 100,) * 2)
+        # micro-batches map 1:1 onto log batches, so the hostile rows
+        # land in a fused epoch
+        _write_one_file_per_batch(ev.unionByName(hostile), log_dir)
         root = str(tmp_path / "t")
         lake, ledger = LakeTable(spark, root), BatchLedger(spark, root)
         run_tail_to_completion(
